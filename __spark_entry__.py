@@ -358,18 +358,20 @@ def _events_lake(spark, sf):
                          n_buckets=8)
     v_mid = None
     winners = _half_winners(seq, cut)
-    for bid, (half, hi) in enumerate(((1, cut), (0, n))):
-        comp = winners.filter(F.col("_half") == half).drop("_half")
-        # touched = all buckets, known a priori: the compacted set is a
-        # whole-stream per-user aggregate (users >> buckets), so the
-        # discover pass (persist + distinct collect, one Spark job per
-        # merge) would always answer "every bucket"; a superset is safe —
-        # COW's full-outer join passes untouched target rows through
-        merge_into(spark, t, comp, applied_upto_lsn=hi, batch_id=bid,
-                   touched=list(range(t.n_buckets)))
-        if bid == 0:
-            v_mid = t.version
-    winners.unpersist()
+    try:
+        for bid, (half, hi) in enumerate(((1, cut), (0, n))):
+            comp = winners.filter(F.col("_half") == half).drop("_half")
+            # touched = all buckets, known a priori: the compacted set is a
+            # whole-stream per-user aggregate (users >> buckets), so the
+            # discover pass (persist + distinct collect, one Spark job per
+            # merge) would always answer "every bucket"; a superset is safe
+            # — COW's full-outer join passes untouched target rows through
+            merge_into(spark, t, comp, applied_upto_lsn=hi, batch_id=bid,
+                       touched=list(range(t.n_buckets)))
+            if bid == 0:
+                v_mid = t.version
+    finally:
+        winners.unpersist()
     _LAKE_CACHE[sf] = (t, cut, v_mid)
     return _LAKE_CACHE[sf]
 
@@ -496,12 +498,14 @@ def _q_lake_branch_publish(spark, sf):
         winners = _half_winners(seq, cut)
         comp = lambda half: winners.filter(  # noqa: E731
             F.col("_half") == half).drop("_half")
-        merge_into(spark, t, comp(1), applied_upto_lsn=cut, batch_id=0,
-                   touched=list(range(t.n_buckets)))
-        b = t.create_branch("stage")
-        merge_into(spark, b, comp(0), applied_upto_lsn=n, batch_id=1,
-                   touched=list(range(t.n_buckets)))
-        winners.unpersist()
+        try:
+            merge_into(spark, t, comp(1), applied_upto_lsn=cut, batch_id=0,
+                       touched=list(range(t.n_buckets)))
+            b = t.create_branch("stage")
+            merge_into(spark, b, comp(0), applied_upto_lsn=n, batch_id=1,
+                       touched=list(range(t.n_buckets)))
+        finally:
+            winners.unpersist()
         assert t.applied_upto_lsn == cut  # audit: main untouched by staging
         t.publish("stage")
         _WAP_CACHE[sf] = t

@@ -14,9 +14,17 @@ with per-batch atomic snapshot commits carrying the applied-LSN watermark
 (exactly-once + resume) and schema-evolution batches applied to metadata
 before their following data (transactional evolution).
 
-``apply_plans`` is the shared core: the batch entry point (``replay``) feeds
-it lsn-pruned Parquet scans; the Structured-Streaming entry point
+``apply_plans`` is the single-table core: the batch entry point (``replay``)
+feeds it lsn-pruned Parquet scans; the Structured-Streaming entry point
 (streaming/stream_replay.py) feeds it each micro-batch DataFrame.
+``apply_plans_multi`` is its multi-table loop.  The two loops differ only in
+how they apply schema changes; every data tile goes through the same two
+helpers — ``_slim_pass`` (one narrow scan shared by every table the tile
+feeds: the cached slim frame, the aborted txids and one stats aggregate
+grouped by table) and ``_apply_data_tile`` (one table's salting, slim/full
+compaction, abort anti-join, schema-drift handling and MERGE) — so a
+single-table replay is the one-table case.  ``replay`` and ``replay_multi``
+resolve the wire with the same ``_resolve_wire``.
 """
 
 from __future__ import annotations
@@ -25,6 +33,8 @@ import json
 import os
 import time
 from collections.abc import Callable
+from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -186,32 +196,15 @@ def _salt_decision(
     return n_salt
 
 
-def _auto_salt_buckets(
-    slim_data: DataFrame,
-    pk: tuple[str, ...],
-    n_events: int,
-    spark: SparkSession,
-    share_threshold: float = _SALT_SHARE_THRESHOLD,
-) -> int | None:
-    """Standalone probe form (one aggregate job over the given frame); the
-    replay paths use the fused ``_salt_topk_expr`` instead."""
-    from pyspark.sql import functions as F
-
-    keyc = ", ".join(f"`{c}`" for c in pk)
-    row = slim_data.agg(
-        F.expr(f"approx_top_k(concat_ws(char(31), {keyc}), 1, 10000)")
-        .alias("_topk")
-    ).collect()[0]
-    return _salt_decision(row["_topk"], n_events, spark, share_threshold)
-
-
 _PRIMED_APPS: set[str] = set()
 
 
-def prime_python_workers(spark: SparkSession) -> None:
+def prime_python_workers(
+    spark: SparkSession, modules: tuple[str, ...] = ("numpy", "pyarrow"),
+) -> None:
     """Boot the executor Python-worker pool once per session: one trivial
-    Arrow-boundary task per core, importing the parse-side libraries
-    (duckdb / pyarrow / numpy) that every vectorized stage needs.
+    Arrow-boundary task per core, importing ``modules`` — the parse-side
+    libraries the replay's resolved wire needs (see ``_resolve_wire``).
 
     Why: a fresh session's FIRST wide Python stage pays fork + import for
     each concurrent worker (measured ~3s for 32 workers at 32 cores) plus
@@ -221,18 +214,21 @@ def prime_python_workers(spark: SparkSession) -> None:
     first replay; the pool is reused afterwards
     (spark.python.worker.reuse=true, the default), so later replays in the
     session skip this entirely.  No data is touched or retained — this
-    warms processes, not results."""
+    warms processes, not results.
+
+    Best-effort: priming is only a speed aid, so a failed job logs a
+    warning and leaves the session unprimed (a later replay tries again);
+    it never fails the replay."""
     sc = spark.sparkContext
     app = sc.applicationId
     if app in _PRIMED_APPS:
         return
-    _PRIMED_APPS.add(app)
 
     def _boot(it):
-        import duckdb  # noqa: F401
-        import numpy  # noqa: F401
-        import pyarrow  # noqa: F401
+        import importlib
 
+        for m in modules:
+            importlib.import_module(m)
         yield from it
 
     n = max(2, sc.defaultParallelism)
@@ -241,6 +237,15 @@ def prime_python_workers(spark: SparkSession) -> None:
     try:
         (spark.range(0, n, 1, n).mapInArrow(_boot, "id long")
          .write.format("noop").mode("overwrite").save())
+    except Exception as e:  # noqa: BLE001 — any failure: run unprimed
+        import logging
+
+        logging.getLogger("logicaldecoding_spark.replay").warning(
+            "python worker priming failed; replaying unprimed: %s", e,
+            exc_info=True,
+        )
+    else:
+        _PRIMED_APPS.add(app)
     finally:
         sc.setJobDescription(desc)
 
@@ -258,6 +263,381 @@ def ensure_table(
             n_buckets=n_buckets,
         )
     return LakeTable.load(table_path)
+
+
+def _resolve_wire(
+    spark: SparkSession,
+    log_path: str,
+    log_columns: list[str],
+    pk: tuple[str, ...],
+    parse_mode: str,
+    slim_mode: str,
+    direct_slim_scan: bool | str,
+) -> tuple[str, str, tuple[str, ...], Callable, Callable | None]:
+    """Resolve the ``auto`` choices of a replay of ``log_path`` (whose
+    columns are ``log_columns``) and check the explicit ones against the
+    log.  ``replay`` and ``replay_multi`` both call it, so both read a log
+    the same way.  Returns (parse_mode, slim_mode, the modules
+    prime_python_workers imports, raw_provider, slim_provider); the slim
+    provider is the fragment-direct scan, or None to slim-parse the raw
+    scan."""
+    cores = spark.sparkContext.defaultParallelism
+    # tuple sidecar: the capture already carries the DECODED event as
+    # columns (key cols + new/old tuple maps) beside the wire payload — the
+    # shape an archiver that fully decodes messages writes.  Replay then
+    # never re-decodes payloads: the slim pass is a pure column-pruned scan
+    # and the winner parse a JVM-side projection (no Python workers at all).
+    sidecar_cols = ("lsn", "txid", "seq", "commit_time_us", "op", "table",
+                    *pk, "new_tuple", "old_tuple")
+    has_tuple_sidecar = set(sidecar_cols) <= set(log_columns)
+    if parse_mode == "auto":
+        parse_mode = (
+            "sidecar" if has_tuple_sidecar
+            else ("duckdb" if cores <= 16 else "arrow")
+        )
+    if parse_mode == "sidecar" and not has_tuple_sidecar:
+        raise ValueError(
+            "parse_mode='sidecar' needs a tuple-sidecar capture "
+            f"(columns {sidecar_cols}); this log lacks them"
+        )
+    if slim_mode == "auto":
+        # unlike the FULL parse, the pk-pruned slim parse does NOT hit
+        # duckdb's high-concurrency allocator contention (measured at 32
+        # cores on the 30M-event log: slim duckdb 9.4s vs arrow 17.1s;
+        # whole replay 30.7s vs 33.8s) — duckdb wins at every core count
+        slim_mode = "sidecar" if parse_mode == "sidecar" else "duckdb"
+    if direct_slim_scan == "auto":
+        # JSON wire only (sidecar reads its own columns, proto decodes wire
+        # bytes), and only when there are enough row-group fragments to
+        # amortize the per-task setup (duckdb connection + parquet open)
+        # and fill the task waves: measured at 32 cores, the direct scan
+        # wins at 505 fragments (sf1.0: slim stats 11.6s -> 9.1s) and
+        # loses at 51 (sf0.1: 1.6 task waves, bad tail).  The bound scales
+        # with the session's core count, not a fixed size.
+        direct_slim_scan = False
+        if parse_mode not in ("sidecar", "proto"):
+            from ..sources.wal_log import log_fragments
+
+            try:
+                n_frags = len(log_fragments(log_path, None, None))
+            except OSError:
+                n_frags = 0
+            direct_slim_scan = n_frags >= 4 * cores
+    if parse_mode == "proto":
+        # protobuf-wire log: every parse stage decodes RowMessage bytes
+        slim_mode = "proto"
+        if direct_slim_scan:
+            raise ValueError("direct_slim_scan supports JSON-wire logs only")
+    raw_columns = sidecar_cols if parse_mode == "sidecar" else ("lsn", "payload")
+
+    def raw_provider(lo, hi):
+        return read_wal_log(spark, log_path, lsn_from=lo, lsn_to=hi,
+                            columns=raw_columns)
+
+    slim_provider = None
+    if direct_slim_scan:
+        from ..sources.parse import parse_slim_direct
+
+        def slim_provider(lo, hi):
+            return parse_slim_direct(spark, log_path, pk, lsn_from=lo,
+                                     lsn_to=hi)
+
+    # no duckdb import on the wires that never parse with it (sidecar, proto)
+    duckdb = direct_slim_scan or "duckdb" in (parse_mode, slim_mode)
+    modules = ("numpy", "pyarrow", *(("duckdb",) if duckdb else ()))
+    return parse_mode, slim_mode, modules, raw_provider, slim_provider
+
+
+class _ApplyOpts(NamedTuple):
+    """The settings both apply loops pass to every data tile (see
+    ``apply_plans`` for what each one does)."""
+
+    parse_mode: str
+    slim_mode: str
+    salt_buckets: int | None
+    compaction: str
+    max_broadcast_keys: int
+    merge_mode: str
+    schema_drift: str
+    salt_auto_min_events: int
+    batch_id_offset: int
+    drift_observation_ok: bool
+
+
+def _string_pk(table: LakeTable) -> bool:
+    """Whether every pk column is string-typed: only then do the slim
+    pass's raw pk strings hash to the buckets the typed rows will."""
+    return all(f.type == "string" for f in table.schema.fields
+               if f.name in table.pk)
+
+
+class _SlimTile(NamedTuple):
+    """One data tile's shared slim pass (see ``_slim_pass``)."""
+
+    slim_all: DataFrame    # cached (lsn, txid, seq, op[, table], *pk)
+    abort_join: DataFrame  # aborted txids (broadcast when small)
+    n_aborted: int
+    rows: dict             # sink name -> its stats row (absent: no events)
+    secs: float            # the stats aggregate's wall time
+
+
+@contextmanager
+def _slim_pass(raw: DataFrame, lsn_from: int | None, lsn_to: int,
+               sinks: dict[str | None, LakeTable],
+               slim_provider: Callable | None, opts: _ApplyOpts):
+    """The ONE narrow pass over a data tile, shared by every table the tile
+    feeds.  ``sinks`` maps source-table name -> table; a single-table
+    replay is the one-sink case, named by its ``source_table`` (None: every
+    data event, whatever its table).  Yields a :class:`_SlimTile`; its
+    cached frames are unpersisted when the block exits, error or not."""
+    from pyspark.sql import functions as F
+
+    from ..sources.parse import parse_slim
+    from ..table.format import bucket_expr
+
+    pk = next(iter(sinks.values())).pk
+    # pk-only struct parse pruned to (lsn, txid, seq, op, table, pk) — never
+    # materializes large payload values (parse_slim) — cached (~60B/row:
+    # unlike full after-images this is cheap to cache).  From it: aborted
+    # txids (BEGIN w/o COMMIT), the distinct-key estimate steering the
+    # slim/full choice, touched buckets, and (slim path) per-key winner lsns.
+    if slim_provider is not None:
+        # fragment-direct scan: Python workers read the log's Parquet
+        # row groups themselves — no JVM->Python payload transfer
+        p = slim_provider(lsn_from, lsn_to)
+    else:
+        p = parse_slim(raw, pk, mode=opts.slim_mode)
+    is_data = F.col("op").isin("I", "U", "D")
+    routed = None not in sinks
+    if routed:
+        # multi-table routing (RowMessage.table, reference
+        # src/pg_logicaldec.proto:46): other tables' data events are
+        # dropped here, BEFORE compaction/merge, so a log carrying several
+        # tables can never corrupt a table's state.  B/C markers are
+        # transaction-level (no table) and pass through.
+        p = p.filter(~is_data | F.col("table").isin(*sinks))
+    slim_all = p.select(
+        "lsn", "txid", "seq", "op", *(["table"] if routed else []), *pk
+    ).persist()
+    aborted = (
+        slim_all.filter(F.col("op").isin("B", "C"))
+        .groupBy("txid")
+        .agg(F.max(F.col("op") == "C").alias("has_commit"))
+        .filter(~F.col("has_commit"))
+        .select("txid")
+        .persist()
+    )
+    try:
+        # ONE aggregate over the cache, which it materializes, grouped by
+        # table: data rows group under their table (one group when
+        # unrouted), markers under null.  Exact per-table event counts and
+        # global BEGIN/COMMIT counts — n_aborted = #B - #C is EXACT (every
+        # txn begins once, committed ones commit once) — plus, fused into
+        # the same pass, the per-table hot-key sketch and touched buckets.
+        # Touched buckets from the NARROW pass let the wide compacted frame
+        # flow into the MERGE exactly once, never persisted — its cache
+        # materialization was the worst-scaling 32-core phase.  Without a
+        # string pk (see _string_pk) merge discovers buckets itself.  They
+        # are listed before the abort anti-join, so an aborted txn can add
+        # a bucket: safe, COW's full outer join with its LSN guard rewrites
+        # such a bucket unchanged.
+        bucket_counts = {t.n_buckets for t in sinks.values() if _string_pk(t)}
+        t0 = time.time()
+        st = slim_all.groupBy(
+            F.when(is_data, F.col("table") if routed else F.lit(""))
+            .alias("_t")
+        ).agg(
+            F.count(F.when(is_data, True)).alias("events"),
+            F.count(F.when(F.col("op") == "B", True)).alias("b"),
+            F.count(F.when(F.col("op") == "C", True)).alias("c"),
+            *([_salt_topk_expr(pk)] if opts.salt_buckets is None else []),
+            # data rows only: collect_set skips the markers' nulls
+            *[F.collect_set(F.when(is_data, bucket_expr(n, pk)))
+              .alias(f"_b{n}") for n in sorted(bucket_counts)],
+        ).collect()
+        secs = time.time() - t0
+        n_aborted = max(0, sum(int(r["b"]) - int(r["c"]) for r in st))
+        rows = {(r["_t"] if routed else None): r
+                for r in st if r["_t"] is not None}
+        abort_join = F.broadcast(aborted) \
+            if n_aborted <= opts.max_broadcast_keys else aborted
+        yield _SlimTile(slim_all, abort_join, n_aborted, rows, secs)
+    finally:
+        slim_all.unpersist()
+        aborted.unpersist()
+
+
+def _apply_data_tile(spark: SparkSession, table: LakeTable, name: str | None,
+                     raw: DataFrame, tile: _SlimTile, i: int, lsn_from: int,
+                     lsn_to: int, opts: _ApplyOpts) -> dict:
+    """Apply one table's share of data tile ``i`` off the shared slim pass:
+    the hot-key salt, the slim/full compaction, the abort anti-join, the
+    schema-drift branch, ``typed_changes`` and ``merge_into`` (see
+    ``apply_plans`` for the modes).  ``name`` is the table's source-table
+    name (None: every data event in the tile).  Returns the batch
+    metrics."""
+    from pyspark.sql import functions as F
+
+    t0 = time.time()
+    pk = table.pk
+    schema = table.schema  # current-at-epoch schema
+    st = tile.rows.get(name)
+    n_events = int(st["events"]) if st else 0
+    is_data = F.col("op").isin("I", "U", "D")
+    mine = is_data if name is None else is_data & (F.col("table") == name)
+    # the distinct-key HLL estimate is only computed — over the warm cache
+    # — when the event count alone can't prove broadcast viability (keys
+    # <= events, so small batches skip the HLL pass entirely)
+    if n_events <= opts.max_broadcast_keys:
+        est_keys = n_events  # upper bound is already viable
+    else:
+        est_keys = int(
+            tile.slim_all.filter(mine)
+            .agg(F.approx_count_distinct(F.struct(*pk)).alias("k"))
+            .collect()[0]["k"]
+        )
+
+    # automatic skew policy: with no manual salt_buckets, the fused
+    # hot-key sketch decides the two-phase reduce (only on batches
+    # large enough for reducer skew to matter) — no operator knob, no
+    # extra jobs
+    batch_salt = opts.salt_buckets
+    salt_auto = False
+    if batch_salt is None and n_events >= opts.salt_auto_min_events:
+        batch_salt = _salt_decision(st["_topk"], n_events, spark)
+        salt_auto = batch_salt is not None
+
+    use_slim = opts.compaction == "slim" or (
+        opts.compaction == "auto" and est_keys <= opts.max_broadcast_keys
+    )
+    if use_slim:
+        slim_data = (
+            tile.slim_all.filter(mine)
+            .join(tile.abort_join, "txid", "left_anti")
+            .select(*pk, "lsn", "seq")
+        )
+        pre_typed = last_writer_wins_slim(
+            raw, slim_data, parse_mode=opts.parse_mode, pk=pk,
+            salt_buckets=batch_salt,
+        )
+    else:
+        data = parse_events(raw, mode=opts.parse_mode).filter(mine)
+        pre_typed = data.join(tile.abort_join, "txid", "left_anti")
+
+    # ---- schema drift (see apply_plans): unknown tuple columns must
+    # never be dropped SILENTLY by the typed projection below ------------
+    drift_obs = None
+    drift_info = None
+    drift_cache = None
+    label = "" if name is None else f" (table {name!r})"
+    drift = opts.schema_drift
+    warn_prepass = drift == "warn" and not opts.drift_observation_ok
+    batch_id = opts.batch_id_offset + i
+    try:
+        if drift in ("strict", "evolve") or warn_prepass:
+            # bounded pre-merge check on the winner frame (persisted so the
+            # winner parse is not recomputed by the merge)
+            drift_cache = pre_typed.persist()
+            pre_typed = drift_cache
+            unknown = _unknown_tuple_keys(pre_typed, schema)
+            if unknown:
+                if drift == "strict":
+                    raise SchemaDriftError(
+                        f"batch {i}{label}: events carry tuple columns "
+                        f"outside the table schema: {unknown} — applying "
+                        "would silently drop their values; evolve the "
+                        "schema (or rerun with schema_drift='evolve') and "
+                        "resume"
+                    )
+                if warn_prepass:
+                    import warnings
+
+                    warnings.warn(
+                        f"schema drift detected{label}: winner rows carry "
+                        "tuple columns outside the table schema "
+                        f"({unknown}): their values are NOT applied — "
+                        "rerun with schema_drift='evolve' to capture them",
+                        stacklevel=3,
+                    )
+                    drift_info = {"example_cols": unknown}
+                else:
+                    for c in unknown:
+                        table.evolve_schema("add_column", c, "string")
+                    schema = table.schema
+                    drift_info = {"evolved_columns": unknown}
+        elif drift == "warn":
+            from pyspark.sql import Observation
+
+            drift_obs = Observation(
+                f"schema_drift_b{batch_id}" + (f"_{name}" if name else "")
+            )
+            pre_typed = pre_typed.observe(
+                drift_obs, *_drift_metric_exprs(schema, pre_typed.columns)
+            )
+
+        if use_slim:
+            compacted = typed_changes(pre_typed, schema, pk=pk)
+        else:
+            changes = typed_changes(pre_typed, schema, pk=pk)
+            compacted = last_writer_wins(changes, pk=pk,
+                                         salt_buckets=batch_salt)
+        m = merge_into(
+            spark,
+            table,
+            compacted,
+            applied_upto_lsn=lsn_to,
+            batch_id=batch_id,
+            touched=(sorted(st[f"_b{table.n_buckets}"]) if st else [])
+            if _string_pk(table) else None,
+            mode=opts.merge_mode,
+            extra_metrics={"lsn_from": lsn_from, "lsn_to": lsn_to,
+                           **({"source_table": name} if name else {}),
+                           "parse_mode": opts.parse_mode,
+                           "compaction_used": "slim" if use_slim else "full",
+                           "est_keys": est_keys,
+                           "aborted_txids": tile.n_aborted},
+        )
+    finally:
+        if drift_cache is not None:
+            drift_cache.unpersist()
+    if drift_obs is not None and (opts.merge_mode == "mor"
+                                  or m["buckets"] > 0):
+        # an empty cow batch never executes the observed frame — reading
+        # the Observation then would block forever
+        drift_info = _consume_drift_observation(drift_obs, schema)
+    return {
+        "batch": i,
+        "kind": "data",
+        "lsn_range": [lsn_from, lsn_to],
+        "rows_written": m["rows_written"],
+        "buckets": m["buckets"],
+        "compaction": "slim" if use_slim else "full",
+        "est_keys": est_keys,
+        # this table's own work plus the shared stats aggregate
+        "secs": round(time.time() - t0 + tile.secs, 3),
+        "stats_secs": round(tile.secs, 3),
+        "salt_buckets": batch_salt,
+        "salt_auto": salt_auto,
+        "phases": m.get("phases"),
+        **({"schema_drift": drift_info} if drift_info else {}),
+    }
+
+
+def _apply_schema_plan(table: LakeTable, i: int, b: BatchPlan) -> dict:
+    """Apply schema batch ``i`` to the table's metadata; returns its
+    metrics."""
+    kind, column, type_name = b.change
+    table.evolve_schema(
+        kind, column, type_name,
+        applied_upto_lsn=b.lsn_to if b.advance_watermark else None,
+    )
+    return {"batch": i, "kind": "schema", "change": list(b.change),
+            "upto": b.lsn_to}
+
+
+def _check_drift_mode(schema_drift: str) -> None:
+    if schema_drift not in ("warn", "strict", "evolve", "ignore"):
+        raise ValueError(f"unknown schema_drift mode {schema_drift!r}")
 
 
 def apply_plans(
@@ -288,6 +668,11 @@ def apply_plans(
     drift_observation_ok: bool = True,
 ) -> list[dict]:
     """Apply planned batches in order; skip already-applied LSN ranges.
+
+    Schema batches are applied at their position in the log (so rename and
+    drop work, and plans need no eager-evolution tiling); each data batch
+    is one ``_slim_pass`` + ``_apply_data_tile`` with this table as the one
+    sink.
 
     ``schema_drift`` governs what happens when events carry tuple columns
     the table schema does not know — the shape a genuine Debezium/
@@ -333,11 +718,15 @@ def apply_plans(
       sets are normally a tiny rollback tail, but nothing enforces that).
 
     Both paths are property-tested equal (tests/test_properties.py)."""
-    from pyspark.sql import functions as F
-
-    if schema_drift not in ("warn", "strict", "evolve", "ignore"):
-        raise ValueError(f"unknown schema_drift mode {schema_drift!r}")
-    pk = table.pk
+    _check_drift_mode(schema_drift)
+    opts = _ApplyOpts(
+        parse_mode=parse_mode, slim_mode=slim_mode, salt_buckets=salt_buckets,
+        compaction=compaction, max_broadcast_keys=max_broadcast_keys,
+        merge_mode=merge_mode, schema_drift=schema_drift,
+        salt_auto_min_events=salt_auto_min_events,
+        batch_id_offset=batch_id_offset,
+        drift_observation_ok=drift_observation_ok,
+    )
     applied = table.applied_upto_lsn
     batch_metrics: list[dict] = []
     n_done = 0
@@ -347,18 +736,10 @@ def apply_plans(
         if stop_after_batches is not None and n_done >= stop_after_batches:
             break
         if b.kind == "schema":
-            kind, column, type_name = b.change
-            table.evolve_schema(
-                kind, column, type_name,
-                applied_upto_lsn=b.lsn_to if b.advance_watermark else None,
-            )
-            batch_metrics.append(
-                {"batch": i, "kind": "schema", "change": list(b.change), "upto": b.lsn_to}
-            )
+            batch_metrics.append(_apply_schema_plan(table, i, b))
             n_done += 1
             continue
 
-        tb0 = time.time()
         # clamp the scan's lower bound to the watermark: a resumed replay
         # whose batch spans (0, max] must cost O(remaining tail), not
         # O(log) — everything <= applied is already in the table, and the
@@ -366,209 +747,12 @@ def apply_plans(
         # transaction straddles the clamp.
         lo_eff = max(b.lsn_from, applied)
         raw = raw_provider(lo_eff, b.lsn_to)
-        schema = table.schema  # current-at-epoch schema
-
-        # ONE narrow pass over the batch: pk-only struct parse pruned to
-        # (lsn, txid, seq, op, pk) — never materializes large payload values
-        # (parse_slim) — cached (~60B/row: unlike full after-images this is
-        # cheap to cache).  From it: aborted txids (BEGIN w/o COMMIT), the
-        # distinct-key estimate steering the slim/full choice, and (slim
-        # path) per-key winner lsns.
-        from ..sources.parse import parse_slim
-
-        if slim_provider is not None:
-            # fragment-direct scan: Python workers read the log's Parquet
-            # row groups themselves — no JVM->Python payload transfer
-            p = slim_provider(lo_eff, b.lsn_to)
-        else:
-            p = parse_slim(raw, pk, mode=slim_mode)
-        if source_table is not None:
-            # multi-table routing (RowMessage.table, reference
-            # src/pg_logicaldec.proto:46): foreign tables' data events are
-            # dropped here, BEFORE compaction/merge, so a log carrying
-            # several tables can never corrupt this table's state.  B/C
-            # markers are transaction-level (no table) and pass through.
-            p = p.filter(
-                ~F.col("op").isin("I", "U", "D")
-                | (F.col("table") == F.lit(source_table))
-            )
-        slim_all = p.select("lsn", "txid", "seq", "op", *pk).persist()
-        markers = slim_all.filter(F.col("op").isin("B", "C"))
-        aborted = (
-            markers.groupBy("txid")
-            .agg(F.max(F.col("op") == "C").alias("has_commit"))
-            .filter(~F.col("has_commit"))
-            .select("txid")
-            .persist()
-        )
-        # Two-tier stats, one cheap single-stage agg first (materializes the
-        # cache): exact event/BEGIN/COMMIT counts.  n_aborted = #B - #C is
-        # EXACT (every txn begins once, committed ones commit once).  The
-        # distinct-key HLL estimate is only computed — over the now-warm
-        # cache — when the event count alone can't prove broadcast
-        # viability (keys <= events, so small batches skip the HLL pass
-        # entirely).
-        t_stats0 = time.time()
-        is_data = F.col("op").isin("I", "U", "D")
-        want_salt_probe = salt_buckets is None
-        st = slim_all.agg(
-            F.count(F.when(is_data, True)).alias("events"),
-            F.count(F.when(F.col("op") == "B", True)).alias("b"),
-            F.count(F.when(F.col("op") == "C", True)).alias("c"),
-            # hot-key sketch fused into the same pass (zero extra jobs)
-            *([_salt_topk_expr(pk)] if want_salt_probe else []),
-        ).collect()[0]
-        n_events = int(st["events"])
-        n_aborted = max(0, int(st["b"]) - int(st["c"]))
-        if n_events <= max_broadcast_keys:
-            est_keys = n_events  # upper bound is already viable
-        else:
-            est_keys = int(
-                slim_all.filter(is_data)
-                .agg(F.approx_count_distinct(F.struct(*pk)).alias("k"))
-                .collect()[0]["k"]
-            )
-        t_stats = time.time() - t_stats0
-
-        # automatic skew policy: with no manual salt_buckets, the fused
-        # hot-key sketch decides the two-phase reduce (only on batches
-        # large enough for reducer skew to matter) — no operator knob, no
-        # extra jobs
-        batch_salt = salt_buckets
-        salt_auto = False
-        if want_salt_probe and n_events >= salt_auto_min_events:
-            batch_salt = _salt_decision(st["_topk"], n_events, spark)
-            salt_auto = batch_salt is not None
-
-        abort_join = F.broadcast(aborted) if n_aborted <= max_broadcast_keys \
-            else aborted
-        slim_data = (
-            slim_all.filter(F.col("op").isin("I", "U", "D"))
-            .join(abort_join, "txid", "left_anti")
-            .select(*pk, "lsn", "seq")
-        )
-        # touched buckets from the cached NARROW pass (pk strings hash to
-        # the same buckets the typed rows will): the wide compacted frame
-        # then flows into the MERGE exactly once, never persisted — its
-        # cache materialization was the worst-scaling 32-core phase.  Only
-        # valid when every pk column is string-typed (slim carries raw
-        # strings; xxhash64 of a typed value differs); otherwise merge
-        # discovers buckets itself.
-        from ..table.format import bucket_expr
-
-        touched = None
-        if all(f.type == "string" for f in schema.fields if f.name in pk):
-            touched = [
-                r["_b"]
-                for r in slim_data.select(
-                    bucket_expr(table.n_buckets, pk).alias("_b")
-                ).distinct().collect()
-            ]
-        use_slim = compaction == "slim" or (
-            compaction == "auto" and est_keys <= max_broadcast_keys
-        )
-        if use_slim:
-            pre_typed = last_writer_wins_slim(
-                raw, slim_data, parse_mode=parse_mode, pk=pk,
-                salt_buckets=batch_salt,
-            )
-        else:
-            parsed = parse_events(raw, mode=parse_mode)
-            data = parsed.filter(F.col("op").isin("I", "U", "D"))
-            if source_table is not None:
-                data = data.filter(F.col("table") == F.lit(source_table))
-            pre_typed = data.join(abort_join, "txid", "left_anti")
-
-        # ---- schema drift (see docstring): unknown tuple columns must
-        # never be dropped SILENTLY by the typed projection below ----------
-        drift_obs = None
-        drift_info = None
-        drift_cache = None
-        warn_prepass = schema_drift == "warn" and not drift_observation_ok
-        if schema_drift in ("strict", "evolve") or warn_prepass:
-            # bounded pre-merge check on the winner frame (persisted so the
-            # winner parse is not recomputed by the merge)
-            drift_cache = pre_typed.persist()
-            pre_typed = drift_cache
-            unknown = _unknown_tuple_keys(pre_typed, schema)
-            if unknown:
-                if schema_drift == "strict":
-                    drift_cache.unpersist()
-                    slim_all.unpersist()
-                    aborted.unpersist()
-                    raise SchemaDriftError(
-                        f"batch {i}: events carry tuple columns outside "
-                        f"the table schema: {unknown} — applying would "
-                        "silently drop their values; evolve the schema "
-                        "(or rerun with schema_drift='evolve') and resume"
-                    )
-                if warn_prepass:
-                    import warnings
-
-                    warnings.warn(
-                        "schema drift detected: winner rows carry tuple "
-                        f"columns outside the table schema ({unknown}): "
-                        "their values are NOT applied — rerun with "
-                        "schema_drift='evolve' to capture them",
-                        stacklevel=2,
-                    )
-                    drift_info = {"example_cols": unknown}
-                else:
-                    for c in unknown:
-                        table.evolve_schema("add_column", c, "string")
-                    schema = table.schema
-                    drift_info = {"evolved_columns": unknown}
-        elif schema_drift == "warn":
-            from pyspark.sql import Observation
-
-            drift_obs = Observation(f"schema_drift_b{batch_id_offset + i}")
-            pre_typed = pre_typed.observe(
-                drift_obs, *_drift_metric_exprs(schema, pre_typed.columns)
-            )
-
-        if use_slim:
-            compacted = typed_changes(pre_typed, schema, pk=pk)
-        else:
-            changes = typed_changes(pre_typed, schema, pk=pk)
-            compacted = last_writer_wins(changes, pk=pk, salt_buckets=batch_salt)
-        m = merge_into(
-            spark,
-            table,
-            compacted,
-            applied_upto_lsn=b.lsn_to,
-            batch_id=batch_id_offset + i,
-            touched=touched,
-            mode=merge_mode,
-            extra_metrics={"lsn_from": b.lsn_from, "lsn_to": b.lsn_to,
-                           "parse_mode": parse_mode,
-                           "compaction_used": "slim" if use_slim else "full",
-                           "est_keys": est_keys, "aborted_txids": n_aborted},
-        )
-        slim_all.unpersist()
-        aborted.unpersist()
-        if drift_cache is not None:
-            drift_cache.unpersist()
-        if drift_obs is not None and (merge_mode == "mor" or m["buckets"] > 0):
-            # an empty cow batch never executes the observed frame — reading
-            # the Observation then would block forever
-            drift_info = _consume_drift_observation(drift_obs, schema)
-        batch_metrics.append(
-            {
-                "batch": i,
-                "kind": "data",
-                "lsn_range": [b.lsn_from, b.lsn_to],
-                "rows_written": m["rows_written"],
-                "buckets": m["buckets"],
-                "compaction": "slim" if use_slim else "full",
-                "est_keys": est_keys,
-                "secs": round(time.time() - tb0, 3),
-                "stats_secs": round(t_stats, 3),
-                "salt_buckets": batch_salt,
-                "salt_auto": salt_auto,
-                "phases": m.get("phases"),
-                **({"schema_drift": drift_info} if drift_info else {}),
-            }
-        )
+        with _slim_pass(raw, lo_eff, b.lsn_to, {source_table: table},
+                        slim_provider, opts) as tile:
+            batch_metrics.append(_apply_data_tile(
+                spark, table, source_table, raw, tile, i, b.lsn_from,
+                b.lsn_to, opts,
+            ))
         n_done += 1
     return batch_metrics
 
@@ -634,61 +818,16 @@ def replay(
     from ..dist import ship_package
 
     ship_package(spark)  # executor workers import this package inside UDFs
-    prime_python_workers(spark)  # once per session; see the helper's docstring
-    cores = spark.sparkContext.defaultParallelism
 
     # planning gets the UNPRUNED scan: if the capture carries columnar
     # op/txid sidecar columns, plan_batches plans without ever reading
     # payloads.  The generator's `committed` ground-truth column is dropped
     # here so nothing downstream can cheat with it.
     plan_raw = spark.read.parquet(log_path).drop("committed")
-
-    # tuple sidecar: the capture already carries the DECODED event as
-    # columns (key cols + new/old tuple maps) beside the wire payload — the
-    # shape an archiver that fully decodes messages writes.  Replay then
-    # never re-decodes payloads: the slim pass is a pure column-pruned scan
-    # and the winner parse a JVM-side projection (no Python workers at all).
-    sidecar_cols = ("lsn", "txid", "seq", "commit_time_us", "op", "table",
-                    *pk, "new_tuple", "old_tuple")
-    has_tuple_sidecar = set(sidecar_cols) <= set(plan_raw.columns)
-    if parse_mode == "auto":
-        parse_mode = (
-            "sidecar" if has_tuple_sidecar
-            else ("duckdb" if cores <= 16 else "arrow")
-        )
-    if parse_mode == "sidecar" and not has_tuple_sidecar:
-        raise ValueError(
-            "parse_mode='sidecar' needs a tuple-sidecar capture "
-            f"(columns {sidecar_cols}); this log lacks them"
-        )
-    if slim_mode == "auto":
-        # unlike the FULL parse, the pk-pruned slim parse does NOT hit
-        # duckdb's high-concurrency allocator contention (measured at 32
-        # cores on the 30M-event log: slim duckdb 9.4s vs arrow 17.1s;
-        # whole replay 30.7s vs 33.8s) — duckdb wins at every core count
-        slim_mode = "sidecar" if parse_mode == "sidecar" else "duckdb"
-    if direct_slim_scan == "auto":
-        # JSON wire only (sidecar reads its own columns, proto decodes wire
-        # bytes), and only when there are enough row-group fragments to
-        # amortize the per-task setup (duckdb connection + parquet open)
-        # and fill the task waves: measured at 32 cores, the direct scan
-        # wins at 505 fragments (sf1.0: slim stats 11.6s -> 9.1s) and
-        # loses at 51 (sf0.1: 1.6 task waves, bad tail).  The bound scales
-        # with the session's core count, not a fixed size.
-        direct_slim_scan = False
-        if parse_mode not in ("sidecar", "proto"):
-            from ..sources.wal_log import log_fragments
-
-            try:
-                n_frags = len(log_fragments(log_path, None, None))
-            except OSError:
-                n_frags = 0
-            direct_slim_scan = n_frags >= 4 * cores
-    if parse_mode == "proto":
-        # protobuf-wire log: every parse stage decodes RowMessage bytes
-        slim_mode = "proto"
-        if direct_slim_scan:
-            raise ValueError("direct_slim_scan supports JSON-wire logs only")
+    parse_mode, slim_mode, modules, raw_provider, slim_provider = \
+        _resolve_wire(spark, log_path, plan_raw.columns, pk, parse_mode,
+                      slim_mode, direct_slim_scan)
+    prime_python_workers(spark, modules)  # once per session; see its docstring
     table = ensure_table(table_path, initial_schema, pk, n_buckets) if create \
         else LakeTable.load(table_path)
     if ref != "main":
@@ -701,21 +840,11 @@ def replay(
                          source_table=source_table,
                          eager_evolution=eager_evolution)
 
-    slim_provider = None
-    if direct_slim_scan:
-        from ..sources.parse import parse_slim_direct
-
-        slim_provider = lambda lo, hi: parse_slim_direct(  # noqa: E731
-            spark, log_path, table.pk, lsn_from=lo, lsn_to=hi
-        )
-
-    raw_columns = sidecar_cols if parse_mode == "sidecar" else ("lsn", "payload")
     metrics = apply_plans(
         spark,
         table,
         plans,
-        lambda lo, hi: read_wal_log(spark, log_path, lsn_from=lo, lsn_to=hi,
-                                    columns=raw_columns),
+        raw_provider,
         slim_provider=slim_provider,
         parse_mode=parse_mode,
         slim_mode=slim_mode,
@@ -776,19 +905,22 @@ def apply_plans_multi(
 
     The k-single-table formulation costs k full log scans because each
     ``apply_plans`` call drops foreign events after its own parse (r4 ask
-    #4).  Here each data batch runs the narrow slim parse ONCE (table kept
-    as a column), shares the cached frame, the marker/abort classification
-    (transaction-level, table-agnostic) and the per-table event counts (one
-    grouped aggregate), then routes per-table winner selection + typed
-    projection + MERGE off that shared cache.  Winner payloads are still
-    the only fully-parsed rows — each table's winner-LSN broadcast
-    semi-join hits only its own rows (LSNs are unique per event).
+    #4).  Here each data batch runs the same ``_slim_pass`` as
+    ``apply_plans`` once with every active table as a sink (table kept as a
+    column): the cached frame, the marker/abort classification
+    (transaction-level, table-agnostic) and the per-table event counts,
+    hot-key sketches and touched buckets (one grouped aggregate) are
+    shared.  Each table then runs the same ``_apply_data_tile`` as
+    ``apply_plans`` — winner selection, typed projection and MERGE — off
+    that shared cache.  Winner payloads are still the only fully-parsed
+    rows — each table's winner-LSN broadcast semi-join hits only its own
+    rows (LSNs are unique per event).
 
-    Semantics per table match ``apply_plans`` (same compaction choice,
-    drift handling, auto-salting, idempotent watermark skip); parity is
-    pinned by tests.  Requires eager-evolution plans (identical data tiling
-    across tables — ``plan_batches_multi``'s default) and a shared pk
-    shape across sinks.
+    The one difference from ``apply_plans`` is schema changes: they are
+    applied up front, which is only sound for forward-compatible ones
+    (add_column, widen_type).  So this requires eager-evolution plans
+    (identical data tiling across tables — ``plan_batches_multi``'s
+    default) and a shared pk shape across sinks.
 
     Honest cost note: the one-scan-per-batch contract holds for the SLIM
     (winner) path — the default below ``max_broadcast_keys``.  A table
@@ -796,17 +928,28 @@ def apply_plans_multi(
     itself (full already shuffles every event; the slim pass stays
     shared), so k huge-key-count tables cost k full parses — raise
     ``max_broadcast_keys`` or replay such tables separately."""
-    from pyspark.sql import functions as F
+    return _apply_plans_multi(
+        spark, sinks, plans_by_table, raw_provider, None,
+        _ApplyOpts(parse_mode, slim_mode, salt_buckets, compaction,
+                   max_broadcast_keys, merge_mode, schema_drift,
+                   salt_auto_min_events, batch_id_offset,
+                   drift_observation_ok),
+    )
 
-    from ..sources.parse import parse_slim
-    from ..table.format import bucket_expr
 
-    if schema_drift not in ("warn", "strict", "evolve", "ignore"):
-        raise ValueError(f"unknown schema_drift mode {schema_drift!r}")
+def _apply_plans_multi(
+    spark: SparkSession,
+    sinks: dict[str, LakeTable],
+    plans_by_table: dict[str, list[BatchPlan]],
+    raw_provider: Callable[[int | None, int | None], DataFrame],
+    slim_provider: Callable[[int | None, int | None], DataFrame] | None,
+    opts: _ApplyOpts,
+) -> dict[str, list[dict]]:
+    """``apply_plans_multi`` with ``replay_multi``'s direct slim scan."""
+    _check_drift_mode(opts.schema_drift)
     pks = {t.pk for t in sinks.values()}
     if len(pks) > 1:
         raise ValueError(f"sinks must share one pk shape, got {pks}")
-    pk = next(iter(pks))
     metrics: dict[str, list[dict]] = {n: [] for n in sinks}
 
     # --- schema plans: metadata-only, per table ---------------------------
@@ -830,15 +973,7 @@ def apply_plans_multi(
                 continue
             if b.lsn_to <= tbl.applied_upto_lsn:
                 continue  # checkpointed (same skip as apply_plans)
-            kind, column, type_name = b.change
-            tbl.evolve_schema(
-                kind, column, type_name,
-                applied_upto_lsn=b.lsn_to if b.advance_watermark else None,
-            )
-            metrics[name].append(
-                {"batch": i, "kind": "schema", "change": list(b.change),
-                 "upto": b.lsn_to}
-            )
+            metrics[name].append(_apply_schema_plan(tbl, i, b))
 
     # --- data plans: identical tiling across tables (eager evolution) -----
     tiles = None
@@ -860,168 +995,12 @@ def apply_plans_multi(
         lo_eff = max(lsn_from, min(t.applied_upto_lsn
                                    for t in actives.values()))
         raw = raw_provider(lo_eff, lsn_to)
-        p = parse_slim(raw, pk, mode=slim_mode)
-        slim_all = p.select("lsn", "txid", "seq", "op", "table", *pk).persist()
-        aborted = (
-            slim_all.filter(F.col("op").isin("B", "C"))
-            .groupBy("txid")
-            .agg(F.max(F.col("op") == "C").alias("has_commit"))
-            .filter(~F.col("has_commit"))
-            .select("txid")
-            .persist()
-        )
-        is_data = F.col("op").isin("I", "U", "D")
-        # one grouped aggregate: per-table data-event counts + global B/C
-        st = slim_all.groupBy(
-            F.when(is_data, F.col("table")).alias("_t")
-        ).agg(
-            F.count(F.when(is_data, True)).alias("events"),
-            F.count(F.when(F.col("op") == "B", True)).alias("b"),
-            F.count(F.when(F.col("op") == "C", True)).alias("c"),
-            # per-table hot-key sketch fused into the same grouped pass
-            *([_salt_topk_expr(pk)] if salt_buckets is None else []),
-        ).collect()
-        ev_by_table = {r["_t"]: int(r["events"]) for r in st if r["_t"]}
-        topk_by_table = {
-            r["_t"]: (r["_topk"] if salt_buckets is None else None)
-            for r in st if r["_t"]
-        }
-        n_aborted = max(0, sum(int(r["b"]) for r in st)
-                        - sum(int(r["c"]) for r in st))
-        abort_join = F.broadcast(aborted) if n_aborted <= max_broadcast_keys \
-            else aborted
-
-        for name, tbl in actives.items():
-            tb0 = time.time()
-            schema = tbl.schema
-            slim_t = slim_all.filter(is_data & (F.col("table") == name))
-            n_events = ev_by_table.get(name, 0)
-            if n_events <= max_broadcast_keys:
-                est_keys = n_events
-            else:
-                est_keys = int(
-                    slim_t.agg(
-                        F.approx_count_distinct(F.struct(*pk)).alias("k")
-                    ).collect()[0]["k"]
-                )
-            batch_salt = salt_buckets
-            salt_auto = False
-            if batch_salt is None and n_events >= salt_auto_min_events:
-                batch_salt = _salt_decision(
-                    topk_by_table.get(name), n_events, spark
-                )
-                salt_auto = batch_salt is not None
-            slim_data = (
-                slim_t.join(abort_join, "txid", "left_anti")
-                .select(*pk, "lsn", "seq")
-            )
-            touched = None
-            if all(f.type == "string" for f in schema.fields
-                   if f.name in pk):
-                touched = [
-                    r["_b"] for r in slim_data.select(
-                        bucket_expr(tbl.n_buckets, pk).alias("_b")
-                    ).distinct().collect()
-                ]
-            use_slim = compaction == "slim" or (
-                compaction == "auto" and est_keys <= max_broadcast_keys
-            )
-            if use_slim:
-                pre_typed = last_writer_wins_slim(
-                    raw, slim_data, parse_mode=parse_mode, pk=pk,
-                    salt_buckets=batch_salt,
-                )
-            else:
-                parsed = parse_events(raw, mode=parse_mode)
-                data = parsed.filter(
-                    F.col("op").isin("I", "U", "D")
-                    & (F.col("table") == name)
-                )
-                pre_typed = data.join(abort_join, "txid", "left_anti")
-
-            drift_obs = None
-            drift_info = None
-            drift_cache = None
-            warn_prepass = schema_drift == "warn" and not drift_observation_ok
-            if schema_drift in ("strict", "evolve") or warn_prepass:
-                drift_cache = pre_typed.persist()
-                pre_typed = drift_cache
-                unknown = _unknown_tuple_keys(pre_typed, schema)
-                if unknown:
-                    if schema_drift == "strict":
-                        drift_cache.unpersist()
-                        slim_all.unpersist()
-                        aborted.unpersist()
-                        raise SchemaDriftError(
-                            f"table {name!r} batch {i}: events carry tuple "
-                            f"columns outside the table schema: {unknown}"
-                        )
-                    if warn_prepass:
-                        import warnings
-
-                        warnings.warn(
-                            f"schema drift detected (table {name!r}): "
-                            f"tuple columns outside the table schema "
-                            f"({unknown}) are NOT applied — rerun with "
-                            "schema_drift='evolve' to capture them",
-                            stacklevel=2,
-                        )
-                        drift_info = {"example_cols": unknown}
-                    else:
-                        for c in unknown:
-                            tbl.evolve_schema("add_column", c, "string")
-                        schema = tbl.schema
-                        drift_info = {"evolved_columns": unknown}
-            elif schema_drift == "warn":
-                from pyspark.sql import Observation
-
-                drift_obs = Observation(
-                    f"schema_drift_{name}_b{batch_id_offset + i}"
-                )
-                pre_typed = pre_typed.observe(
-                    drift_obs, *_drift_metric_exprs(schema, pre_typed.columns)
-                )
-
-            if use_slim:
-                compacted = typed_changes(pre_typed, schema, pk=pk)
-            else:
-                changes = typed_changes(pre_typed, schema, pk=pk)
-                compacted = last_writer_wins(changes, pk=pk,
-                                             salt_buckets=batch_salt)
-            m = merge_into(
-                spark, tbl, compacted,
-                applied_upto_lsn=lsn_to,
-                batch_id=batch_id_offset + i,
-                touched=touched,
-                mode=merge_mode,
-                extra_metrics={"lsn_from": lsn_from, "lsn_to": lsn_to,
-                               "source_table": name,
-                               "compaction_used":
-                                   "slim" if use_slim else "full",
-                               "est_keys": est_keys,
-                               "aborted_txids": n_aborted},
-            )
-            if drift_cache is not None:
-                drift_cache.unpersist()
-            if drift_obs is not None and (merge_mode == "mor"
-                                          or m["buckets"] > 0):
-                drift_info = _consume_drift_observation(drift_obs, schema)
-            metrics[name].append(
-                {
-                    "batch": i, "kind": "data",
-                    "lsn_range": [lsn_from, lsn_to],
-                    "rows_written": m["rows_written"],
-                    "buckets": m["buckets"],
-                    "compaction": "slim" if use_slim else "full",
-                    "est_keys": est_keys,
-                    "secs": round(time.time() - tb0, 3),
-                    "salt_buckets": batch_salt,
-                    "salt_auto": salt_auto,
-                    **({"schema_drift": drift_info} if drift_info else {}),
-                }
-            )
-        slim_all.unpersist()
-        aborted.unpersist()
+        with _slim_pass(raw, lo_eff, lsn_to, actives, slim_provider,
+                        opts) as tile:
+            for name, tbl in actives.items():
+                metrics[name].append(_apply_data_tile(
+                    spark, tbl, name, raw, tile, i, lsn_from, lsn_to, opts,
+                ))
     return metrics
 
 
@@ -1049,28 +1028,19 @@ def replay_multi(
     ``tables`` maps source-table name -> lake table path.  Each table gets
     its own snapshots/watermark (independent resume); schema-change events
     route by their ``table`` field (an R with no table applies to every
-    table).  Wire/parse-mode resolution matches :func:`replay`."""
+    table).  The wire is resolved by the same ``_resolve_wire`` as
+    :func:`replay` (direct slim scan on ``auto``)."""
     t0 = time.time()
     from ..dist import ship_package
 
     from .batches import plan_batches_multi
 
     ship_package(spark)
-    prime_python_workers(spark)  # once per session; see the helper's docstring
-    cores = spark.sparkContext.defaultParallelism
     plan_raw = spark.read.parquet(log_path).drop("committed")
-    sidecar_cols = ("lsn", "txid", "seq", "commit_time_us", "op", "table",
-                    *pk, "new_tuple", "old_tuple")
-    has_tuple_sidecar = set(sidecar_cols) <= set(plan_raw.columns)
-    if parse_mode == "auto":
-        parse_mode = (
-            "sidecar" if has_tuple_sidecar
-            else ("duckdb" if cores <= 16 else "arrow")
-        )
-    if slim_mode == "auto":
-        slim_mode = "sidecar" if parse_mode == "sidecar" else "duckdb"
-    if parse_mode == "proto":
-        slim_mode = "proto"
+    parse_mode, slim_mode, modules, raw_provider, slim_provider = \
+        _resolve_wire(spark, log_path, plan_raw.columns, pk, parse_mode,
+                      slim_mode, "auto")
+    prime_python_workers(spark, modules)  # once per session; see its docstring
 
     sinks = {
         name: ensure_table(path, initial_schema, pk, n_buckets)
@@ -1081,19 +1051,12 @@ def replay_multi(
         target_data_batches=n_data_batches,
         parse_mode="proto" if parse_mode == "proto" else "native",
     )
-    raw_columns = sidecar_cols if parse_mode == "sidecar" else ("lsn", "payload")
-    per_table = apply_plans_multi(
-        spark, sinks, plans_by_table,
-        lambda lo, hi: read_wal_log(spark, log_path, lsn_from=lo, lsn_to=hi,
-                                    columns=raw_columns),
-        parse_mode=parse_mode,
-        slim_mode=slim_mode,
-        salt_buckets=salt_buckets,
-        compaction=compaction,
-        max_broadcast_keys=max_broadcast_keys,
-        merge_mode=merge_mode,
-        schema_drift=schema_drift,
-        salt_auto_min_events=salt_auto_min_events,
+    per_table = _apply_plans_multi(
+        spark, sinks, plans_by_table, raw_provider, slim_provider,
+        _ApplyOpts(parse_mode, slim_mode, salt_buckets, compaction,
+                   max_broadcast_keys, merge_mode, schema_drift,
+                   salt_auto_min_events, batch_id_offset=0,
+                   drift_observation_ok=True),
     )
     run = {
         "tables": {

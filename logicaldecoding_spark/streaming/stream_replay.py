@@ -219,12 +219,10 @@ def stream_replay(
 
     ship_package(spark)  # executor workers import this package inside UDFs
     multi = isinstance(table_path, dict)
-    tables: dict[str, str] = table_path if multi else {}
-    if multi:
-        for p_ in tables.values():
-            ensure_table(p_, initial_schema, pk, n_buckets)
-    else:
-        ensure_table(table_path, initial_schema, pk, n_buckets)
+    # on_commit keys: source-table names (multi) or the table path
+    paths: dict[str, str] = table_path if multi else {table_path: table_path}
+    for p_ in paths.values():
+        ensure_table(p_, initial_schema, pk, n_buckets)
     io = LocalFileIO()
     wire = parse_mode if parse_mode in ("proto", "sidecar") else "json"
     file_schema = log_file_schema(wire, pk)
@@ -235,29 +233,23 @@ def stream_replay(
     def _pending_path(epoch: int) -> str:
         return os.path.join(pending_root, f"epoch={epoch}")
 
+    def _epochs(root: str) -> list[int]:
+        """The epochs that have a retained sidecar under ``root``."""
+        if not io.exists(root):
+            return []
+        return [int(entry.split("=", 1)[1]) for entry in io.listdir(root)
+                if entry.startswith("epoch=")]
+
     def _last_pending_before(epoch: int) -> str | None:
         """Most recent retained sidecar older than ``epoch`` (epochs with no
         work emit no sidecar, so the predecessor may be further back)."""
-        if not io.exists(pending_root):
-            return None
-        best = -1
-        for entry in io.listdir(pending_root):
-            if entry.startswith("epoch="):
-                e = int(entry.split("=", 1)[1])
-                if best < e < epoch:
-                    best = e
-        return _pending_path(best) if best >= 0 else None
+        older = [e for e in _epochs(pending_root) if e < epoch]
+        return _pending_path(max(older)) if older else None
 
     def _aborted_paths_before(epoch: int) -> list[str]:
         """All retained aborted-txid sidecars from earlier epochs."""
-        if not io.exists(aborted_root):
-            return []
-        return [
-            os.path.join(aborted_root, entry)
-            for entry in io.listdir(aborted_root)
-            if entry.startswith("epoch=")
-            and int(entry.split("=", 1)[1]) < epoch
-        ]
+        return [os.path.join(aborted_root, f"epoch={e}")
+                for e in _epochs(aborted_root) if e < epoch]
 
     def apply_micro_batch(df: DataFrame, epoch_id: int) -> None:
         epoch = int(epoch_id)
@@ -339,76 +331,27 @@ def stream_replay(
             )
 
             batch = applyable.select(*cols)
+            plan_mode = "proto" if wire == "proto" else "native"
             if multi:
                 sinks = {
                     n_: ensure_table(p_, initial_schema, pk, n_buckets)
-                    for n_, p_ in tables.items()
+                    for n_, p_ in paths.items()
                 }
                 plans_by_table = plan_batches_multi(
-                    batch, list(tables), target_data_batches=1,
-                    parse_mode="proto" if wire == "proto" else "native",
+                    batch, list(paths), target_data_batches=1,
+                    parse_mode=plan_mode,
                 )
-                if any(plans_by_table.values()):
-                    hi = max(p.lsn_to for pl in plans_by_table.values()
-                             for p in pl)
-                    min_wm = min(t_.applied_upto_lsn for t_ in sinks.values())
-                    if hi <= min_wm and df.limit(1).count() > 0:
-                        msg = (
-                            f"micro-batch max lsn {hi} <= every table "
-                            f"watermark (min {min_wm}): re-delivered batch "
-                            "(benign) or out-of-LSN-order file arrival "
-                            "(data loss); archive files must arrive in "
-                            "LSN order"
-                        )
-                        if strict_order:
-                            raise LateFileError(msg)
-                        import warnings
-
-                        warnings.warn(msg, stacklevel=2)
-                    apply_plans_multi(
-                        spark, sinks, plans_by_table,
-                        lambda lo, hi2: batch.filter(
-                            (batch.lsn > (lo or 0)) & (batch.lsn <= hi2)
-                        ),
-                        parse_mode=parse_mode,
-                        slim_mode=(
-                            wire if wire in ("proto", "sidecar") else "duckdb"
-                        ),
-                        salt_buckets=salt_buckets,
-                        batch_id_offset=epoch * 1000,
-                        merge_mode=merge_mode,
-                        schema_drift=schema_drift,
-                        drift_observation_ok=False,
-                    )
-                status.unpersist()
-                if auto_compact_deltas is not None:
-                    for p_ in tables.values():
-                        _compact_hot_delta_slots(spark, p_,
-                                                 auto_compact_deltas)
-                if on_commit is not None and any(plans_by_table.values()):
-                    on_commit(
-                        {n_: LakeTable.load(p_).version
-                         for n_, p_ in tables.items()},
-                        epoch,
-                    )
-                # prune sidecars older than the retention window
-                for root in (pending_root, aborted_root):
-                    if io.exists(root):
-                        for entry in io.listdir(root):
-                            if entry.startswith("epoch="):
-                                e = int(entry.split("=", 1)[1])
-                                if e < epoch - keep_pending_epochs:
-                                    io.remove_tree(os.path.join(root, entry))
-                return
-
-            plans = plan_batches(
-                batch, target_data_batches=1,
-                parse_mode="proto" if wire == "proto" else "native",
-            )
-            tbl = ensure_table(table_path, initial_schema, pk, n_buckets)
-            if plans:
-                hi = max(p.lsn_to for p in plans)
-                if hi <= tbl.applied_upto_lsn and df.limit(1).count() > 0:
+                planned = [p for pl in plans_by_table.values() for p in pl]
+                watermark = min(t_.applied_upto_lsn for t_ in sinks.values())
+            else:
+                plans = plan_batches(batch, target_data_batches=1,
+                                     parse_mode=plan_mode)
+                tbl = ensure_table(table_path, initial_schema, pk, n_buckets)
+                planned = plans
+                watermark = tbl.applied_upto_lsn
+            if planned:
+                hi = max(p.lsn_to for p in planned)
+                if hi <= watermark and df.limit(1).count() > 0:
                     # Either (a) the streaming checkpoint re-delivered an
                     # already-applied micro-batch after a restart — benign,
                     # apply_plans skips it idempotently — or (b) a log file
@@ -418,9 +361,10 @@ def stream_replay(
                     # skip (keeps restart exactly-once); strict_order=True
                     # fails the query for archive pipelines that guarantee
                     # ordered delivery and want loss to be impossible.
+                    # (Multi-table: the lowest table watermark.)
                     msg = (
                         f"micro-batch max lsn {hi} <= table watermark "
-                        f"{tbl.applied_upto_lsn}: re-delivered batch (benign) "
+                        f"{watermark}: re-delivered batch (benign) "
                         "or out-of-LSN-order file arrival (data loss); "
                         "archive files must arrive in LSN order"
                     )
@@ -429,13 +373,7 @@ def stream_replay(
                     import warnings
 
                     warnings.warn(msg, stacklevel=2)
-                apply_plans(
-                    spark,
-                    tbl,
-                    plans,
-                    lambda lo, hi: batch.filter(
-                        (batch.lsn > (lo or 0)) & (batch.lsn <= hi)
-                    ),
+                apply_kw = dict(
                     parse_mode=parse_mode,
                     slim_mode=(
                         wire if wire in ("proto", "sidecar") else "duckdb"
@@ -448,22 +386,30 @@ def stream_replay(
                     # engine; 'warn' uses the pre-merge check here
                     drift_observation_ok=False,
                 )
+
+                def scan(lo, hi):
+                    return batch.filter((batch.lsn > (lo or 0))
+                                        & (batch.lsn <= hi))
+
+                if multi:
+                    apply_plans_multi(spark, sinks, plans_by_table, scan,
+                                      **apply_kw)
+                else:
+                    apply_plans(spark, tbl, plans, scan, **apply_kw)
             status.unpersist()
             if auto_compact_deltas is not None:
-                _compact_hot_delta_slots(spark, table_path,
-                                         auto_compact_deltas)
-            if on_commit is not None and plans:
+                for p_ in paths.values():
+                    _compact_hot_delta_slots(spark, p_, auto_compact_deltas)
+            if on_commit is not None and planned:
                 on_commit(
-                    {table_path: LakeTable.load(table_path).version}, epoch
+                    {k: LakeTable.load(p_).version for k, p_ in paths.items()},
+                    epoch,
                 )
             # prune sidecars older than the retention window
             for root in (pending_root, aborted_root):
-                if io.exists(root):
-                    for entry in io.listdir(root):
-                        if entry.startswith("epoch="):
-                            e = int(entry.split("=", 1)[1])
-                            if e < epoch - keep_pending_epochs:
-                                io.remove_tree(os.path.join(root, entry))
+                for e in _epochs(root):
+                    if e < epoch - keep_pending_epochs:
+                        io.remove_tree(os.path.join(root, f"epoch={e}"))
         finally:
             combined.unpersist()
 

@@ -141,6 +141,53 @@ def test_replay_multi_single_table_parity(spark, multi_log, tmp_path):
     assert one == two
 
 
+def test_replay_multi_resolves_wire_like_replay(spark, multi_log, tmp_path):
+    """replay and replay_multi share one wire resolver: asking for the
+    sidecar wire on a log without sidecar columns fails the same way."""
+    log, _, _ = multi_log
+    with pytest.raises(ValueError, match="tuple-sidecar") as single:
+        replay(spark, log, str(tmp_path / "s"), parse_mode="sidecar")
+    with pytest.raises(ValueError, match="tuple-sidecar") as multi:
+        replay_multi(spark, log, {"repos": str(tmp_path / "m")},
+                     parse_mode="sidecar")
+    assert str(multi.value) == str(single.value)
+
+
+def test_direct_slim_scan_on_auto(spark, multi_log, tmp_path, monkeypatch):
+    """On a log with at least four row groups per core, replay and
+    replay_multi both take the fragment-direct slim scan on 'auto' (no
+    parse_slim call) and still converge per table."""
+    import pyarrow.parquet as pq
+
+    from logicaldecoding_spark.sources import parse as parse_mod
+
+    log, only_a, only_b = multi_log
+    rows = pq.read_table(log)
+    n_groups = 4 * spark.sparkContext.defaultParallelism + 1
+    fragmented = str(tmp_path / "fragmented.parquet")
+    pq.write_table(rows, fragmented,
+                   row_group_size=max(1, rows.num_rows // n_groups))
+    calls = {"slim": 0}
+    orig_slim = parse_mod.parse_slim
+
+    def counting_slim(*a, **kw):
+        calls["slim"] += 1
+        return orig_slim(*a, **kw)
+
+    monkeypatch.setattr(parse_mod, "parse_slim", counting_slim)
+    replay_multi(spark, fragmented, {"repos": str(tmp_path / "da"),
+                                     "repos2": str(tmp_path / "db")},
+                 n_buckets=4)
+    replay(spark, fragmented, str(tmp_path / "single"), n_buckets=4,
+           source_table="repos")
+    assert calls["slim"] == 0, "a slim pass did not use the direct scan"
+    state_a, _ = replay_oracle(only_a)
+    state_b, _ = replay_oracle(only_b)
+    assert_converged(spark, str(tmp_path / "da"), state_a)
+    assert_converged(spark, str(tmp_path / "db"), state_b)
+    assert_converged(spark, str(tmp_path / "single"), state_a)
+
+
 def test_replay_multi_sidecar_wire(spark, tmp_path):
     """Multi-table replay on the tuple-sidecar capture: routing reads the
     capture's own table column, planning stays payload-free, and each

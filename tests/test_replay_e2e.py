@@ -176,26 +176,48 @@ def test_eager_vs_epoch_split_evolution_converge(spark, small_log, small_oracle,
 
 
 def test_auto_salting_probe_and_plan(spark):
-    """SURVEY §4.3.1's automatic skew policy: the probe finds a dominating
-    key (and stays quiet on uniform data), and the salted reduce really is
-    a two-phase plan (groupBy(pk, salt) then groupBy(pk))."""
+    """SURVEY §4.3.1's automatic skew policy: the probe replay fuses into
+    its stats aggregate finds a dominating key (and stays quiet on uniform
+    data), null-keyed B/C marker rows never count as the hot key, and the
+    salted reduce really is a two-phase plan (groupBy(pk, salt) then
+    groupBy(pk))."""
     from pyspark.sql import functions as F
 
     from logicaldecoding_spark.operators.compaction import last_writer_wins
-    from logicaldecoding_spark.plans.replay import _auto_salt_buckets
+    from logicaldecoding_spark.plans.replay import (
+        _salt_decision,
+        _salt_topk_expr,
+    )
 
+    pk = ("repo", "path")
     n = 10_000
+    # twice as many markers as data events, all with null keys: counted as
+    # a key, they would hold 2/3 of the rows and flip salting on
+    markers = spark.range(2 * n).select(
+        F.lit(None).cast("string").alias("repo"),
+        F.lit(None).cast("string").alias("path"),
+        F.when(F.col("id") % 2 == 0, F.lit("B")).otherwise(F.lit("C"))
+        .alias("op"),
+    )
+
+    def probe(data):
+        topk = data.unionByName(markers).agg(_salt_topk_expr(pk)) \
+            .collect()[0]["_topk"]
+        return _salt_decision(topk, n, spark)
+
     hot = spark.range(n).select(
         F.when(F.col("id") % 10 < 9, F.lit("hot")).otherwise(
             F.concat(F.lit("r"), F.col("id"))).alias("repo"),
         F.lit("p").alias("path"),
+        F.lit("U").alias("op"),
     )
-    assert _auto_salt_buckets(hot, ("repo", "path"), n, spark) is not None
+    assert probe(hot) is not None
     uniform = spark.range(n).select(
         F.concat(F.lit("r"), F.col("id") % 997).alias("repo"),
         F.lit("p").alias("path"),
+        F.lit("I").alias("op"),
     )
-    assert _auto_salt_buckets(uniform, ("repo", "path"), n, spark) is None
+    assert probe(uniform) is None
 
     changes = spark.range(1000).select(
         F.lit("hot").alias("repo"), F.lit("p").alias("path"),
@@ -271,3 +293,64 @@ def test_prime_python_workers_once_per_session(spark):
     ) or "prime" not in spark.sparkContext.getLocalProperty(
         "spark.job.description"
     )
+
+
+def test_prime_failure_leaves_session_unprimed(spark, small_log, small_oracle,
+                                               tmp_path, monkeypatch, caplog):
+    """Priming is only a speed aid: when its job fails, the replay logs a
+    warning, leaves the session unprimed (a later replay retries) and
+    still converges to the oracle."""
+    import importlib
+    import logging
+
+    replay_mod = importlib.import_module("logicaldecoding_spark.plans.replay")
+    log_path, _ = small_log
+    oracle_state, _ = small_oracle
+    app = spark.sparkContext.applicationId
+    replay_mod._PRIMED_APPS.discard(app)
+    prime = replay_mod.prime_python_workers
+    monkeypatch.setattr(
+        replay_mod, "prime_python_workers",
+        lambda spark, modules: prime(spark, ("no_such_module_to_prime",)),
+    )
+    table_path = str(tmp_path / "t_unprimed")
+    with caplog.at_level(logging.WARNING, logger="logicaldecoding_spark"):
+        replay_mod.replay(spark, log_path, table_path, parse_mode="native",
+                          n_buckets=4)
+    assert app not in replay_mod._PRIMED_APPS
+    assert "priming failed" in caplog.text
+    assert_converged(spark, table_path, oracle_state)
+
+
+def test_one_data_batch_spark_job_count(spark, tmp_path):
+    """Pins the Spark jobs of one data batch (native parse, COW, default
+    drift check) on a small single-batch log: the touched buckets ride in
+    the slim pass's stats aggregate, so listing them costs no job of its
+    own."""
+    from logicaldecoding_spark.generator import generate_log
+    from logicaldecoding_spark.plans.batches import plan_batches
+    from logicaldecoding_spark.plans.replay import apply_plans, ensure_table
+    from logicaldecoding_spark.sources.wal_log import read_wal_log
+
+    log = str(tmp_path / "wal.parquet")
+    generate_log(log, n_txns=60, n_repos=5, paths_per_repo=4)
+    plans = plan_batches(spark.read.parquet(log).drop("committed"),
+                         target_data_batches=1, parse_mode="native")
+    assert [b.kind for b in plans] == ["data"]
+    table = ensure_table(str(tmp_path / "t"), n_buckets=4)
+    sc = spark.sparkContext
+    group = "test-one-data-batch-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        apply_plans(
+            spark, table, plans,
+            lambda lo, hi: read_wal_log(spark, log, lsn_from=lo, lsn_to=hi,
+                                        columns=("lsn", "payload")),
+            parse_mode="native", slim_mode="native",
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 12, f"{len(jobs)} Spark jobs for one data batch"

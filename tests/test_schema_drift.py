@@ -114,6 +114,18 @@ def test_drift_strict_fails_before_applying(spark, drift_log, tmp_path):
     assert_converged(spark, table_path, _oracle_knowing_stars(drift_log))
 
 
+def test_drift_strict_leaves_no_cached_frames(spark, drift_log, tmp_path):
+    """A strict-mode raise frees every frame the replay cached (the slim
+    pass, the aborted txids and the winner frame of the drift check)."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    with pytest.raises(SchemaDriftError):
+        replay(spark, drift_log, str(tmp_path / "t_strict_cache"),
+               n_buckets=4, schema_drift="strict")
+    left = set(sc._jsc.getPersistentRDDs().keys()) - before
+    assert not left, f"replay left persisted RDDs {sorted(left)}"
+
+
 def test_drift_strict_multi_batch_stops_at_drift(spark, drift_log, tmp_path):
     """With several data batches, strict mode applies clean pre-drift
     batches, stops exactly at the drifted one, and an evolve rerun resumes
