@@ -4,7 +4,7 @@ Usage:
     spark-submit --master local[N] --driver-memory 48g \
         --py-files /tmp/logicaldecoding_spark.zip \
         bench_jobs/replay_submit.py --log LOG --table TABLE \
-        [--parse-mode arrow] [--n-buckets 64] [--salt 0] [--resume]
+        [--parse-mode duckdb] [--n-buckets 64] [--salt 0] [--resume]
 
 Prints one JSON line with wall seconds and throughput.  The package arrives
 via --py-files (no repo-path assumption), exactly as it would on a cluster.
@@ -23,7 +23,6 @@ def main() -> None:
     ap.add_argument("--log", required=True)
     ap.add_argument("--table", required=True)
     ap.add_argument("--parse-mode", default="auto")
-    ap.add_argument("--slim-mode", default="auto")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--n-data-batches", type=int, default=1)
     ap.add_argument("--salt", type=int, default=0)
@@ -60,7 +59,6 @@ def main() -> None:
         args.log,
         args.table,
         parse_mode=args.parse_mode,
-        slim_mode=args.slim_mode,
         n_buckets=args.n_buckets,
         n_data_batches=args.n_data_batches,
         salt_buckets=args.salt or None,

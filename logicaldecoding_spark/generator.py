@@ -482,27 +482,34 @@ def generate_log(out_path: str, **kwargs) -> dict:
         os.remove(tmp)
         stats["path"] = out_path
         stats["payload_format"] = "proto"
-        _sync_writeback()
         return stats
     if fmt != "json":
         raise ValueError(f"unknown payload_format {fmt!r}")
     stats = WalLogGenerator(params).write(out_path)
-    _sync_writeback()
+    _sync_writeback(out_path)
     return stats
 
 
-def _sync_writeback() -> None:
-    """Flush pending page-cache writeback before returning a generated log.
+def _sync_writeback(path: str) -> None:
+    """Flush the log just written at ``path`` before returning it.
 
     A large freshly generated log leaves hundreds of MB of dirty pages; the
     kernel flushes them in the background DURING whatever runs next —
     measured to inflate a replay benchmarked right after generation by
     2-3x.  Generation is never inside a timed region, so paying the flush
-    here makes the generator's cost stay the generator's."""
-    try:
-        os.sync()
-    except (AttributeError, OSError):  # non-POSIX platform: best effort
-        pass
+    here makes the generator's cost stay the generator's.  Only the file
+    and its directory are synced, never the host's other filesystems."""
+    for p in (path, os.path.dirname(os.path.abspath(path))):
+        try:
+            fd = os.open(p, os.O_RDONLY)
+        except OSError:  # e.g. no directory handles on this platform
+            continue
+        try:
+            os.fsync(fd)
+        except OSError:  # best effort: the flush is only a speed aid
+            pass
+        finally:
+            os.close(fd)
 
 
 def split_log_dir(

@@ -265,23 +265,45 @@ def ensure_table(
     return LakeTable.load(table_path)
 
 
+_PARSE_MODES = ("auto", "duckdb", "native", "proto", "sidecar")
+
+
+class _Wire(NamedTuple):
+    """A replay's resolved wire (see ``_resolve_wire``)."""
+
+    parse_mode: str
+    plan_raw: DataFrame        # the unpruned log scan the planner reads
+    modules: tuple[str, ...]   # what prime_python_workers imports
+    raw_provider: Callable
+    slim_provider: Callable | None  # the fragment-direct scan, or None
+    record: dict               # {parse_mode, direct_slim_scan, reason}
+
+
 def _resolve_wire(
     spark: SparkSession,
     log_path: str,
-    log_columns: list[str],
     pk: tuple[str, ...],
     parse_mode: str,
-    slim_mode: str,
-    direct_slim_scan: bool | str,
-) -> tuple[str, str, tuple[str, ...], Callable, Callable | None]:
-    """Resolve the ``auto`` choices of a replay of ``log_path`` (whose
-    columns are ``log_columns``) and check the explicit ones against the
-    log.  ``replay`` and ``replay_multi`` both call it, so both read a log
-    the same way.  Returns (parse_mode, slim_mode, the modules
-    prime_python_workers imports, raw_provider, slim_provider); the slim
-    provider is the fragment-direct scan, or None to slim-parse the raw
-    scan."""
+) -> _Wire:
+    """Resolve a replay's ``parse_mode`` against the log at ``log_path``
+    and check an explicit one against the log.  ``replay`` and
+    ``replay_multi`` both call it, so both read a log the same way.  An
+    unknown mode raises before any Spark job runs.
+
+    ``auto`` resolves to ``sidecar`` when the log carries the tuple-sidecar
+    columns, else to ``duckdb``.  Every parse stage then uses the resolved
+    mode.  The slim pass takes the fragment-direct scan when the mode is
+    ``duckdb`` and the log has at least four row groups per core: enough
+    to amortize each task's setup (duckdb connection + parquet open) and
+    fill the task waves."""
+    if parse_mode not in _PARSE_MODES:
+        raise ValueError(f"unknown parse mode {parse_mode!r}")
     cores = spark.sparkContext.defaultParallelism
+    # planning gets the UNPRUNED scan: if the capture carries columnar
+    # op/txid sidecar columns, plan_batches plans without ever reading
+    # payloads.  The generator's `committed` ground-truth column is dropped
+    # here so nothing downstream can cheat with it.
+    plan_raw = spark.read.parquet(log_path).drop("committed")
     # tuple sidecar: the capture already carries the DECODED event as
     # columns (key cols + new/old tuple maps) beside the wire payload — the
     # shape an archiver that fully decodes messages writes.  Replay then
@@ -289,45 +311,29 @@ def _resolve_wire(
     # and the winner parse a JVM-side projection (no Python workers at all).
     sidecar_cols = ("lsn", "txid", "seq", "commit_time_us", "op", "table",
                     *pk, "new_tuple", "old_tuple")
-    has_tuple_sidecar = set(sidecar_cols) <= set(log_columns)
+    has_tuple_sidecar = set(sidecar_cols) <= set(plan_raw.columns)
     if parse_mode == "auto":
-        parse_mode = (
-            "sidecar" if has_tuple_sidecar
-            else ("duckdb" if cores <= 16 else "arrow")
-        )
+        parse_mode = "sidecar" if has_tuple_sidecar else "duckdb"
     if parse_mode == "sidecar" and not has_tuple_sidecar:
         raise ValueError(
             "parse_mode='sidecar' needs a tuple-sidecar capture "
             f"(columns {sidecar_cols}); this log lacks them"
         )
-    if slim_mode == "auto":
-        # unlike the FULL parse, the pk-pruned slim parse does NOT hit
-        # duckdb's high-concurrency allocator contention (measured at 32
-        # cores on the 30M-event log: slim duckdb 9.4s vs arrow 17.1s;
-        # whole replay 30.7s vs 33.8s) — duckdb wins at every core count
-        slim_mode = "sidecar" if parse_mode == "sidecar" else "duckdb"
-    if direct_slim_scan == "auto":
-        # JSON wire only (sidecar reads its own columns, proto decodes wire
-        # bytes), and only when there are enough row-group fragments to
-        # amortize the per-task setup (duckdb connection + parquet open)
-        # and fill the task waves: measured at 32 cores, the direct scan
-        # wins at 505 fragments (sf1.0: slim stats 11.6s -> 9.1s) and
-        # loses at 51 (sf0.1: 1.6 task waves, bad tail).  The bound scales
-        # with the session's core count, not a fixed size.
-        direct_slim_scan = False
-        if parse_mode not in ("sidecar", "proto"):
-            from ..sources.wal_log import log_fragments
+    direct_slim_scan = False
+    if parse_mode == "duckdb":
+        from ..sources.wal_log import log_fragments
 
-            try:
-                n_frags = len(log_fragments(log_path, None, None))
-            except OSError:
-                n_frags = 0
-            direct_slim_scan = n_frags >= 4 * cores
-    if parse_mode == "proto":
-        # protobuf-wire log: every parse stage decodes RowMessage bytes
-        slim_mode = "proto"
-        if direct_slim_scan:
-            raise ValueError("direct_slim_scan supports JSON-wire logs only")
+        try:
+            n_frags = len(log_fragments(log_path, None, None))
+        except OSError:
+            n_frags = 0
+        direct_slim_scan = n_frags >= 4 * cores
+        reason = (f"{n_frags} row groups {'>=' if direct_slim_scan else '<'}"
+                  f" 4 x {cores} cores")
+    elif parse_mode == "sidecar":
+        reason = "tuple-sidecar columns found: " + ", ".join(sidecar_cols)
+    else:
+        reason = f"parse_mode {parse_mode!r} has no direct slim scan"
     raw_columns = sidecar_cols if parse_mode == "sidecar" else ("lsn", "payload")
 
     def raw_provider(lo, hi):
@@ -342,10 +348,12 @@ def _resolve_wire(
             return parse_slim_direct(spark, log_path, pk, lsn_from=lo,
                                      lsn_to=hi)
 
-    # no duckdb import on the wires that never parse with it (sidecar, proto)
-    duckdb = direct_slim_scan or "duckdb" in (parse_mode, slim_mode)
-    modules = ("numpy", "pyarrow", *(("duckdb",) if duckdb else ()))
-    return parse_mode, slim_mode, modules, raw_provider, slim_provider
+    # no duckdb import on the wires that never parse with it
+    modules = ("numpy", "pyarrow",
+               *(("duckdb",) if parse_mode == "duckdb" else ()))
+    return _Wire(parse_mode, plan_raw, modules, raw_provider, slim_provider,
+                 {"parse_mode": parse_mode,
+                  "direct_slim_scan": direct_slim_scan, "reason": reason})
 
 
 class _ApplyOpts(NamedTuple):
@@ -353,7 +361,6 @@ class _ApplyOpts(NamedTuple):
     ``apply_plans`` for what each one does)."""
 
     parse_mode: str
-    slim_mode: str
     salt_buckets: int | None
     compaction: str
     max_broadcast_keys: int
@@ -406,7 +413,7 @@ def _slim_pass(raw: DataFrame, lsn_from: int | None, lsn_to: int,
         # row groups themselves — no JVM->Python payload transfer
         p = slim_provider(lsn_from, lsn_to)
     else:
-        p = parse_slim(raw, pk, mode=opts.slim_mode)
+        p = parse_slim(raw, pk, mode=opts.parse_mode)
     is_data = F.col("op").isin("I", "U", "D")
     routed = None not in sinks
     if routed:
@@ -647,7 +654,6 @@ def apply_plans(
     raw_provider: Callable[[int | None, int | None], DataFrame],
     *,
     parse_mode: str = "duckdb",
-    slim_mode: str = "duckdb",
     salt_buckets: int | None = None,
     compaction: str = "auto",
     max_broadcast_keys: int = 20_000_000,
@@ -720,7 +726,7 @@ def apply_plans(
     Both paths are property-tested equal (tests/test_properties.py)."""
     _check_drift_mode(schema_drift)
     opts = _ApplyOpts(
-        parse_mode=parse_mode, slim_mode=slim_mode, salt_buckets=salt_buckets,
+        parse_mode=parse_mode, salt_buckets=salt_buckets,
         compaction=compaction, max_broadcast_keys=max_broadcast_keys,
         merge_mode=merge_mode, schema_drift=schema_drift,
         salt_auto_min_events=salt_auto_min_events,
@@ -765,12 +771,12 @@ def replay(
     initial_schema: TableSchema | None = None,
     pk: tuple[str, ...] = REPOS_PK,
     n_buckets: int = 64,
-    # 'auto' prefers the capture's own decoded columns ('sidecar': zero
-    # payload decode, zero Python workers) when present; otherwise resolves
-    # by measured contention profile: duckdb's yyjson parse wins per-core up
-    # to ~16 concurrent workers; past that its allocator contends and the
-    # pyarrow C++ reader scales better (A/B on the 30M-event log: 8 cores
-    # 53s duckdb vs 62s arrow; 32 cores 43s vs 33s).
+    # 'duckdb' | 'native' | 'proto' | 'sidecar', or 'auto': the capture's
+    # own decoded columns ('sidecar': zero payload decode, zero Python
+    # workers) when present, else 'duckdb'.  Every parse stage (the slim
+    # pass and the winner parse) uses the resolved mode; on 'duckdb' the
+    # slim pass reads the log's row groups directly in the Python workers
+    # once the log has at least four per core (see _resolve_wire).
     parse_mode: str = "auto",
     n_data_batches: int = 1,
     salt_buckets: int | None = None,
@@ -778,17 +784,6 @@ def replay(
     max_broadcast_keys: int = 20_000_000,
     source_table: str | None = None,
     eager_evolution: bool = True,
-    # 'auto': same contention profile as parse_mode — duckdb's yyjson wins
-    # per-core up to ~16 concurrent workers, pyarrow scales better past that
-    slim_mode: str = "auto",
-    # 'auto' (default): use the fragment-direct slim scan (Python workers
-    # read the log's parquet row groups themselves — the JVM never ships
-    # payload bytes over Arrow IPC, guide-§4 column-boundary rule) for
-    # JSON-payload file logs, where it was measured 20-25% faster than the
-    # mapInArrow slim pass at every bench SF (sf1.0: stats phase 11.6s ->
-    # 9.1s); sidecar logs read their own columns and proto logs decode
-    # wire bytes, so both keep their existing paths.  True/False force it.
-    direct_slim_scan: bool | str = "auto",
     resume: bool = False,
     create: bool = True,
     stop_after_batches: int | None = None,  # crash-injection hook for tests
@@ -813,21 +808,17 @@ def replay(
     Already-applied LSN ranges are always skipped (the snapshot watermark is
     the mechanism; ``resume=True`` just documents intent), so a re-run after
     a crash converges to the same final state — exactly-once (SURVEY §2.9 T4).
+    The metrics carry ``wire``: the resolved parse mode, whether the slim
+    pass took the direct scan, and why.  A copy is kept under the table's
+    ``_metrics/`` (the newest ``_RUN_RECORDS_KEPT`` runs).
     """
     t0 = time.time()
     from ..dist import ship_package
 
     ship_package(spark)  # executor workers import this package inside UDFs
-
-    # planning gets the UNPRUNED scan: if the capture carries columnar
-    # op/txid sidecar columns, plan_batches plans without ever reading
-    # payloads.  The generator's `committed` ground-truth column is dropped
-    # here so nothing downstream can cheat with it.
-    plan_raw = spark.read.parquet(log_path).drop("committed")
-    parse_mode, slim_mode, modules, raw_provider, slim_provider = \
-        _resolve_wire(spark, log_path, plan_raw.columns, pk, parse_mode,
-                      slim_mode, direct_slim_scan)
-    prime_python_workers(spark, modules)  # once per session; see its docstring
+    wire = _resolve_wire(spark, log_path, pk, parse_mode)
+    parse_mode = wire.parse_mode
+    prime_python_workers(spark, wire.modules)  # once per session
     table = ensure_table(table_path, initial_schema, pk, n_buckets) if create \
         else LakeTable.load(table_path)
     if ref != "main":
@@ -835,7 +826,7 @@ def replay(
             table = LakeTable.load(table_path, ref=ref)
         except FileNotFoundError:
             table = table.create_branch(ref)
-    plans = plan_batches(plan_raw, target_data_batches=n_data_batches,
+    plans = plan_batches(wire.plan_raw, target_data_batches=n_data_batches,
                          parse_mode="proto" if parse_mode == "proto" else "native",
                          source_table=source_table,
                          eager_evolution=eager_evolution)
@@ -844,10 +835,9 @@ def replay(
         spark,
         table,
         plans,
-        raw_provider,
-        slim_provider=slim_provider,
+        wire.raw_provider,
+        slim_provider=wire.slim_provider,
         parse_mode=parse_mode,
-        slim_mode=slim_mode,
         salt_buckets=salt_buckets,
         compaction=compaction,
         max_broadcast_keys=max_broadcast_keys,
@@ -866,6 +856,7 @@ def replay(
         "table_version": final.version,
         "applied_upto_lsn": final.applied_upto_lsn,
         "wall_secs": round(wall, 3),
+        "wire": wire.record,
         "batches": metrics,
     }
     if parse_mode == "proto":
@@ -874,12 +865,32 @@ def replay(
         from ..sources.proto import active_decoder
 
         run["proto_decoder"] = active_decoder()
-    # per-run metrics log (lineage/observability, north_rule)
-    mdir = os.path.join(table_path, "_metrics")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, f"run-{int(time.time() * 1000)}.json"), "w") as f:
-        json.dump(run, f, indent=1)
+    _write_run_record(final, run)
     return run
+
+
+# per-run metrics log (lineage/observability, north_rule): replay keeps the
+# newest this many records under <table>/_metrics and removes older ones
+_RUN_RECORDS_KEPT = 100
+
+
+def _write_run_record(table: LakeTable, run: dict) -> None:
+    """Write ``run`` as ``_metrics/run-<unix ms>.json`` through the table's
+    FileIO, then remove all but the newest ``_RUN_RECORDS_KEPT`` records."""
+    io = table.io
+    mdir = os.path.join(table.path, "_metrics")
+    io.makedirs(mdir)
+    io.write_text_atomic(
+        os.path.join(mdir, f"run-{int(time.time() * 1000)}.json"),
+        json.dumps(run, indent=1),
+    )
+    records = sorted(
+        (n for n in io.listdir(mdir)
+         if n.startswith("run-") and n.endswith(".json")),
+        key=lambda n: int(n[len("run-"):-len(".json")]),
+    )
+    for n in records[:-_RUN_RECORDS_KEPT]:
+        io.remove_file(os.path.join(mdir, n))
 
 
 def apply_plans_multi(
@@ -889,7 +900,6 @@ def apply_plans_multi(
     raw_provider: Callable[[int | None, int | None], DataFrame],
     *,
     parse_mode: str = "duckdb",
-    slim_mode: str = "duckdb",
     salt_buckets: int | None = None,
     compaction: str = "auto",
     max_broadcast_keys: int = 20_000_000,
@@ -930,7 +940,7 @@ def apply_plans_multi(
     ``max_broadcast_keys`` or replay such tables separately."""
     return _apply_plans_multi(
         spark, sinks, plans_by_table, raw_provider, None,
-        _ApplyOpts(parse_mode, slim_mode, salt_buckets, compaction,
+        _ApplyOpts(parse_mode, salt_buckets, compaction,
                    max_broadcast_keys, merge_mode, schema_drift,
                    salt_auto_min_events, batch_id_offset,
                    drift_observation_ok),
@@ -1017,7 +1027,6 @@ def replay_multi(
     salt_buckets: int | None = None,
     compaction: str = "auto",
     max_broadcast_keys: int = 20_000_000,
-    slim_mode: str = "auto",
     merge_mode: str = "cow",
     schema_drift: str = "warn",
     salt_auto_min_events: int = 100_000,
@@ -1029,31 +1038,29 @@ def replay_multi(
     its own snapshots/watermark (independent resume); schema-change events
     route by their ``table`` field (an R with no table applies to every
     table).  The wire is resolved by the same ``_resolve_wire`` as
-    :func:`replay` (direct slim scan on ``auto``)."""
+    :func:`replay`, and recorded the same way under ``wire``."""
     t0 = time.time()
     from ..dist import ship_package
 
     from .batches import plan_batches_multi
 
     ship_package(spark)
-    plan_raw = spark.read.parquet(log_path).drop("committed")
-    parse_mode, slim_mode, modules, raw_provider, slim_provider = \
-        _resolve_wire(spark, log_path, plan_raw.columns, pk, parse_mode,
-                      slim_mode, "auto")
-    prime_python_workers(spark, modules)  # once per session; see its docstring
+    wire = _resolve_wire(spark, log_path, pk, parse_mode)
+    parse_mode = wire.parse_mode
+    prime_python_workers(spark, wire.modules)  # once per session
 
     sinks = {
         name: ensure_table(path, initial_schema, pk, n_buckets)
         for name, path in tables.items()
     }
     plans_by_table = plan_batches_multi(
-        plan_raw, list(tables),
+        wire.plan_raw, list(tables),
         target_data_batches=n_data_batches,
         parse_mode="proto" if parse_mode == "proto" else "native",
     )
     per_table = _apply_plans_multi(
-        spark, sinks, plans_by_table, raw_provider, slim_provider,
-        _ApplyOpts(parse_mode, slim_mode, salt_buckets, compaction,
+        spark, sinks, plans_by_table, wire.raw_provider, wire.slim_provider,
+        _ApplyOpts(parse_mode, salt_buckets, compaction,
                    max_broadcast_keys, merge_mode, schema_drift,
                    salt_auto_min_events, batch_id_offset=0,
                    drift_observation_ok=True),
@@ -1070,5 +1077,6 @@ def replay_multi(
         },
         "planning_scans": 1,
         "wall_secs": round(time.time() - t0, 3),
+        "wire": wire.record,
     }
     return run

@@ -1,32 +1,35 @@
 """Vectorized change-event parsing.
 
 The analog of the reference's per-message protobuf decode
-(``RowMessage::decode(&event[25..])``, /root/reference/src/replication.rs:120-122),
-re-expressed for Spark's batch execution in two interchangeable modes:
+(``RowMessage::decode(&event[25..])``, reference src/replication.rs:120-122),
+re-expressed for Spark's batch execution.  The JSON payload wire has one
+parser per role:
 
-* ``arrow``  — ``mapInArrow``: each Arrow record batch of serialized payloads
-  is parsed in one shot by pyarrow's C++ JSON reader (payloads are
-  newline-free JSON, so a batch is a valid JSONL document), and the dynamic
-  tuples are rebuilt as Arrow MapArrays with vectorized offset/key/value
-  construction — zero per-row Python anywhere.  This is the
-  north-star-mandated vectorized Arrow-UDF path.
-* ``native`` — ``from_json`` with an explicit schema: stays entirely JVM-side
-  inside whole-stage codegen.
+* ``duckdb`` — the Python-worker parser: ``mapInArrow`` hands each task's
+  payloads to DuckDB's yyjson-based ``json_transform``, one SQL statement
+  per ~256k rows, zero per-row Python.  It serves the full parse
+  (``parse_events``), the pk-pruned slim parse (``parse_slim``) and the
+  fragment-direct slim scan (``parse_slim_direct``), which reads the log's
+  row groups in the workers themselves.
+* ``native`` — ``from_json`` with an explicit schema: stays entirely
+  JVM-side inside whole-stage codegen; the reference the tests compare the
+  duckdb parser against, row for row.
 
-Both modes produce identical DataFrames (property-tested).  Output columns
-(beyond ``lsn``): txid, seq, commit_time_us, op, table, new_tuple
-(map<string,string>), old_tuple (map<string,string>), schema_change
-(struct<kind,column,type>).  ``committed`` is deliberately NOT produced here —
-commit status is derived downstream from COMMIT markers
-(operators/assembly.py), as logical decoding does for the reference.
+The other wires have their own modes: ``proto`` decodes decoderbufs
+RowMessage bytes (sources/proto.py) and ``sidecar`` projects the columns a
+tuple-sidecar capture already carries.  Output columns (beyond ``lsn``):
+txid, seq, commit_time_us, op, table, new_tuple (map<string,string>),
+old_tuple (map<string,string>), schema_change (struct<kind,column,type>),
+new_typeinfo.  ``committed`` is deliberately NOT produced here — commit
+status is derived downstream from COMMIT markers (operators/assembly.py),
+as logical decoding does for the reference.
 """
 
 from __future__ import annotations
 
-import io
 from collections.abc import Iterator
+from typing import NamedTuple
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as _pc
 
@@ -102,139 +105,24 @@ _OUT_SPARK_SCHEMA = T.StructType(
 )
 
 
-def _struct_to_map(col: pa.ChunkedArray | pa.Array | None, n: int) -> pa.Array:
-    """Arrow struct column -> MapArray, fully vectorized.
-
-    Entry per (row, field) where the field value is non-null — i.e. an absent
-    JSON key becomes an absent map key (NULL/datum_missing semantics,
-    pg_logicaldec.proto:33).  Rows where the whole struct is null become null
-    maps.  No per-row Python: per-FIELD numpy index work only.
-    """
-    if col is None:
-        return pa.nulls(n, _MAP_T)
-    sa = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-    ftype = sa.type
-    row_idx_parts: list[np.ndarray] = []
-    key_parts: list[pa.Array] = []
-    val_parts: list[pa.Array] = []
-    for fi in range(ftype.num_fields):
-        fname = ftype.field(fi).name
-        vals = sa.field(fi)
-        if vals.type != pa.string():
-            vals = vals.cast(pa.string())
-        valid = ~vals.is_null().to_numpy(zero_copy_only=False)
-        idx = np.nonzero(valid)[0]
-        if len(idx) == 0:
-            continue
-        row_idx_parts.append(idx)
-        key_parts.append(pa.array([fname] * len(idx), pa.string()))
-        val_parts.append(vals.take(pa.array(idx, pa.int64())))
-    if row_idx_parts:
-        row_idx = np.concatenate(row_idx_parts)
-        keys = pa.concat_arrays(key_parts)
-        vals = pa.concat_arrays(val_parts)
-        # stable sort by row: groups each row's entries contiguously while
-        # preserving field order within a row
-        order = np.argsort(row_idx, kind="stable")
-        row_idx = row_idx[order]
-        take = pa.array(order, pa.int64())
-        keys, vals = keys.take(take), vals.take(take)
-        counts = np.bincount(row_idx, minlength=n)
-    else:
-        keys = pa.array([], pa.string())
-        vals = pa.array([], pa.string())
-        counts = np.zeros(n, dtype=np.int64)
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(counts, out=offsets[1:])
-    offsets = offsets.astype(np.int32)
-    # null structs -> null map entries (offsets with nulls encode list nulls)
-    struct_null = sa.is_null().to_numpy(zero_copy_only=False)
-    if struct_null.any():
-        # a null at offsets position i marks ELEMENT i null; the final
-        # (n-th) offset must remain non-null
-        off = offsets.astype(object)
-        off[:-1][struct_null] = None
-        offsets_arr = pa.array(off.tolist(), pa.int32())
-    else:
-        offsets_arr = pa.array(offsets, pa.int32())
-    return pa.MapArray.from_arrays(offsets_arr, keys, vals)
-
-
-def _change_struct(col, n: int) -> pa.Array:
-    if col is None:
-        return pa.nulls(n, _CHANGE_T)
-    sa = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-    present = {sa.type.field(i).name: sa.field(i) for i in range(sa.type.num_fields)}
-    fields = [
-        present.get(name, pa.nulls(n, pa.string())) for name in ("kind", "column", "type")
-    ]
-    return pa.StructArray.from_arrays(
-        fields, names=["kind", "column", "type"], mask=_pc.is_null(sa)
-    )
-
-
-def _parse_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import pyarrow.compute as pc
-    import pyarrow.json as paj
-
-    for batch in batches:
-        n = batch.num_rows
-        if n == 0:
-            continue
-        payloads = batch.column(batch.schema.get_field_index("payload"))
-        if isinstance(payloads, pa.ChunkedArray):
-            payloads = payloads.combine_chunks()
-        # one C++ JSON parse per batch: payloads are newline-free JSON, so
-        # the '\n'-join (also C++: binary_join over a one-element list) forms
-        # a valid JSONL document
-        lst = pa.ListArray.from_arrays(pa.array([0, n], pa.int32()), payloads)
-        joined = pc.binary_join(lst, "\n")
-        try:
-            reader = pa.BufferReader(joined[0].as_buffer())  # zero-copy
-        except AttributeError:
-            reader = io.BytesIO(joined[0].as_py().encode("utf-8"))
-        # single-threaded parse: one Spark task == one core (pyarrow's own
-        # thread pool would oversubscribe the executor N-fold)
-        tbl = paj.read_json(
-            reader,
-            read_options=paj.ReadOptions(use_threads=False, block_size=1 << 24),
-        )
-
-        def col(cname):
-            i = tbl.schema.get_field_index(cname)
-            return tbl.column(i).combine_chunks() if i >= 0 else None
-
-        def scalar(cname, ptype, default=None):
-            c = col(cname)
-            if c is None:
-                return pa.nulls(n, ptype) if default is None else pa.array(
-                    [default] * n, ptype
-                )
-            return c.cast(ptype)
-
-        out = pa.RecordBatch.from_arrays(
-            [
-                batch.column(batch.schema.get_field_index("lsn")),
-                scalar("txid", pa.int64()),
-                scalar("seq", pa.int32(), 0),
-                scalar("ct", pa.int64()),
-                scalar("op", pa.string()),
-                scalar("table", pa.string()),
-                _struct_to_map(col("new"), n),
-                _struct_to_map(col("old"), n),
-                _change_struct(col("change"), n),
-                pa.nulls(n, _TYPEINFO_T),  # JSON wire carries no typeinfo
-            ],
-            schema=_OUT_ARROW_SCHEMA,
-        )
-        yield out
-
-
+# the full parse: absent JSON key -> absent map entry (datum_missing),
+# absent object -> NULL map, lenient typing -> NULL, as with from_json
 _DUCKDB_FULL_SCHEMA = (
     '{"txid":"BIGINT","seq":"INTEGER","ct":"BIGINT","op":"VARCHAR",'
     '"table":"VARCHAR","new":"MAP(VARCHAR,VARCHAR)","old":"MAP(VARCHAR,VARCHAR)",'
     '"change":{"kind":"VARCHAR","column":"VARCHAR","type":"VARCHAR"}}'
 )
+_DUCKDB_FULL_SQL = f"""
+    SELECT lsn, j.txid, j.seq, j.ct AS commit_time_us, j.op,
+           j."table", j.new AS new_tuple, j.old AS old_tuple,
+           j.change AS schema_change,
+           CAST(NULL AS STRUCT(modifier VARCHAR,
+                               value_optional BOOLEAN)[])
+               AS new_typeinfo
+    FROM (SELECT lsn,
+                 json_transform(payload, '{_DUCKDB_FULL_SCHEMA}') AS j
+          FROM _b)
+    """
 
 
 _DUCKDB_CHUNK_ROWS = 262_144  # amortize per-call SQL/registration overhead
@@ -258,49 +146,61 @@ def _chunked(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
         yield pa.Table.from_batches(buf)
 
 
-def _duckdb_full_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Full parse via DuckDB's yyjson-based ``json_transform`` — one SQL
-    statement transforms ~256k rows at a time (~2x pyarrow's JSON reader on
-    this wire).  Single-threaded: one Spark task == one core.
-
-    Semantics match the pyarrow path: absent JSON key -> absent map entry
-    (datum_missing), absent object -> NULL map, lenient typing -> NULL.
-    """
+def _duckdb_con():
+    """A worker-side DuckDB connection.  Single-threaded: one Spark task ==
+    one core."""
     import duckdb
 
     con = duckdb.connect()
     con.execute("SET threads=1")
-    for at in _chunked(batches):
-        con.register("_b", at)
-        res = con.execute(
-            f"""
-            SELECT lsn, j.txid, j.seq, j.ct AS commit_time_us, j.op,
-                   j."table", j.new AS new_tuple, j.old AS old_tuple,
-                   j.change AS schema_change,
-                   CAST(NULL AS STRUCT(modifier VARCHAR,
-                                       value_optional BOOLEAN)[])
-                       AS new_typeinfo
-            FROM (SELECT lsn,
-                         json_transform(payload, '{_DUCKDB_FULL_SCHEMA}') AS j
-                  FROM _b)
-            """
-        ).arrow()
-        con.unregister("_b")
-        res = res.cast(_OUT_ARROW_SCHEMA)
-        yield from res.to_batches()
+    return con
 
 
-def _slim_duckdb_gen(pk: tuple[str, ...]):
-    """mapInArrow generator: slim parse via DuckDB json_transform."""
+def _duckdb_batches(con, sql: str, table: pa.Table,
+                    out: pa.Schema) -> list[pa.RecordBatch]:
+    """Run ``sql`` over ``table`` (registered as ``_b``); its result as
+    record batches cast to ``out``."""
+    con.register("_b", table)
+    res = con.execute(sql).arrow()
+    con.unregister("_b")
+    return res.cast(out).to_batches()
+
+
+def _duckdb_map(sql: str, out: pa.Schema):
+    """mapInArrow function: ``sql`` over each ~256k-row chunk of the task's
+    (lsn, payload) batches, cast to ``out``."""
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        con = _duckdb_con()
+        for at in _chunked(batches):
+            yield from _duckdb_batches(con, sql, at, out)
+
+    return gen
+
+
+class _SlimQuery(NamedTuple):
+    """The duckdb slim parse of one pk shape, shared by ``parse_slim`` and
+    ``parse_slim_direct``."""
+
+    sql: str              # over a registered table _b(lsn, payload)
+    arrow: pa.Schema      # its result: (lsn, txid, seq, op, table, *pk)
+    spark: T.StructType   # the same columns as Spark types
+
+
+def _slim_query(pk: tuple[str, ...]) -> _SlimQuery:
+    """``new``/``old`` parse as structs of the pk fields only (see
+    ``parse_slim``); each pk column coalesces new over old."""
     fields = ",".join(f'"{c}":"VARCHAR"' for c in pk)
     schema = (
         '{"txid":"BIGINT","seq":"INTEGER","op":"VARCHAR","table":"VARCHAR",'
         f'"new":{{{fields}}},"old":{{{fields}}}}}'
     )
-    pk_sel = ",".join(
-        f'coalesce(j.new."{c}", j.old."{c}") AS "{c}"' for c in pk
-    )
-    out_schema = pa.schema(
+    pk_sel = ",".join(f'coalesce(j.new."{c}", j.old."{c}") AS "{c}"' for c in pk)
+    sql = f"""
+        SELECT lsn, j.txid, j.seq, j.op, j."table", {pk_sel}
+        FROM (SELECT lsn, json_transform(payload, '{schema}') AS j FROM _b)
+        """
+    arrow = pa.schema(
         [
             ("lsn", pa.int64()),
             ("txid", pa.int64()),
@@ -310,98 +210,17 @@ def _slim_duckdb_gen(pk: tuple[str, ...]):
             *[(c, pa.string()) for c in pk],
         ]
     )
-
-    def gen(batches):
-        import duckdb
-
-        con = duckdb.connect()
-        con.execute("SET threads=1")
-        for at in _chunked(batches):
-            con.register("_b", at)
-            res = con.execute(
-                f"""
-                SELECT lsn, j.txid, j.seq, j.op, j."table", {pk_sel}
-                FROM (SELECT lsn, json_transform(payload, '{schema}') AS j
-                      FROM _b)
-                """
-            ).arrow()
-            con.unregister("_b")
-            res = res.cast(out_schema)
-            yield from res.to_batches()
-
-    return gen, out_schema
-
-
-def _slim_arrow_gen(pk: tuple[str, ...]):
-    """Build the mapInArrow generator for the arrow-mode slim parse."""
-    import pyarrow.compute as pc
-    import pyarrow.json as paj
-
-    tuple_t = pa.struct([pa.field(c, pa.string()) for c in pk])
-    explicit = pa.schema(
+    spark = T.StructType(
         [
-            ("txid", pa.int64()),
-            ("seq", pa.int64()),
-            ("op", pa.string()),
-            ("table", pa.string()),
-            ("new", tuple_t),
-            ("old", tuple_t),
+            T.StructField("lsn", T.LongType()),
+            T.StructField("txid", T.LongType()),
+            T.StructField("seq", T.IntegerType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("table", T.StringType()),
+            *[T.StructField(c, T.StringType()) for c in pk],
         ]
     )
-    out_schema = pa.schema(
-        [
-            ("lsn", pa.int64()),
-            ("txid", pa.int64()),
-            ("seq", pa.int32()),
-            ("op", pa.string()),
-            ("table", pa.string()),
-            *[(c, pa.string()) for c in pk],
-        ]
-    )
-
-    def gen(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            payloads = batch.column(batch.schema.get_field_index("payload"))
-            if isinstance(payloads, pa.ChunkedArray):
-                payloads = payloads.combine_chunks()
-            lst = pa.ListArray.from_arrays(pa.array([0, n], pa.int32()), payloads)
-            joined = pc.binary_join(lst, "\n")
-            try:
-                reader = pa.BufferReader(joined[0].as_buffer())
-            except AttributeError:
-                reader = io.BytesIO(joined[0].as_py().encode("utf-8"))
-            tbl = paj.read_json(
-                reader,
-                read_options=paj.ReadOptions(use_threads=False, block_size=1 << 24),
-                parse_options=paj.ParseOptions(
-                    explicit_schema=explicit,
-                    unexpected_field_behavior="ignore",
-                ),
-            )
-            new_c = tbl.column("new").combine_chunks()
-            old_c = tbl.column("old").combine_chunks()
-            pk_cols = [
-                pc.coalesce(
-                    pc.struct_field(new_c, c), pc.struct_field(old_c, c)
-                )
-                for c in pk
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(batch.schema.get_field_index("lsn")),
-                    tbl.column("txid").combine_chunks(),
-                    tbl.column("seq").combine_chunks().cast(pa.int32()),
-                    tbl.column("op").combine_chunks(),
-                    tbl.column("table").combine_chunks(),
-                    *pk_cols,
-                ],
-                schema=out_schema,
-            )
-
-    return gen, out_schema
+    return _SlimQuery(sql, arrow, spark)
 
 
 def parse_slim_direct(
@@ -427,40 +246,13 @@ def parse_slim_direct(
     from .wal_log import log_fragments
 
     frags = log_fragments(log_path, lsn_from, lsn_to)
-    fields = ",".join(f'"{c}":"VARCHAR"' for c in pk)
-    schema = (
-        '{"txid":"BIGINT","seq":"INTEGER","op":"VARCHAR","table":"VARCHAR",'
-        f'"new":{{{fields}}},"old":{{{fields}}}}}'
-    )
-    pk_sel = ",".join(f'coalesce(j.new."{c}", j.old."{c}") AS "{c}"' for c in pk)
-    out_schema = pa.schema(
-        [
-            ("lsn", pa.int64()),
-            ("txid", pa.int64()),
-            ("seq", pa.int32()),
-            ("op", pa.string()),
-            ("table", pa.string()),
-            *[(c, pa.string()) for c in pk],
-        ]
-    )
-    spark_out = T.StructType(
-        [
-            T.StructField("lsn", T.LongType()),
-            T.StructField("txid", T.LongType()),
-            T.StructField("seq", T.IntegerType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("table", T.StringType()),
-            *[T.StructField(c, T.StringType()) for c in pk],
-        ]
-    )
+    q = _slim_query(pk)
     lo, hi = lsn_from, lsn_to
 
     def gen(batches):
-        import duckdb
         import pyarrow.parquet as pq
 
-        con = duckdb.connect()
-        con.execute("SET threads=1")
+        con = _duckdb_con()
         for batch in batches:
             paths = batch.column(0).to_pylist()
             rgs = batch.column(1).to_pylist()
@@ -479,24 +271,14 @@ def parse_slim_direct(
                     t = t.filter(mask)
                 if t.num_rows == 0:
                     continue
-                con.register("_b", t)
-                res = con.execute(
-                    f"""
-                    SELECT lsn, j.txid, j.seq, j.op, j."table", {pk_sel}
-                    FROM (SELECT lsn,
-                                 json_transform(payload, '{schema}') AS j
-                          FROM _b)
-                    """
-                ).arrow()
-                con.unregister("_b")
-                yield from res.cast(out_schema).to_batches()
+                yield from _duckdb_batches(con, q.sql, t, q.arrow)
 
     if not frags:
-        return spark.createDataFrame([], spark_out)
+        return spark.createDataFrame([], q.spark)
     frag_df = spark.createDataFrame(
         frags, "path string, rg int"
     ).repartition(len(frags))
-    return frag_df.mapInArrow(gen, schema=spark_out)
+    return frag_df.mapInArrow(gen, schema=q.spark)
 
 
 def parse_slim(raw: DataFrame, pk: tuple[str, ...], mode: str = "native"
@@ -510,14 +292,15 @@ def parse_slim(raw: DataFrame, pk: tuple[str, ...], mode: str = "native"
     so the reduced schema is built explicitly here.  B/C markers carry no
     tuples and fold to NULL pk columns, exactly as with the map parse.
 
-    ``mode='arrow'`` routes the narrow pass through pyarrow's C++ JSON
-    reader (one batch = one parse, explicit pruned schema, unexpected
-    fields ignored); ``'native'`` stays JVM-side via from_json;
+    ``mode='duckdb'`` runs the narrow pass in Python workers through
+    DuckDB's ``json_transform`` with the pruned schema (the same query as
+    ``parse_slim_direct``); ``'native'`` stays JVM-side via from_json;
     ``'proto'`` decodes RowMessage wire bytes and projects the slim
     columns (no skip-scan fast path without a C protobuf lib);
     ``'sidecar'`` reads the capture's own key columns — a pure
     column-pruned Parquet scan (lsn, txid, seq, op, table, pk), the only
-    slim pass that never touches tuple bytes at all."""
+    slim pass that never touches tuple bytes at all.  Any other mode
+    raises ``ValueError``."""
     if mode == "sidecar":
         return raw.select("lsn", "txid", F.col("seq").cast("int").alias("seq"),
                           "op", "table", *pk)
@@ -532,21 +315,13 @@ def parse_slim(raw: DataFrame, pk: tuple[str, ...], mode: str = "native"
                 for c in pk
             ],
         )
-    if mode in ("arrow", "duckdb"):
-        gen, out_schema = (
-            _slim_arrow_gen(pk) if mode == "arrow" else _slim_duckdb_gen(pk)
+    if mode == "duckdb":
+        q = _slim_query(pk)
+        return raw.select("lsn", "payload").mapInArrow(
+            _duckdb_map(q.sql, q.arrow), schema=q.spark
         )
-        spark_out = T.StructType(
-            [
-                T.StructField("lsn", T.LongType()),
-                T.StructField("txid", T.LongType()),
-                T.StructField("seq", T.IntegerType()),
-                T.StructField("op", T.StringType()),
-                T.StructField("table", T.StringType()),
-                *[T.StructField(c, T.StringType()) for c in pk],
-            ]
-        )
-        return raw.select("lsn", "payload").mapInArrow(gen, schema=spark_out)
+    if mode != "native":
+        raise ValueError(f"unknown parse mode {mode!r}")
     tuple_t = T.StructType([T.StructField(c, T.StringType()) for c in pk])
     sch = T.StructType(
         [
@@ -594,9 +369,12 @@ def parse_markers(raw: DataFrame, mode: str = "json") -> DataFrame:
     )
 
 
-def parse_events(raw: DataFrame, mode: str = "arrow") -> DataFrame:
+def parse_events(raw: DataFrame, mode: str = "duckdb") -> DataFrame:
     """(lsn, payload) -> (lsn, txid, seq, commit_time_us, op, table,
     new_tuple, old_tuple, schema_change, new_typeinfo).
+
+    ``mode='duckdb'`` parses JSON payloads in Python workers (DuckDB
+    ``json_transform``); ``'native'`` parses them JVM-side (``from_json``).
 
     ``mode='proto'`` decodes decoderbufs RowMessage wire bytes (payload is
     BINARY; see sources/proto.py for the mapping and the honest perf note).
@@ -622,13 +400,10 @@ def parse_events(raw: DataFrame, mode: str = "arrow") -> DataFrame:
             F.lit(None).cast(SCHEMA_CHANGE_TYPE).alias("schema_change"),
             F.lit(None).cast(TYPEINFO_SPARK_TYPE).alias("new_typeinfo"),
         )
-    if mode == "arrow":
-        return raw.select("lsn", "payload").mapInArrow(
-            _parse_batches, schema=_OUT_SPARK_SCHEMA
-        )
     if mode == "duckdb":
         return raw.select("lsn", "payload").mapInArrow(
-            _duckdb_full_batches, schema=_OUT_SPARK_SCHEMA
+            _duckdb_map(_DUCKDB_FULL_SQL, _OUT_ARROW_SCHEMA),
+            schema=_OUT_SPARK_SCHEMA,
         )
     if mode == "proto":
         from .proto import make_proto_batches

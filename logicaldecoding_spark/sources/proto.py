@@ -662,5 +662,5 @@ def convert_log_to_proto(json_log_path: str, out_path: str) -> dict:
         pq.write_table(pf.schema_arrow.empty_table(), out_path)
     from ..generator import _sync_writeback
 
-    _sync_writeback()  # flush dirty pages so the NEXT (timed) job runs clean
+    _sync_writeback(out_path)  # so the NEXT (timed) job runs clean
     return {"rows": n_rows, "path": out_path}

@@ -375,9 +375,6 @@ def stream_replay(
                     warnings.warn(msg, stacklevel=2)
                 apply_kw = dict(
                     parse_mode=parse_mode,
-                    slim_mode=(
-                        wire if wire in ("proto", "sidecar") else "duckdb"
-                    ),
                     salt_buckets=salt_buckets,
                     batch_id_offset=epoch * 1000,
                     merge_mode=merge_mode,

@@ -175,12 +175,15 @@ def test_direct_slim_scan_on_auto(spark, multi_log, tmp_path, monkeypatch):
         return orig_slim(*a, **kw)
 
     monkeypatch.setattr(parse_mod, "parse_slim", counting_slim)
-    replay_multi(spark, fragmented, {"repos": str(tmp_path / "da"),
-                                     "repos2": str(tmp_path / "db")},
-                 n_buckets=4)
-    replay(spark, fragmented, str(tmp_path / "single"), n_buckets=4,
-           source_table="repos")
+    multi = replay_multi(spark, fragmented, {"repos": str(tmp_path / "da"),
+                                             "repos2": str(tmp_path / "db")},
+                         n_buckets=4)
+    single = replay(spark, fragmented, str(tmp_path / "single"), n_buckets=4,
+                    source_table="repos")
     assert calls["slim"] == 0, "a slim pass did not use the direct scan"
+    for run in (multi, single):
+        assert run["wire"]["parse_mode"] == "duckdb"
+        assert run["wire"]["direct_slim_scan"] is True, run["wire"]
     state_a, _ = replay_oracle(only_a)
     state_b, _ = replay_oracle(only_b)
     assert_converged(spark, str(tmp_path / "da"), state_a)

@@ -1,4 +1,4 @@
-"""Vectorized parse: arrow mode == native mode, and crafted-event handling.
+"""Vectorized parse: duckdb mode == native mode, and crafted-event handling.
 
 Covers the reference's decode layer (RowMessage::decode,
 /root/reference/src/replication.rs:120-122) and datum semantics: missing key
@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from logicaldecoding_spark.sources.parse import parse_events
@@ -21,16 +22,13 @@ def _df_from_payloads(spark, payloads):
 def test_modes_agree_on_generated_log(spark, small_log):
     log_path, _ = small_log
     raw = spark.read.parquet(log_path).select("lsn", "payload")
-    a = parse_events(raw, mode="arrow").orderBy("lsn")
-    n = parse_events(raw, mode="native").orderBy("lsn")
     d = parse_events(raw, mode="duckdb").orderBy("lsn")
-    assert a.schema == n.schema
-    ra, rn = a.collect(), n.collect()
-    assert len(ra) == len(rn)
-    for x, y in zip(ra, rn):
-        assert x == y, f"arrow!=native at lsn {x['lsn']}: {x} vs {y}"
-    for x, z in zip(a.collect(), d.collect()):
-        assert x == z, f"arrow!=duckdb at lsn {x['lsn']}: {x} vs {z}"
+    n = parse_events(raw, mode="native").orderBy("lsn")
+    assert d.schema == n.schema
+    rd, rn = d.collect(), n.collect()
+    assert len(rd) == len(rn)
+    for x, y in zip(rd, rn):
+        assert x == y, f"duckdb!=native at lsn {x['lsn']}: {x} vs {y}"
 
 
 def test_crafted_events_all_shapes(spark):
@@ -64,7 +62,7 @@ def test_crafted_events_all_shapes(spark):
         ),
         json.dumps({"txid": 7, "seq": 0, "ct": 1, "op": "C"}),
     ]
-    for mode in ("arrow", "native", "duckdb"):
+    for mode in ("native", "duckdb"):
         rows = (
             parse_events(_df_from_payloads(spark, payloads), mode=mode)
             .orderBy("lsn")
@@ -92,7 +90,7 @@ def test_unicode_and_escapes_roundtrip(spark):
             "new": {"repo": "r", "path": "p", "commit": "c", "content": content},
         }
     )
-    for mode in ("arrow", "native", "duckdb"):
+    for mode in ("native", "duckdb"):
         row = parse_events(_df_from_payloads(spark, [p]), mode=mode).collect()[0]
         assert row["new_tuple"]["content"] == content, mode
 
@@ -159,3 +157,58 @@ def assert_converged_local(spark, table_path, oracle_state):
            for r in LakeTable.load(table_path).read(spark).collect()}
     assert diff_states(state_with_hashes(oracle_state),
                        state_with_hashes(eng)) == []
+
+
+def test_slim_parsers_agree_with_schema_changes(spark, tmp_path):
+    """The kept slim parsers agree row for row on a log with schema-change
+    events: duckdb and native over the JVM scan, and the fragment-direct
+    scan over the log's row groups — unbounded and on an (lsn_from,
+    lsn_to] window that cuts through row groups."""
+    import pyarrow.parquet as pq
+
+    from logicaldecoding_spark.generator import default_evolution, generate_log
+    from logicaldecoding_spark.sources.parse import (
+        parse_slim,
+        parse_slim_direct,
+    )
+
+    base = str(tmp_path / "base.parquet")
+    stats = generate_log(base, n_txns=200, n_repos=12, paths_per_repo=6,
+                         schema_changes=default_evolution(200))
+    # several row groups, so the window prunes fragments and cuts others
+    log = str(tmp_path / "wal.parquet")
+    t = pq.read_table(base)
+    pq.write_table(t, log, row_group_size=t.num_rows // 5 + 1)
+    raw = spark.read.parquet(log).select("lsn", "payload")
+    assert raw.filter(F.col("payload").contains('"op":"R"')).count() == 3
+    pk = ("repo", "path")
+    top = stats["max_lsn"]
+    for lo, hi in ((None, None), (top // 3, 2 * top // 3 + 7)):
+        win = raw
+        if lo is not None:
+            win = raw.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
+        got = {
+            "duckdb": parse_slim(win, pk, mode="duckdb"),
+            "native": parse_slim(win, pk, mode="native"),
+            "direct": parse_slim_direct(spark, log, pk, lsn_from=lo,
+                                        lsn_to=hi),
+        }
+        rows = {k: [tuple(r) for r in df.orderBy("lsn").collect()]
+                for k, df in got.items()}
+        want = win.count()
+        assert len(rows["native"]) == want
+        assert rows["duckdb"] == rows["native"], (lo, hi)
+        assert rows["direct"] == rows["native"], (lo, hi)
+
+
+def test_parse_slim_rejects_unknown_mode(spark):
+    """An unknown slim mode fails at once instead of silently falling
+    through to from_json."""
+    from logicaldecoding_spark.sources.parse import parse_slim
+
+    raw = _df_from_payloads(spark, ['{"txid":1,"seq":0,"ct":1,"op":"B"}'])
+    for mode in ("bogus", "arrow"):
+        with pytest.raises(ValueError, match="unknown parse mode"):
+            parse_slim(raw, ("repo", "path"), mode=mode)
+        with pytest.raises(ValueError, match="unknown parse mode"):
+            parse_events(raw, mode=mode)

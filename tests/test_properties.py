@@ -34,7 +34,7 @@ def prop_log(tmp_path_factory):
     n_batches=st.integers(min_value=1, max_value=5),
     salt=st.sampled_from([None, 2, 7]),
     n_buckets=st.sampled_from([1, 4, 16]),
-    parse_mode=st.sampled_from(["arrow", "native", "duckdb"]),
+    parse_mode=st.sampled_from(["native", "duckdb"]),
 )
 def test_final_state_invariant_under_execution_choices(
     spark, prop_log, tmp_path_factory, n_batches, salt, n_buckets, parse_mode

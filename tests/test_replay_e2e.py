@@ -16,7 +16,7 @@ from logicaldecoding_spark.plans.replay import replay
 from .util import assert_converged
 
 
-@pytest.mark.parametrize("parse_mode", ["arrow", "native"])
+@pytest.mark.parametrize("parse_mode", ["duckdb", "native"])
 def test_replay_converges_single_batch(spark, small_log, small_oracle, tmp_path, parse_mode):
     log_path, stats = small_log
     oracle_state, _ = small_oracle
@@ -25,6 +25,10 @@ def test_replay_converges_single_batch(spark, small_log, small_oracle, tmp_path,
         spark, log_path, table_path, parse_mode=parse_mode, n_buckets=8, n_data_batches=1
     )
     assert run["applied_upto_lsn"] == stats["max_lsn"]
+    # a one-row-group log is too small for the fragment-direct slim scan
+    assert run["wire"]["parse_mode"] == parse_mode
+    assert run["wire"]["direct_slim_scan"] is False
+    assert run["wire"]["reason"]
     assert_converged(spark, table_path, oracle_state)
 
 
@@ -346,7 +350,7 @@ def test_one_data_batch_spark_job_count(spark, tmp_path):
             spark, table, plans,
             lambda lo, hi: read_wal_log(spark, log, lsn_from=lo, lsn_to=hi,
                                         columns=("lsn", "payload")),
-            parse_mode="native", slim_mode="native",
+            parse_mode="native",
         )
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description",
@@ -354,3 +358,51 @@ def test_one_data_batch_spark_job_count(spark, tmp_path):
             sc.setLocalProperty(prop, None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) == 12, f"{len(jobs)} Spark jobs for one data batch"
+
+
+def test_unknown_parse_mode_fails_before_any_work(spark, small_log, tmp_path):
+    """An unknown parse mode (the deleted 'arrow' parser included) is
+    rejected before any Spark job runs or any table is created."""
+    import os
+
+    from logicaldecoding_spark.plans.replay import replay_multi
+
+    log_path, _ = small_log
+    sc = spark.sparkContext
+    group = "test-unknown-parse-mode"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="unknown parse mode 'arrow'"):
+            replay(spark, log_path, str(tmp_path / "t"), parse_mode="arrow")
+        with pytest.raises(ValueError, match="unknown parse mode 'bogus'"):
+            replay_multi(spark, log_path, {"repos": str(tmp_path / "m")},
+                         parse_mode="bogus")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert not os.path.exists(tmp_path / "t")
+    assert not os.path.exists(tmp_path / "m")
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_run_records_are_bounded(spark, small_log, tmp_path, monkeypatch):
+    """replay writes its run record through the table's FileIO and keeps
+    only the newest records; the newest carries the wire decision."""
+    import importlib
+    import json
+    import os
+
+    replay_mod = importlib.import_module("logicaldecoding_spark.plans.replay")
+    monkeypatch.setattr(replay_mod, "_RUN_RECORDS_KEPT", 2)
+    log_path, _ = small_log
+    table_path = str(tmp_path / "t")
+    runs = [replay(spark, log_path, table_path, parse_mode="native",
+                   n_buckets=4) for _ in range(3)]
+    mdir = os.path.join(table_path, "_metrics")
+    records = sorted(os.listdir(mdir))
+    assert len(records) == 2, records
+    with open(os.path.join(mdir, records[-1])) as f:
+        newest = json.load(f)
+    assert newest["wire"] == runs[-1]["wire"]
+    assert newest["wire"]["parse_mode"] == "native"
