@@ -161,12 +161,10 @@ def _scan_log(raw: DataFrame, parse_mode: str, target_data_batches: int):
     want_cuts = target_data_batches > 1
 
     if is_proto:
-        from ..sources.proto import resolve_decoders
-
-        _dec = resolve_decoders()[0]  # honors the fast-decoder seam
+        from ..sources.proto import decode_row_message
 
         def _decode(p):  # bytes -> canonical event dict
-            return _dec(bytes(p))
+            return decode_row_message(bytes(p))
     else:
         def _decode(p):
             return _json.loads(p)

@@ -276,7 +276,8 @@ class _Wire(NamedTuple):
     modules: tuple[str, ...]   # what prime_python_workers imports
     raw_provider: Callable
     slim_provider: Callable | None  # the fragment-direct scan, or None
-    record: dict               # {parse_mode, direct_slim_scan, reason}
+    record: dict               # {parse_mode, direct_slim_scan, reason}, plus
+                               # {decoder, decoder_reason} on the proto wire
 
 
 def _resolve_wire(
@@ -295,7 +296,8 @@ def _resolve_wire(
     mode.  The slim pass takes the fragment-direct scan when the mode is
     ``duckdb`` and the log has at least four row groups per core: enough
     to amortize each task's setup (duckdb connection + parquet open) and
-    fill the task waves."""
+    fill the task waves.  On the ``proto`` wire the record also says which
+    decoder runs (``native`` or ``python``) and why."""
     if parse_mode not in _PARSE_MODES:
         raise ValueError(f"unknown parse mode {parse_mode!r}")
     cores = spark.sparkContext.defaultParallelism
@@ -348,12 +350,18 @@ def _resolve_wire(
             return parse_slim_direct(spark, log_path, pk, lsn_from=lo,
                                      lsn_to=hi)
 
+    record = {"parse_mode": parse_mode,
+              "direct_slim_scan": direct_slim_scan, "reason": reason}
+    if parse_mode == "proto":
+        from ..sources.proto import native_decoder
+
+        so_path, record["decoder_reason"] = native_decoder()
+        record["decoder"] = "native" if so_path else "python"
     # no duckdb import on the wires that never parse with it
     modules = ("numpy", "pyarrow",
                *(("duckdb",) if parse_mode == "duckdb" else ()))
     return _Wire(parse_mode, plan_raw, modules, raw_provider, slim_provider,
-                 {"parse_mode": parse_mode,
-                  "direct_slim_scan": direct_slim_scan, "reason": reason})
+                 record)
 
 
 class _ApplyOpts(NamedTuple):
@@ -859,12 +867,6 @@ def replay(
         "wire": wire.record,
         "batches": metrics,
     }
-    if parse_mode == "proto":
-        # decoder provenance (r5 verdict ask #1b): a silent compiler
-        # fallback to the pure-Python codec must be visible in the record
-        from ..sources.proto import active_decoder
-
-        run["proto_decoder"] = active_decoder()
     _write_run_record(final, run)
     return run
 

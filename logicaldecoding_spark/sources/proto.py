@@ -34,22 +34,30 @@ Canonical mapping (wire <-> the engine's event columns):
 * ``seq`` does not exist on the wire (decoderbufs orders by the replication
   stream's XLogData framing, as does our ``lsn`` column): decoded as 0.
 
-Performance: the pure-Python per-message codec in this module is the
-portable floor and the semantics reference.  The DEFAULT hot path is the
-first-party C batch decoder (proto_native.py — compiled once with the
-system C compiler, loaded via ctypes, one C call per Arrow batch,
-auto-installed through the fast-decoder seam below, measured ~3x the
-pure-Python parse end-to-end): no compiler -> silent fallback to pure
-Python.  The seam (``set_fast_decoders``) equally accepts google.protobuf
-upb / generated bindings where installed.
+Decoding: every Arrow batch goes through one decoder,
+``decode_full_batch`` (or ``decode_header_batch`` for the marker and
+tagging paths).  It hands the batch to the C batch decoder
+(proto_native.py: compiled once with the system C compiler, one C call per
+batch) and re-decodes the rows that decoder flags with the pure-Python
+codec here, splicing them back by position.  The rule for falling back is
+per row, never a setting: float/double/point datums, ``new_typeinfo`` and R
+events are flagged by the C decoder; with no ``.so`` (see
+``native_decoder``, which keeps the compile error as its reason), payloads
+past ``binary``'s 2 GiB, or invalid UTF-8 in a batch, every row of the batch
+is.  The pure-Python codec is thus also the byte-parity oracle the tests
+compare the C decoder against.
 """
 
 from __future__ import annotations
 
 import base64
+import functools
+import os
 import struct
+import subprocess
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
 
 OP_TO_CHAR = {0: "I", 1: "U", 2: "D", 3: "B", 4: "C"}
@@ -391,154 +399,146 @@ def decode_row_header(b: bytes) -> tuple[int | None, str]:
 
 
 # ---------------------------------------------------------------------------
-# fast-decoder seam
+# Arrow-batch decode (the mapInArrow bodies for parse mode 'proto')
 # ---------------------------------------------------------------------------
-# The one swap point for a C-speed protobuf runtime (google.protobuf's upb,
-# a generated-bindings module, cython, ...): install alternative callables
-# with the same contracts as decode_row_message (bytes -> canonical event
-# dict) / decode_row_header (bytes -> (txid, op)).  Every Arrow-batch body
-# below is built by a make_* FACTORY that resolves the installed decoder
-# DRIVER-side at plan time and closes over it — cloudpickle then ships the
-# function to executors BY VALUE inside the task closure, so injection
-# works without any worker-side module state or re-import tricks.  Dropping
-# in a real runtime is therefore a config call, not surgery (r4 verdict
-# "What's wrong #2" / ask #6).
-_FAST_DECODERS: dict[str, object] = {}
+@functools.cache
+def native_decoder() -> tuple[str | None, str]:
+    """This process's C batch decoder: ``(so_path, reason)``, where the
+    reason is the ``.so`` name, or ``(None, reason)`` with the compile
+    error as the reason.  Compiled once, driver-side; each ``make_proto_*``
+    factory reads it at plan time and closes over the path, so executors
+    need no module state of their own."""
+    from .proto_native import build_native_decoder
+
+    try:
+        so_path = build_native_decoder()
+    except subprocess.CalledProcessError as e:
+        err = e.stderr.decode(errors="replace").strip().splitlines()
+        return None, f"cc failed: {err[0] if err else e}"
+    except OSError as e:  # no cc on PATH, or an unwritable cache dir
+        return None, f"C decoder build failed: {e}"
+    return so_path, os.path.basename(so_path)
 
 
-def set_fast_decoders(full=None, header=None,
-                      full_batch=None, header_batch=None) -> None:
-    """Install (or with ``None``, uninstall back to the pure-Python codec)
-    fast decode callables.  ``full``: bytes -> canonical event dict, same
-    contract as :func:`decode_row_message`.  ``header``: bytes ->
-    (txid, op), same contract as :func:`decode_row_header`.
+def _native_columns(so_path: str | None, payload: pa.Array,
+                    headers_only: bool = False):
+    """The C decoder's columns and flagged row indices for one payload
+    array.  ``(None, every row)`` sends the whole batch to the Python
+    codec: no ``.so``, payloads too large for ``binary``'s int32 offsets,
+    or invalid UTF-8, where the Python codec is the arbiter (it raises)."""
+    from .proto_native import NativeUtf8Error, decode_batch_native
 
-    The BATCH forms decode one whole Arrow batch per call (the shape a
-    C/ctypes or upb-based decoder wants — see proto_native.py):
-    ``full_batch(lsn: pa.Array, payload: pa.Array) -> pa.RecordBatch`` in
-    the parse output schema; ``header_batch(payload) -> (txid ndarray,
-    op pa.Array)``.  When installed they take precedence over the
-    per-message forms in the make_* factories.  Call BEFORE building the
-    query plan — bodies already built keep the decoder they closed over."""
-    for key, fn in (("full", full), ("header", header),
-                    ("full_batch", full_batch),
-                    ("header_batch", header_batch)):
-        if fn is None:
-            _FAST_DECODERS.pop(key, None)
-        else:
-            _FAST_DECODERS[key] = fn
+    every_row = None, np.arange(len(payload))
+    if so_path is None:
+        return every_row
+    try:
+        # Spark hands large_binary under
+        # spark.sql.execution.arrow.useLargeVarTypes
+        payload = payload.cast(pa.binary())
+    except pa.ArrowInvalid:  # 2 GiB or more: past int32 offsets
+        return every_row
+    try:
+        return decode_batch_native(so_path, payload, headers_only)
+    except NativeUtf8Error:
+        return every_row
 
 
-def resolve_decoders():
-    """(full, header) decoder pair currently installed."""
-    return (
-        _FAST_DECODERS.get("full", decode_row_message),
-        _FAST_DECODERS.get("header", decode_row_header),
+def _events_batch(lsn: pa.Array, events: list[dict]) -> pa.RecordBatch:
+    """Python-codec events -> a RecordBatch in the parse output schema."""
+    from .parse import _CHANGE_T, _MAP_T, _OUT_ARROW_SCHEMA, _TYPEINFO_T
+
+    return pa.RecordBatch.from_arrays(
+        [
+            lsn,
+            pa.array([e["txid"] for e in events], pa.int64()),
+            pa.array([e["seq"] for e in events], pa.int32()),
+            pa.array([e["ct"] for e in events], pa.int64()),
+            pa.array([e["op"] for e in events], pa.string()),
+            pa.array([e["table"] for e in events], pa.string()),
+            pa.array([e["new"] for e in events], _MAP_T),
+            pa.array([e["old"] for e in events], _MAP_T),
+            pa.array([e["change"] for e in events], _CHANGE_T),
+            pa.array([e["typeinfo"] for e in events], _TYPEINFO_T),
+        ],
+        schema=_OUT_ARROW_SCHEMA,
     )
 
 
-def active_decoder() -> str:
-    """Provenance of the decoder the NEXT proto plan will close over:
-    ``"native"`` (the C batch decoder) or ``"python"`` (pure-Python codec).
-    Resolves the default first, so a silent compile failure can never
-    masquerade as a native-decoder measurement (r5 verdict ask #1b) —
-    replay() records this in its run metrics for proto-wire logs."""
-    ensure_native_default()
-    return "native" if "full_batch" in _FAST_DECODERS else "python"
-
-
-_NATIVE_TRIED = False
-
-
-def ensure_native_default() -> None:
-    """Best-effort default: when NO decoder has been explicitly installed,
-    compile (cached) + install the first-party C batch decoder
-    (proto_native.py) once per process.  Explicit set_fast_decoders calls
-    always win — installing a per-message decoder pops the batch keys, so
-    a test or user override is never shadowed.  No compiler -> silently
-    stays on the pure-Python codec."""
-    global _NATIVE_TRIED
-    if _FAST_DECODERS or _NATIVE_TRIED:
-        return
-    _NATIVE_TRIED = True
-    from .proto_native import try_enable_native_proto
-
-    try_enable_native_proto()
-
-
-# ---------------------------------------------------------------------------
-# Arrow-batch decode (the mapInArrow bodies for parse mode 'proto');
-# factories resolve the fast-decoder seam at build time (see above)
-# ---------------------------------------------------------------------------
-def make_proto_batches():
-    ensure_native_default()
-    fb = _FAST_DECODERS.get("full_batch")
-    if fb is not None:
-        def proto_batches_fast(
-            batches: Iterator[pa.RecordBatch],
-        ) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                yield fb(batch.column("lsn"), batch.column("payload"))
-
-        return proto_batches_fast
-    decode = resolve_decoders()[0]
+def decode_full_batch(so_path: str | None, lsn: pa.Array,
+                      payload: pa.Array) -> pa.RecordBatch:
+    """(lsn, payload) -> a RecordBatch in the parse output schema.  The C
+    decoder takes the batch; the rows it flags (or all of them, see
+    ``_native_columns``) are re-decoded with ``decode_row_message`` and
+    spliced back by position."""
     from .parse import _CHANGE_T, _MAP_T, _OUT_ARROW_SCHEMA, _TYPEINFO_T
+
+    lsn = lsn.cast(pa.int64())
+    n = len(payload)
+    cols, slow_idx = _native_columns(so_path, payload)
+    if cols is not None:
+        fast = pa.RecordBatch.from_arrays(
+            [
+                lsn, cols["txid"], pa.array(np.zeros(n, np.int32)),
+                cols["ct"], cols["op"], cols["table"],
+                cols["new"].cast(_MAP_T), cols["old"].cast(_MAP_T),
+                pa.nulls(n, _CHANGE_T), pa.nulls(n, _TYPEINFO_T),
+            ],
+            schema=_OUT_ARROW_SCHEMA,
+        )
+        if len(slow_idx) == 0:
+            return fast
+    events = [decode_row_message(p)
+              for p in payload.take(slow_idx).to_pylist()]
+    slow = _events_batch(lsn.take(slow_idx), events)
+    if cols is None:
+        return slow
+    fast_idx = np.setdiff1d(np.arange(n), slow_idx)
+    merged = pa.Table.from_batches([fast.take(fast_idx), slow])
+    order = np.argsort(np.concatenate([fast_idx, slow_idx]), kind="stable")
+    return merged.take(order).combine_chunks().to_batches()[0]
+
+
+def decode_header_batch(so_path: str | None,
+                        payload: pa.Array) -> tuple[pa.Array, pa.Array]:
+    """payload -> (txid int64, op string) arrays.  The C decoder runs in
+    headers-only mode (datum bodies length-skipped); flagged rows go
+    through ``decode_row_header``."""
+    cols, slow_idx = _native_columns(so_path, payload, headers_only=True)
+    if cols is not None and len(slow_idx) == 0:
+        return cols["txid"], cols["op"]
+    n = len(payload)
+    txid = cols["txid"].to_pylist() if cols is not None else [None] * n
+    ops = cols["op"].to_pylist() if cols is not None else ["?"] * n
+    for i, p in zip(slow_idx, payload.take(slow_idx).to_pylist()):
+        txid[i], ops[i] = decode_row_header(p)
+    return pa.array(txid, pa.int64()), pa.array(ops, pa.string())
+
+
+def make_proto_batches():
+    """(lsn, payload) -> the parse output schema, one call per batch."""
+    so_path, _ = native_decoder()
 
     def proto_batches(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            lsn = batch.column("lsn")
-            events = [decode(p) for p in batch.column("payload").to_pylist()]
-            arrays = [
-                lsn.cast(pa.int64()),
-                pa.array([e["txid"] for e in events], pa.int64()),
-                pa.array([e["seq"] for e in events], pa.int32()),
-                pa.array([e["ct"] for e in events], pa.int64()),
-                pa.array([e["op"] for e in events], pa.string()),
-                pa.array([e["table"] for e in events], pa.string()),
-                pa.array([e["new"] for e in events], _MAP_T),
-                pa.array([e["old"] for e in events], _MAP_T),
-                pa.array([e["change"] for e in events], _CHANGE_T),
-                pa.array([e["typeinfo"] for e in events], _TYPEINFO_T),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=_OUT_ARROW_SCHEMA)
+            yield decode_full_batch(so_path, batch.column("lsn"),
+                                    batch.column("payload"))
 
     return proto_batches
 
 
 def make_proto_marker_batches():
     """(lsn, payload) -> (lsn, txid, op) via the header-only decode."""
-    ensure_native_default()
-    hb = _FAST_DECODERS.get("header_batch")
-    if hb is not None:
-        def proto_marker_batches_fast(
-            batches: Iterator[pa.RecordBatch],
-        ) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                txid, ops = hb(batch.column("payload"))
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column("lsn").cast(pa.int64()), txid, ops],
-                    names=["lsn", "txid", "op"],
-                )
-
-        return proto_marker_batches_fast
-    decode_hdr = resolve_decoders()[1]
+    so_path, _ = native_decoder()
 
     def proto_marker_batches(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            hdrs = [
-                decode_hdr(bytes(p))
-                for p in batch.column("payload").to_pylist()
-            ]
+            txid, ops = decode_header_batch(so_path, batch.column("payload"))
             yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("lsn").cast(pa.int64()),
-                    pa.array([h[0] for h in hdrs], pa.int64()),
-                    pa.array([h[1] for h in hdrs], pa.string()),
-                ],
+                [batch.column("lsn").cast(pa.int64()), txid, ops],
                 names=["lsn", "txid", "op"],
             )
 
@@ -549,38 +549,17 @@ def make_proto_tagged_batches():
     """(lsn, payload) -> (lsn, payload, txid): the streaming path's txid
     tagging for protobuf-wire logs (the JSON wire uses a JVM-side
     get_json_object; binary payloads need the header decode)."""
-    ensure_native_default()
-    hb = _FAST_DECODERS.get("header_batch")
-    if hb is not None:
-        def proto_tagged_batches_fast(
-            batches: Iterator[pa.RecordBatch],
-        ) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                txid, _ops = hb(batch.column("payload"))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column("lsn").cast(pa.int64()),
-                        batch.column("payload").cast(pa.binary()),
-                        txid,
-                    ],
-                    names=["lsn", "payload", "txid"],
-                )
-
-        return proto_tagged_batches_fast
-    decode_hdr = resolve_decoders()[1]
+    so_path, _ = native_decoder()
 
     def proto_tagged_batches(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             pl = batch.column("payload")
-            txids = [decode_hdr(bytes(p))[0] for p in pl.to_pylist()]
+            txid, _ops = decode_header_batch(so_path, pl)
             yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("lsn").cast(pa.int64()),
-                    pl.cast(pa.binary()),
-                    pa.array(txids, pa.int64()),
-                ],
+                [batch.column("lsn").cast(pa.int64()), pl.cast(pa.binary()),
+                 txid],
                 names=["lsn", "payload", "txid"],
             )
 

@@ -1,12 +1,10 @@
-"""C-speed decoderbufs RowMessage batch decoder (the fast-proto seam's
-first-party implementation).
+"""The C batch decoder for decoderbufs RowMessage payloads.
 
-The pure-Python codec in ``proto.py`` is the floor: one Python loop per
-message (honest r3/r4 perf_weak).  This module compiles a ~300-line C
-translation unit AT RUNTIME with the system C compiler (cc -O2 -shared),
-loads it via ctypes, and decodes one WHOLE ARROW BATCH per C call into
-columnar outputs (struct-of-arrays + string arenas) that pyarrow assembles
-zero-loop into the same schema ``proto.make_proto_batches`` produces.
+This module compiles a ~300-line C translation unit at runtime with the
+system C compiler (cc -O2 -shared), loads it via ctypes, and decodes one
+whole Arrow batch per C call into columnar outputs (struct-of-arrays +
+string arenas) that pyarrow assembles without a per-row loop.  The batch
+bodies in ``proto.py`` are its only callers; they also own the fallback.
 
 Scope split (keeps the C trivially verifiable):
 
@@ -15,20 +13,16 @@ Scope split (keeps the C trivially verifiable):
   every datum kind whose canonical text rendering is trivially
   byte-identical to the Python codec.
 * Messages containing float/double/point datums, ``new_typeinfo``, or the
-  R-convention (op<0) are FLAGGED and re-decoded by the pure-Python codec
-  (Python's shortest-roundtrip float repr has no 5-line C equivalent, and
-  those rows are rare: schema events + exotic typed columns).  The two
-  paths are spliced by position, so output order is exact.
+  R-convention (op<0) are FLAGGED; the caller re-decodes them with the
+  pure-Python codec (Python's shortest-roundtrip float repr has no 5-line
+  C equivalent, and those rows are rare: schema events + exotic typed
+  columns) and splices them back by position.
 
 Executor story: the .so is compiled ONCE driver-side into a shared cache
 dir; the closure shipped to executors carries only the PATH + pure-Python
 wrapper code (ctypes handles are process-local and lazily dlopen'd), which
 is exactly right for local[N] and for clusters whose nodes share the
 artifact path (ship it with --files otherwise).
-
-Install with :func:`enable_native_proto` (or let ``parse_events``'s proto
-mode auto-enable it, falling back silently to pure Python when no C
-compiler exists).
 """
 
 from __future__ import annotations
@@ -339,12 +333,13 @@ class NativeUtf8Error(RuntimeError):
     Python."""
 
 
-def decode_batch_native(so_path: str, payload, lsn=None,
-                        headers_only: bool = False):
-    """Decode one pyarrow binary array of RowMessage payloads via the C
+def decode_batch_native(so_path: str, payload, headers_only: bool = False):
+    """Decode one pyarrow ``binary`` array of RowMessage payloads via the C
     library; returns the columnar pieces.  Pure numpy/pyarrow assembly —
     the only per-row Python runs over the (rare) flagged rows, which the
     CALLER re-decodes with the pure-Python codec and splices by position.
+    Any other array type (``large_binary`` has int64 offsets) raises
+    TypeError rather than being misread.
 
     ``headers_only`` skips ALL datum work C-side (fields 5/6 are
     length-skipped): the marker/tagging paths need only (txid, op).
@@ -357,17 +352,14 @@ def decode_batch_native(so_path: str, payload, lsn=None,
     import pyarrow as pa
 
     arr = payload
+    if arr.type != pa.binary():
+        raise TypeError(f"the C decoder reads binary payloads, not {arr.type}")
     if arr.null_count:
         raise ValueError("null payloads unsupported")
-    # normalize to a zero-offset binary array view
-    if arr.offset != 0:
-        arr = arr.combine_chunks() if hasattr(arr, "combine_chunks") else arr
-        arr = pa.concat_arrays([arr])  # re-slices to offset 0
     bufs = arr.buffers()
+    # a sliced array starts arr.offset entries into its offsets buffer
     offsets = np.frombuffer(bufs[1], dtype=np.int32,
-                            count=len(arr) + 1 + arr.offset)
-    if arr.offset:
-        offsets = offsets[arr.offset:]
+                            count=len(arr) + 1 + arr.offset)[arr.offset:]
     data_buf = bufs[2]
     data = np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None \
         else np.zeros(1, dtype=np.uint8)
@@ -501,142 +493,3 @@ def decode_batch_native(so_path: str, payload, lsn=None,
         "old": old_maps,
     }
     return out, np.nonzero(needs)[0]
-
-
-def make_native_full_batch(so_path: str):
-    """Factory for the ``full_batch`` seam: (lsn, payload) arrow arrays ->
-    RecordBatch in proto.parse's output schema.  Rare flagged rows are
-    re-decoded with the pure-Python codec and spliced by position."""
-
-    def full_batch(lsn, payload):
-        import numpy as np
-        import pyarrow as pa
-
-        from .parse import _CHANGE_T, _MAP_T, _OUT_ARROW_SCHEMA, _TYPEINFO_T
-        from .proto import decode_row_message
-
-        try:
-            cols, slow_idx = decode_batch_native(so_path, payload)
-        except NativeUtf8Error:
-            # invalid UTF-8 somewhere in the batch: the python codec is the
-            # arbiter (it raises per message) — decode the whole batch there
-            cols, slow_idx = None, np.arange(len(payload))
-        n = len(payload)
-        if cols is None:
-            lsn_np = lsn.cast(pa.int64()).to_numpy(zero_copy_only=False)
-            events = [decode_row_message(p.as_py()) for p in payload]
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(lsn_np, pa.int64()),
-                    pa.array([e["txid"] for e in events], pa.int64()),
-                    pa.array([e["seq"] for e in events], pa.int32()),
-                    pa.array([e["ct"] for e in events], pa.int64()),
-                    pa.array([e["op"] for e in events], pa.string()),
-                    pa.array([e["table"] for e in events], pa.string()),
-                    pa.array([e["new"] for e in events], _MAP_T),
-                    pa.array([e["old"] for e in events], _MAP_T),
-                    pa.array([e["change"] for e in events], _CHANGE_T),
-                    pa.array([e["typeinfo"] for e in events], _TYPEINFO_T),
-                ],
-                schema=_OUT_ARROW_SCHEMA,
-            )
-        seq = pa.array(np.zeros(n, dtype=np.int32), pa.int32())
-        change = pa.nulls(n, _CHANGE_T)
-        typeinfo = pa.nulls(n, _TYPEINFO_T)
-        fast = pa.RecordBatch.from_arrays(
-            [
-                lsn.cast(pa.int64()), cols["txid"], seq, cols["ct"],
-                cols["op"], cols["table"],
-                cols["new"].cast(_MAP_T), cols["old"].cast(_MAP_T),
-                change, typeinfo,
-            ],
-            schema=_OUT_ARROW_SCHEMA,
-        )
-        if len(slow_idx) == 0:
-            return fast
-        # python-decode the flagged rows, splice by original position
-        lsn_np = lsn.cast(pa.int64()).to_numpy(zero_copy_only=False)
-        events = [
-            decode_row_message(payload[int(i)].as_py()) for i in slow_idx
-        ]
-        slow = pa.RecordBatch.from_arrays(
-            [
-                pa.array([int(lsn_np[i]) for i in slow_idx], pa.int64()),
-                pa.array([e["txid"] for e in events], pa.int64()),
-                pa.array([e["seq"] for e in events], pa.int32()),
-                pa.array([e["ct"] for e in events], pa.int64()),
-                pa.array([e["op"] for e in events], pa.string()),
-                pa.array([e["table"] for e in events], pa.string()),
-                pa.array([e["new"] for e in events], _MAP_T),
-                pa.array([e["old"] for e in events], _MAP_T),
-                pa.array([e["change"] for e in events], _CHANGE_T),
-                pa.array([e["typeinfo"] for e in events], _TYPEINFO_T),
-            ],
-            schema=_OUT_ARROW_SCHEMA,
-        )
-        fast_idx = np.setdiff1d(np.arange(n), slow_idx)
-        tbl = pa.Table.from_batches([fast]).take(fast_idx)
-        stbl = pa.Table.from_batches([slow])
-        merged = pa.concat_tables([tbl, stbl])
-        order = np.argsort(np.concatenate([fast_idx, slow_idx]),
-                           kind="stable")
-        return merged.take(order).combine_chunks().to_batches()[0]
-
-    return full_batch
-
-
-def make_native_header_batch(so_path: str):
-    """Factory for the ``header_batch`` seam: payload arrow array ->
-    (txid Int64 pa.Array — nullable, python-codec parity — and op string
-    pa.Array).  Uses the C decoder's headers_only mode: datum bodies are
-    length-skipped, never parsed."""
-
-    def header_batch(payload):
-        import pyarrow as pa
-
-        from .proto import decode_row_header
-
-        try:
-            cols, slow_idx = decode_batch_native(so_path, payload,
-                                                 headers_only=True)
-        except NativeUtf8Error:  # invalid utf8 in a TABLE name: go python
-            cols, slow_idx = None, range(len(payload))
-        if cols is None or len(slow_idx):
-            txid = (cols["txid"].to_pylist() if cols is not None
-                    else [None] * len(payload))
-            ops = (cols["op"].to_pylist() if cols is not None
-                   else ["?"] * len(payload))
-            for i in slow_idx:  # rare: R/typeinfo/malformed rows
-                t, o = decode_row_header(payload[int(i)].as_py())
-                txid[int(i)] = t
-                ops[int(i)] = o
-            return pa.array(txid, pa.int64()), pa.array(ops, pa.string())
-        return cols["txid"], cols["op"]
-
-    return header_batch
-
-
-def enable_native_proto(cache_dir: str | None = None) -> str:
-    """Compile (cached) + install the C batch decoders through the
-    fast-proto seam; returns the .so path.  Raises if no C compiler is
-    available — call sites that want best-effort use
-    :func:`try_enable_native_proto`."""
-    from . import proto
-
-    so_path = build_native_decoder(cache_dir)
-    proto.set_fast_decoders(
-        full_batch=make_native_full_batch(so_path),
-        header_batch=make_native_header_batch(so_path),
-    )
-    return so_path
-
-
-def try_enable_native_proto(cache_dir: str | None = None) -> str | None:
-    """Best-effort enable; returns the .so path or None (no compiler /
-    compile failure / disabled via LOGICALDECODING_NO_NATIVE_PROTO=1)."""
-    if os.environ.get("LOGICALDECODING_NO_NATIVE_PROTO") == "1":
-        return None
-    try:
-        return enable_native_proto(cache_dir)
-    except Exception:
-        return None

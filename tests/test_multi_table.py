@@ -143,7 +143,12 @@ def test_replay_multi_single_table_parity(spark, multi_log, tmp_path):
 
 def test_replay_multi_resolves_wire_like_replay(spark, multi_log, tmp_path):
     """replay and replay_multi share one wire resolver: asking for the
-    sidecar wire on a log without sidecar columns fails the same way."""
+    sidecar wire on a log without sidecar columns fails the same way, and
+    on the proto wire both record which decoder ran and why."""
+    import os
+
+    from logicaldecoding_spark.sources.proto import native_decoder
+
     log, _, _ = multi_log
     with pytest.raises(ValueError, match="tuple-sidecar") as single:
         replay(spark, log, str(tmp_path / "s"), parse_mode="sidecar")
@@ -151,6 +156,22 @@ def test_replay_multi_resolves_wire_like_replay(spark, multi_log, tmp_path):
         replay_multi(spark, log, {"repos": str(tmp_path / "m")},
                      parse_mode="sidecar")
     assert str(multi.value) == str(single.value)
+
+    proto_log = str(tmp_path / "wal_proto.parquet")
+    generate_log(proto_log, n_txns=30, n_repos=4, paths_per_repo=3,
+                 payload_format="proto")
+    single_run = replay(spark, proto_log, str(tmp_path / "ps"),
+                        parse_mode="proto", n_buckets=4)
+    multi_run = replay_multi(spark, proto_log, {"repos": str(tmp_path / "pm")},
+                             parse_mode="proto", n_buckets=4)
+    assert multi_run["wire"] == single_run["wire"]
+    so_path, reason = native_decoder()
+    assert single_run["wire"]["decoder"] == "native", single_run["wire"]
+    assert single_run["wire"]["decoder_reason"] == reason
+    assert reason == os.path.basename(so_path)
+    state, _ = replay_oracle(proto_log)
+    assert_converged(spark, str(tmp_path / "ps"), state)
+    assert_converged(spark, str(tmp_path / "pm"), state)
 
 
 def test_direct_slim_scan_on_auto(spark, multi_log, tmp_path, monkeypatch):

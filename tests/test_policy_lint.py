@@ -105,3 +105,17 @@ def test_no_per_row_loops_in_vectorized_udfs():
                 if idiom.search(body):
                     bad.append((p, idiom.pattern))
     assert not bad, f"per-row Python inside pandas UDF bodies: {bad}"
+
+
+OWN_PACKAGE_IMPORT = re.compile(
+    r"^\s*(?:from\s+\.|(?:from|import)\s+logicaldecoding_spark\b)", re.M)
+
+
+def test_package_inits_import_nothing_from_their_package():
+    """A package ``__init__`` that imports its own submodules can raise
+    ``_DeadlockError`` when two threads make their first imports of the
+    package at once; callers name the submodule instead."""
+    bad = [p for p, src in _sources()
+           if os.path.basename(p) == "__init__.py"
+           and OWN_PACKAGE_IMPORT.search(src)]
+    assert not bad, f"package __init__ imports from its own package: {bad}"

@@ -218,101 +218,21 @@ def test_new_typeinfo_surfaces_in_parse_events(spark):
         assert "new_typeinfo" in r.asDict() and r["new_typeinfo"] is None, mode
 
 
-def test_fast_decoder_seam_injects_through_all_paths(spark, tmp_path):
-    """The documented swap point for a C-speed protobuf runtime must
-    actually work (r4 ask #6): decoders installed via set_fast_decoders are
-    resolved driver-side by the make_* factories and shipped to executors
-    inside the task closure, so a fake fast decoder must be observable
-    through the full-parse, marker/header, streaming-tagging, and planning
-    paths — making google.protobuf/upb adoption a config call, not surgery."""
-    from pyspark.sql import functions as F
-
-    from logicaldecoding_spark.generator import SchemaChangeSpec, generate_log
-    from logicaldecoding_spark.plans.batches import plan_batches
-    from logicaldecoding_spark.sources import proto as P
-    from logicaldecoding_spark.sources.parse import parse_events, parse_markers
-
-    log = str(tmp_path / "wal_proto.parquet")
-    generate_log(
-        log, n_txns=40, n_repos=5, paths_per_repo=4,
-        schema_changes=[SchemaChangeSpec(at_txn=20, kind="add_column",
-                                         column="size", type="int")],
-        payload_format="proto",
-    )
-    raw = spark.read.parquet(log).select("lsn", "payload")
-    real_full, real_hdr = P.decode_row_message, P.decode_row_header
-
-    def fake_full(b):
-        ev = real_full(b)
-        if ev["op"] in ("I", "U", "D") and ev["new"] is not None:
-            ev["new"] = {**ev["new"], "__via__": "fast"}
-        return ev
-
-    def fake_hdr(b):
-        txid, op = real_hdr(b)
-        return (None if txid is None else txid + 1_000_000), op
-
-    try:
-        # executor-side full decode: every data event carries the fake's mark
-        P.set_fast_decoders(full=fake_full, header=fake_hdr)
-        parsed = parse_events(raw, mode="proto")
-        # D events carry no new-image: the mark lands on every row that HAS one
-        n = parsed.filter(
-            F.col("op").isin("I", "U", "D") & F.col("new_tuple").isNotNull()
-        ).count()
-        via = parsed.filter(
-            F.try_element_at("new_tuple", F.lit("__via__")) == "fast"
-        ).count()
-        assert n > 0 and via == n
-
-        # executor-side header decode: marker txids show the fake's offset
-        mk = parse_markers(raw, mode="proto")
-        assert mk.agg(F.min("txid")).collect()[0][0] >= 1_000_000
-
-        # streaming txid tagging uses the same header seam
-        tagged = raw.mapInArrow(
-            P.make_proto_tagged_batches(), "lsn long, payload binary, txid long"
-        )
-        assert tagged.agg(F.min("txid")).collect()[0][0] >= 1_000_000
-
-        # planning: driver-side R-candidate decode goes through the seam too
-        calls = {"full": 0}
-
-        def counting_full(b):
-            calls["full"] += 1
-            return real_full(b)
-
-        P.set_fast_decoders(full=counting_full, header=real_hdr)
-        plans = plan_batches(raw, target_data_batches=2, parse_mode="proto")
-        assert [p for p in plans if p.kind == "schema"]
-        assert calls["full"] > 0
-    finally:
-        P.set_fast_decoders()  # restore the pure-Python codec
-
-    # seam closed: behavior identical to the built-in decoder again
-    clean = parse_events(raw, mode="proto")
-    assert clean.filter(
-        F.try_element_at("new_tuple", F.lit("__via__")).isNotNull()
-    ).count() == 0
-
-
-def test_native_batch_decoder_matches_python_codec(spark, tmp_path):
-    """The compiled C batch decoder (proto_native, auto-installed through
-    the fast-proto seam) must reproduce the pure-Python codec EXACTLY —
-    including the rows it falls back on (R events, typeinfo,
-    float/double/point datums, spliced by position) and edge shapes
-    (missing datums -> absent keys, unicode, empty tuples, bytes->base64,
-    negative ints, null maps for markers)."""
+def test_native_batch_decoder_matches_python_codec():
+    """The compiled C batch decoder (proto_native) must reproduce the
+    pure-Python codec EXACTLY — including the rows it falls back on (R
+    events, typeinfo, float/double/point datums, spliced by position) and
+    edge shapes (missing datums -> absent keys, unicode, empty tuples,
+    bytes->base64, negative ints, null maps for markers)."""
     import pyarrow as pa
 
-    from logicaldecoding_spark.sources import proto as P
     from logicaldecoding_spark.sources.proto import (
+        decode_full_batch,
         decode_row_message,
         encode_row_message,
     )
     from logicaldecoding_spark.sources.proto_native import (
         build_native_decoder,
-        make_native_full_batch,
     )
 
     msgs = [
@@ -344,8 +264,11 @@ def test_native_batch_decoder_matches_python_codec(spark, tmp_path):
     ]
     payload = pa.array(msgs, pa.binary())
     lsn = pa.array(range(len(msgs)), pa.int64())
-    fb = make_native_full_batch(build_native_decoder())
-    got = fb(lsn, payload).to_pylist()
+    so_path = build_native_decoder()
+    got = decode_full_batch(so_path, lsn, payload).to_pylist()
+    # a sliced payload array is read from its offset, not from entry 0
+    assert decode_full_batch(so_path, lsn[3:], payload[3:]).to_pylist() \
+        == got[3:]
     for i, (g, m) in enumerate(zip(got, msgs)):
         e = decode_row_message(m)
         want_new = e["new"] and dict(e["new"])
@@ -362,42 +285,112 @@ def test_native_batch_decoder_matches_python_codec(spark, tmp_path):
         if e["typeinfo"]:
             assert [dict(t) for t in g["new_typeinfo"]] == e["typeinfo"], i
 
-    # executor-path equality on a generated log: identical parse output
-    # fingerprints with and without the native decoder
-    from pyspark.sql import functions as F
+
+def test_proto_paths_agree_with_and_without_native_decoder(
+        spark, tmp_path, monkeypatch):
+    """The full parse, the markers, the streaming txid tagging and the
+    planner give identical results whether the batch bodies close over the
+    compiled decoder or over no ``.so`` (every row through the Python
+    codec), on a generated log with an R event; the first run really
+    called the C decoder and the second never did.  Empty batches decode
+    to empty output either way."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from logicaldecoding_spark.generator import SchemaChangeSpec, generate_log
-    from logicaldecoding_spark.sources.parse import parse_events
+    from logicaldecoding_spark.plans.batches import plan_batches
+    from logicaldecoding_spark.sources import proto as P
+    from logicaldecoding_spark.sources import proto_native
+    from logicaldecoding_spark.sources.parse import parse_events, parse_markers
 
-    log = str(tmp_path / "w.parquet")
-    generate_log(log, n_txns=150, n_repos=10, paths_per_repo=5,
-                 schema_changes=[SchemaChangeSpec(70, "add_column",
-                                                  "size", "int")],
-                 payload_format="proto")
+    log = str(tmp_path / "wal_proto.parquet")
+    generate_log(
+        log, n_txns=60, n_repos=6, paths_per_repo=4,
+        schema_changes=[SchemaChangeSpec(at_txn=30, kind="add_column",
+                                         column="size", type="int")],
+        payload_format="proto",
+    )
     raw = spark.read.parquet(log).select("lsn", "payload")
+    arrow = pq.read_table(log, columns=["lsn", "payload"]).to_batches()
+    real = proto_native.decode_batch_native
 
-    def fingerprint():
-        return parse_events(raw, mode="proto").agg(
-            F.count("*"), F.sum("txid"), F.sum(F.crc32("op")),
-            F.sum(F.crc32(F.to_json(F.col("new_tuple")))),
-            F.sum(F.crc32(F.to_json(F.col("old_tuple")))),
-        ).collect()[0]
+    def run():
+        calls = []
 
-    import os
+        def spy(*a, **kw):
+            calls.append(1)
+            return real(*a, **kw)
 
-    P.set_fast_decoders()
-    P._NATIVE_TRIED = False
-    native = list(fingerprint())
-    os.environ["LOGICALDECODING_NO_NATIVE_PROTO"] = "1"
+        with monkeypatch.context() as m:
+            m.setattr(proto_native, "decode_batch_native", spy)
+            for make in (P.make_proto_batches, P.make_proto_marker_batches,
+                         P.make_proto_tagged_batches):
+                list(make()(iter(arrow)))
+        tagged = raw.mapInArrow(P.make_proto_tagged_batches(),
+                                "lsn long, payload binary, txid long")
+        return len(calls), [
+            parse_events(raw, mode="proto").orderBy("lsn").collect(),
+            parse_markers(raw, mode="proto").orderBy("lsn").collect(),
+            tagged.orderBy("lsn").collect(),
+            plan_batches(raw, target_data_batches=2, parse_mode="proto"),
+        ]
+
+    so_path, reason = P.native_decoder()
+    assert so_path is not None, reason
+    native_calls, native = run()
+    assert native_calls == 3 * len(arrow)
+    assert any(r["op"] == "R" for r in native[0])
+    assert [p for p in native[3] if p.kind == "schema"]
+
+    monkeypatch.setattr(P, "native_decoder", lambda: (None, "no C compiler"))
+    python_calls, python = run()
+    assert python_calls == 0
+    for i, (a, b) in enumerate(zip(native, python)):
+        assert a == b, i
+
+    empty = pa.array([], pa.binary())
+    for so in (so_path, None):
+        assert P.decode_full_batch(so, pa.array([], pa.int64()),
+                                   empty).num_rows == 0
+        assert [len(a) for a in P.decode_header_batch(so, empty)] == [0, 0]
+
+
+def test_proto_parse_reads_large_binary_payloads(spark):
+    """Under spark.sql.execution.arrow.useLargeVarTypes mapInArrow hands
+    the payload column over as large_binary (int64 offsets); the full
+    parse and the markers still equal the Python codec row for row."""
+    from logicaldecoding_spark.sources.parse import parse_events, parse_markers
+    from logicaldecoding_spark.sources.proto import decode_row_header
+
+    payloads = [
+        encode_row_message(txid=5, commit_time_us=50, op="B"),
+        encode_row_message(txid=5, commit_time_us=50, op="I", table="repos",
+                           new={"repo": "r", "path": "p", "content": "x"}),
+        encode_row_message(txid=5, commit_time_us=50, op="U", table="repos",
+                           new={"repo": "r", "path": "p", "content": "y"},
+                           old={"repo": "r", "path": "p"}),
+        encode_row_message(txid=5, commit_time_us=50, op="D", table="repos",
+                           old={"repo": "r", "path": "p"}),
+        encode_row_message(txid=5, commit_time_us=50, op="C"),
+    ]
+    raw = spark.createDataFrame(
+        [(i + 1, p) for i, p in enumerate(payloads)], "lsn long, payload binary"
+    )
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    prev = spark.conf.get(conf, "false")
+    spark.conf.set(conf, "true")
     try:
-        P.set_fast_decoders()
-        P._NATIVE_TRIED = False
-        pure = list(fingerprint())
+        events = parse_events(raw, mode="proto").orderBy("lsn").collect()
+        markers = parse_markers(raw, mode="proto").orderBy("lsn").collect()
     finally:
-        del os.environ["LOGICALDECODING_NO_NATIVE_PROTO"]
-        P.set_fast_decoders()
-        P._NATIVE_TRIED = False
-    assert native == pure
+        spark.conf.set(conf, prev)
+    assert len(events) == len(markers) == len(payloads)
+    for r, m, p in zip(events, markers, payloads):
+        e = decode_row_message(p)
+        assert (r["txid"], r["commit_time_us"], r["op"], r["table"]) == (
+            e["txid"], e["ct"], e["op"], e["table"])
+        assert r["new_tuple"] == e["new"] and r["old_tuple"] == e["old"]
+        assert (m["txid"], m["op"]) == decode_row_header(p)
 
 
 if _HAVE_HYP:
@@ -424,9 +417,9 @@ if _HAVE_HYP:
         datums, markers, absent tables)."""
         import pyarrow as pa
 
+        from logicaldecoding_spark.sources.proto import decode_full_batch
         from logicaldecoding_spark.sources.proto_native import (
             build_native_decoder,
-            make_native_full_batch,
         )
 
         msgs = []
@@ -437,9 +430,9 @@ if _HAVE_HYP:
                 txid=txid, commit_time_us=ct, op=op, table=table,
                 new=new, old=old,
             ))
-        fb = make_native_full_batch(build_native_decoder())
-        got = fb(pa.array(range(len(msgs)), pa.int64()),
-                 pa.array(msgs, pa.binary())).to_pylist()
+        got = decode_full_batch(build_native_decoder(),
+                                pa.array(range(len(msgs)), pa.int64()),
+                                pa.array(msgs, pa.binary())).to_pylist()
         for i, m in enumerate(msgs):
             e = decode_row_message(m)
             g = got[i]
@@ -460,10 +453,14 @@ def test_native_decoder_rejects_invalid_utf8_like_python():
     import pyarrow as pa
     import pytest as _pytest
 
-    from logicaldecoding_spark.sources.proto import _ld, _tag, _uvarint
+    from logicaldecoding_spark.sources.proto import (
+        _ld,
+        _tag,
+        _uvarint,
+        decode_full_batch,
+    )
     from logicaldecoding_spark.sources.proto_native import (
         build_native_decoder,
-        make_native_full_batch,
     )
 
     # hand-encode: RowMessage{txid=1, op=I, new_tuple=[{name:'k',
@@ -473,9 +470,9 @@ def test_native_decoder_rejects_invalid_utf8_like_python():
            + _ld(3, b"t") + _ld(5, datum))
     with _pytest.raises(UnicodeDecodeError):
         decode_row_message(msg)
-    fb = make_native_full_batch(build_native_decoder())
     with _pytest.raises(UnicodeDecodeError):
-        fb(pa.array([1], pa.int64()), pa.array([msg], pa.binary()))
+        decode_full_batch(build_native_decoder(), pa.array([1], pa.int64()),
+                          pa.array([msg], pa.binary()))
 
 
 def test_generate_log_syncs_only_its_own_files(tmp_path, monkeypatch):
