@@ -266,10 +266,12 @@ def _stamped_events(spark, sf):
     then ``monotonically_increasing_id`` yields (partition_id << 33 | row
     ordinal); one tiny per-partition count aggregate gives each partition's
     global offset, so ``offset[pid] + ordinal + 1`` IS the global row
-    number.  The ranged frame is persisted before the count so both jobs
-    see one materialization (range-sampling boundaries are otherwise free
-    to differ between jobs).  The count doubles as the n=count(*) the
-    callers all need, saving their separate count job."""
+    number.  The ranged frame is checkpointed (eagerly, lineage cut) before
+    the count so both jobs see one materialization: a persisted frame whose
+    blocks are evicted would be recomputed with freshly sampled range
+    bounds, silently shifting rows away from the offsets already counted.
+    The count doubles as the n=count(*) the callers all need, saving their
+    separate count job."""
     if sf in _SEQ_CACHE:
         return _SEQ_CACHE[sf]
     ev = _t(spark, sf, "events").select(
@@ -280,7 +282,7 @@ def _stamped_events(spark, sf):
         ev.repartitionByRange(nparts, "ts", "event_id")
         .sortWithinPartitions("ts", "event_id")
         .withColumn("_mid", F.monotonically_increasing_id())
-        .persist()
+        .localCheckpoint(eager=True)
     )
     pid = F.shiftright("_mid", 33)
     counts = sorted(

@@ -47,7 +47,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.compression.codec", "snappy")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -141,6 +141,12 @@ STATS_MAX_STR = 64
 
 _PRUNE_OPS = frozenset({"=", "<", "<=", ">", ">=", "in"})
 
+# codec of every lake data file (COW merges, MoR deltas, compaction, MV
+# refreshes all write through write_data_files).  zstd entropy-codes the hex
+# commit SHAs and repetitive text that snappy's LZ pass cannot; readers
+# decode per file, so tables holding older snappy files stay readable.
+DATA_FILE_CODEC = "zstd"
+
 # commits at or below these bounds stat their written files' footers on the
 # DRIVER instead of launching a distributed mapInPandas job: a handful of
 # small files costs milliseconds of local footer reads, while a Spark job
@@ -1383,7 +1389,7 @@ class LakeTable:
         out_dir = os.path.join(self.path, batch_dir_rel)
         writer = (
             result.write.mode("overwrite")
-            .option("compression", "snappy")
+            .option("compression", DATA_FILE_CODEC)
             .partitionBy("_bucket")
         )
         if max_rows_per_file:
@@ -1851,7 +1857,7 @@ class LakeTable:
         (/root/reference/src/types/tenant/mod.rs:33-39); ``lookup`` is the
         ``retrieve_many`` (:41-48) analog.
 
-        Serving path: when stats+bloom pruning leaves at most
+        Serving path: when bucket, stats and bloom pruning leave at most
         ``RETRIEVE_DRIVER_MAX_FILES`` small files, the driver reads them
         directly with pyarrow (filtered, MoR-reconciled by the same
         winner rule as ``read``) — a point read then costs milliseconds,
@@ -1929,25 +1935,23 @@ class LakeTable:
                     return True
             return False
 
-        entries = prune_manifest_entries(
-            meta["snapshot"]["manifest"], _refuted,
-            self.partition_specs(meta),
-        )
-        # bucket pruning without a Spark job: the driver-side XXH64 twin of
-        # bucket_expr (parity pinned by test) gives the key's current-spec
-        # bucket; per-spec mapping mirrors read(buckets=[...])
+        # bucket pruning first, without a Spark job: the driver-side XXH64
+        # twin of bucket_expr (parity pinned by test) gives the key's bucket
+        # under each spec, as read(buckets=[...]) maps them.  Entries in
+        # other buckets cannot hold any version of an equality key, so only
+        # the key's own entries pay the stats and bloom probes.
         from .xxh64 import spark_xxhash64
 
+        specs = self.partition_specs(meta)
         h = spark_xxhash64(
             [kv[c] for c in pk], [by_name[c].type for c in pk]
         )
-        want_by_spec = {
-            sid: h % n_s for sid, n_s in self.partition_specs(meta).items()
-        }
-        entries = [
-            m for m in entries
-            if m["bucket"] == want_by_spec.get(m.get("spec_id", 0))
-        ]
+        want_by_spec = {sid: h % n_s for sid, n_s in specs.items()}
+        entries = prune_manifest_entries(
+            [m for m in meta["snapshot"]["manifest"]
+             if m["bucket"] == want_by_spec.get(m.get("spec_id", 0))],
+            _refuted, specs,
+        )
         if not entries:
             return None  # provably absent: pruning is exact for equality
         if len(entries) > RETRIEVE_DRIVER_MAX_FILES:

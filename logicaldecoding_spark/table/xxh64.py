@@ -138,8 +138,3 @@ def spark_xxhash64(values, types, seed: int = 42) -> int:
             raise ValueError(f"unhashable type {t!r} for spark_xxhash64")
     return h - (1 << 64) if h >= (1 << 63) else h
 
-
-def bucket_of(values, types, n_buckets: int, seed: int = 42) -> int:
-    """``pmod(xxhash64(pk...), n_buckets)`` — the bucket Spark's
-    ``bucket_expr`` assigns the same key."""
-    return spark_xxhash64(values, types, seed) % n_buckets

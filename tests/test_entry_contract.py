@@ -92,3 +92,42 @@ def test_query_matches_oracle(spark, ddb, name):
     b = _norm_rows(dcols, dpdf.itertuples(index=False, name=None))
     mismatches = [(x, y) for x, y in zip(a, b) if x != y][:5]
     assert a == b, f"{name}: value mismatch, first diffs: {mismatches}"
+
+
+def test_stamped_events_survive_block_eviction(spark, tmp_path):
+    """The ``lsn`` stamp counts rows per range partition in one job and
+    consumes them in another.  Evicting every cached block in between, with
+    range sampling changed so a recompute would draw different bounds, must
+    still yield the contiguous ``1..n`` in ``(ts, event_id)`` order."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(5)
+    n = 4000
+    ev = pd.DataFrame({
+        "user_id": [rng.randrange(50) for _ in range(n)],
+        "event_type": [rng.choice("abc") for _ in range(n)],
+        "value": [rng.random() for _ in range(n)],
+        "ts": pd.to_datetime(
+            [rng.randrange(10**6) for _ in range(n)], unit="s"),
+        "event_id": rng.sample(range(10 * n), n),
+    })
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    ev.to_parquet(f"{sf}/events.parquet", index=False,
+                  coerce_timestamps="us", allow_truncated_timestamps=True)
+
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    before = spark.conf.get(key)
+    seq, count = entry_mod._stamped_events(spark, sf)
+    try:
+        spark.catalog.clearCache()
+        spark.conf.set(key, "1")
+        got = {r["txid"]: r["lsn"] for r in seq.select("txid", "lsn").collect()}
+    finally:
+        spark.conf.set(key, before)
+        entry_mod._SEQ_CACHE.pop(sf, None)
+    order = ev.sort_values(["ts", "event_id"])["event_id"].tolist()
+    assert count == n
+    assert got == {eid: i + 1 for i, eid in enumerate(order)}

@@ -181,3 +181,75 @@ def test_small_commit_driver_stats_match_distributed(spark, tmp_path,
         key=lambda m: m["bucket"],
     )
     assert strip(m_driver) == strip(m_spark)
+
+
+def test_retrieve_probes_only_the_keys_bucket_across_specs(spark, tmp_path,
+                                                          monkeypatch):
+    """A point read filters the manifest to the key's bucket (under each
+    live partition spec) before any stats or bloom probe: entries in other
+    buckets cannot hold a version of an equality key.  On a MoR table whose
+    spec grew while deltas were live, old-spec and new-spec entries both
+    exist, and the fast path must still agree with ``lookup()``."""
+    import logicaldecoding_spark.table.format as fmt
+
+    t = LakeTable.create(str(tmp_path / "t"), REPOS_INITIAL_SCHEMA,
+                         n_buckets=4)
+    merge_into(spark, t, _c(spark, [
+        (f"r{i}", f"p{i}", "c1", "py", f"x{i}", "I", i + 1, 0, 1)
+        for i in range(40)
+    ]), applied_upto_lsn=40, batch_id=0)
+    merge_into(spark, t, _c(spark, [
+        (f"r{i}", f"p{i}", "c2", "py", f"y{i}", "U", 100 + i, 0, 2)
+        for i in range(10)
+    ] + [(f"r{i}", f"p{i}", None, None, None, "D", 120 + i, 0, 2)
+         for i in (20, 21)]), applied_upto_lsn=130, batch_id=1, mode="mor")
+    t.evolve_partition_spec(16)
+    merge_into(spark, t, _c(spark, [
+        (f"r{i}", f"p{i}", "c3", "py", f"z{i}", "U", 200 + i, 0, 3)
+        for i in (0, 1, 20, 30)
+    ]), applied_upto_lsn=230, batch_id=2, mode="mor")
+    manifest = t.metadata()["snapshot"]["manifest"]
+    specs = t.partition_specs()
+    assert {m.get("spec_id", 0) for m in manifest} == set(specs) == {0, 1}
+    assert {m.get("content", "base") for m in manifest} == {"base", "delta"}
+
+    keys = [(f"r{i}", f"p{i}") for i in range(40)] \
+        + [("nope", "p0"), ("r1", "nope"), ("r99", "p99")]
+    kdf = spark.createDataFrame(keys, "repo string, path string")
+    want_bucket = {
+        (r["repo"], r["path"]): {0: r["b0"], 1: r["b1"]}
+        for r in kdf.select(
+            "repo", "path",
+            fmt.bucket_expr(specs[0]).alias("b0"),
+            fmt.bucket_expr(specs[1]).alias("b1"),
+        ).collect()
+    }
+
+    probed: list[str] = []
+    real = fmt.entry_refutes
+
+    def counting(entry, *a, **kw):
+        probed.append(entry["path"])
+        return real(entry, *a, **kw)
+
+    monkeypatch.setattr(fmt, "entry_refutes", counting)
+    for key in keys:
+        in_bucket = {
+            m["path"] for m in manifest
+            if m["bucket"] == want_bucket[key][m.get("spec_id", 0)]
+        }
+        probed.clear()
+        fast = t._retrieve_driver(key)
+        assert set(probed) <= in_bucket, key
+        assert len(probed) <= len(t.pk) * len(in_bucket), key
+        assert fast is not _RETRIEVE_FALLBACK, key
+        slow = t.lookup(spark, [key]).collect()
+        slow = slow[0] if slow else None
+        assert (fast is None) == (slow is None), key
+        if fast is not None:
+            assert fast.asDict() == slow.asDict(), key
+    assert t._retrieve_driver(("r0", "p0"))["content"] == "z0"
+    assert t._retrieve_driver(("r20", "p20"))["content"] == "z20"
+    assert t._retrieve_driver(("r21", "p21")) is None
+    assert t._retrieve_driver(("r5", "p5"))["content"] == "y5"
+    assert t._retrieve_driver(("r35", "p35"))["content"] == "x35"

@@ -5,6 +5,7 @@ input_hint mandates vectorized pandas/Arrow UDFs only — no per-row Python
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -119,3 +120,42 @@ def test_package_inits_import_nothing_from_their_package():
            if os.path.basename(p) == "__init__.py"
            and OWN_PACKAGE_IMPORT.search(src)]
     assert not bad, f"package __init__ imports from its own package: {bad}"
+
+
+ENTRY = os.path.join(os.path.dirname(PKG), "__spark_entry__.py")
+
+
+def _chain_ends_in_local_checkpoint(stmt: ast.stmt) -> bool:
+    value = getattr(stmt, "value", None)
+    return (isinstance(value, ast.Call)
+            and isinstance(value.func, ast.Attribute)
+            and value.func.attr == "localCheckpoint")
+
+
+def test_monotonic_ids_are_checkpointed():
+    """``monotonically_increasing_id`` depends on the partitioning it runs
+    over, so a frame that carries it must be checkpointed, never merely
+    persisted: evicted blocks would be recomputed over a different
+    partitioning (e.g. freshly sampled range bounds) and the ids would
+    silently change.  Every statement that calls it must be one chain that
+    ends in ``localCheckpoint(...)``."""
+    with open(ENTRY) as f:
+        sources = [*_sources(), (ENTRY, f.read())]
+    bad = []
+    for p, src in sources:
+        for stmt in ast.walk(ast.parse(src)):
+            # simple statements only: a compound one holds its body's calls
+            if not isinstance(stmt, ast.stmt) or hasattr(stmt, "body") \
+                    or hasattr(stmt, "cases"):
+                continue
+            calls = any(
+                isinstance(n, ast.Call) and (
+                    getattr(n.func, "attr", None)
+                    or getattr(n.func, "id", None)
+                ) == "monotonically_increasing_id"
+                for n in ast.walk(stmt)
+            )
+            if calls and not _chain_ends_in_local_checkpoint(stmt):
+                bad.append(f"{os.path.relpath(p, os.path.dirname(PKG))}"
+                           f":{stmt.lineno}")
+    assert not bad, f"monotonically_increasing_id not checkpointed: {bad}"
