@@ -4,9 +4,11 @@ Isolates the pieces the driver's bench times as single numbers, so the
 optimization evidence in OPTIMIZATION_r06.md can cite per-stage costs:
  - mv_incremental_agg stage breakdown (lake build / MV create / refreshes)
  - per-query noop-sink timings (guide §1.4) for any queries() entry
+ - retrieve() point-read latency on one lake table, cold and warm
 Usage:
   python bench_extra.py mv [sf_dir]
   python bench_extra.py noop q1_pricing_summary dedup_minhash ... [--sf dir]
+  python bench_extra.py lookup <table> [--keys N]
 """
 from __future__ import annotations
 
@@ -89,6 +91,47 @@ def noop(names: list[str], sf_dir: str) -> None:
     spark.stop()
 
 
+def lookup(table: str, n_keys: int) -> None:
+    """retrieve() p50/p90 over ``n_keys`` sampled live keys: each cold read
+    on a freshly loaded handle, each warm read on one handle that has read
+    every key once.  Every result is checked against a full table read."""
+    import json
+    import random
+    import statistics
+
+    from logicaldecoding_spark.table.format import LakeTable
+
+    spark = _spark()
+    spark.sparkContext.setLogLevel("WARN")
+    pk = LakeTable.load(table).pk
+    rows = {tuple(r[c] for c in pk): r.asDict()
+            for r in LakeTable.load(table).read(spark).collect()}
+    keys = random.Random(0).sample(sorted(rows), min(n_keys, len(rows)))
+    wrong = 0
+
+    def timed(handle, key):
+        nonlocal wrong
+        t0 = time.perf_counter()
+        got = handle.retrieve(spark, key)
+        ms = (time.perf_counter() - t0) * 1e3
+        wrong += got is None or got.asDict() != rows[key]
+        return ms
+
+    def summary(ms):
+        return {"p50_ms": round(statistics.median(ms), 3),
+                "p90_ms": round(statistics.quantiles(ms, n=10)[-1], 3)}
+
+    cold = [timed(LakeTable.load(table), k) for k in keys]
+    warm_handle = LakeTable.load(table)
+    for k in keys:
+        warm_handle.retrieve(spark, k)
+    warm = [timed(warm_handle, k) for k in keys]
+    print(json.dumps({"keys": len(keys), "wrong": wrong,
+                      "cold": summary(cold), "warm": summary(warm),
+                      "retrieve_stats": warm_handle.retrieve_stats}))
+    spark.stop()
+
+
 if __name__ == "__main__":
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -96,5 +139,9 @@ if __name__ == "__main__":
         mv_breakdown(args[1] if len(args) > 1 else sf)
     elif args and args[0] == "noop":
         noop(args[1:], sf)
+    elif len(args) > 1 and args[0] == "lookup":
+        argv = sys.argv[2:]  # <table> [--keys N]
+        lookup(argv[0], int(argv[argv.index("--keys") + 1])
+               if "--keys" in argv else 200)
     else:
         print(__doc__)
