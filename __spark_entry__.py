@@ -272,6 +272,8 @@ def _stamped_events(spark, sf):
     bounds, silently shifting rows away from the offsets already counted.
     The count doubles as the n=count(*) the callers all need, saving their
     separate count job."""
+    from logicaldecoding_spark.session import local_frame
+
     if sf in _SEQ_CACHE:
         return _SEQ_CACHE[sf]
     ev = _t(spark, sf, "events").select(
@@ -295,7 +297,7 @@ def _stamped_events(spark, sf):
     for r in counts:
         offsets.append((r["_pid"], acc))
         acc += r["_n"]
-    off_df = spark.createDataFrame(offsets, "_pid long, _off long")
+    off_df = local_frame(spark, offsets, "_pid long, _off long")
     seq = (
         base.withColumn("_pid", pid)
         .join(F.broadcast(off_df), "_pid")
@@ -413,9 +415,12 @@ def _q_lake_meta_agg(spark, sf):
     from manifest footer stats with ZERO Spark jobs — ``spark=None`` in the
     agg_stats call is the proof (any scan would raise).  The oracle
     recomputes the same numbers from the raw events the long way."""
+    from logicaldecoding_spark.session import local_frame
+
     t, _cut, _v = _events_lake(spark, sf)
     st = t.agg_stats(None, cols=("user_id", "value"))
-    raw = spark.createDataFrame(
+    raw = local_frame(
+        spark,
         [(st["rows"], st["cols"]["user_id"]["min"],
           st["cols"]["user_id"]["max"], st["cols"]["value"]["min"],
           st["cols"]["value"]["max"], st["cols"]["value"]["nulls"],

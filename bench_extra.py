@@ -2,7 +2,9 @@
 
 Isolates the pieces the driver's bench times as single numbers, so the
 optimization evidence in OPTIMIZATION_r06.md can cite per-stage costs:
- - mv_incremental_agg stage breakdown (lake build / MV create / refreshes)
+ - mv_incremental_agg stage breakdown (lake build / MV create / refreshes
+   / read): wall, Spark jobs and process-tree CPU (JVM, Python workers,
+   driver) per stage
  - per-query noop-sink timings (guide §1.4) for any queries() entry
  - retrieve() point-read latency on one lake table, cold and warm
 Usage:
@@ -34,46 +36,95 @@ def _spark(cpus=None):
     )
 
 
+def _proc_stat(pid: int) -> list[int] | None:
+    """utime, stime, cutime, cstime of one process, in clock ticks."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return None
+    return [int(x) for x in fields[11:15]]
+
+
+def _comm(pid: int) -> str:
+    try:
+        with open(f"/proc/{pid}/comm") as f:
+            return f.read().strip()
+    except OSError:
+        return ""
+
+
+def tree_cpu() -> dict[str, float]:
+    """CPU seconds so far of this process tree, split three ways: the
+    driver (this process and its reaped children), the JVM (the ``java``
+    child's own threads) and the Python workers (everything under the JVM,
+    reaped workers included through their parents' cutime/cstime)."""
+    from perfbench.host import _HZ, _children
+
+    out = {"driver": 0, "jvm": 0, "py_workers": 0}
+    root = os.getpid()
+    out["driver"] += sum(_proc_stat(root) or ())
+    for child in _children(root):
+        st = _proc_stat(child)
+        if st is None:
+            continue
+        if _comm(child) != "java":
+            out["driver"] += sum(st)
+            continue
+        out["jvm"] += st[0] + st[1]
+        out["py_workers"] += st[2] + st[3]
+        todo = _children(child)
+        while todo:
+            pid = todo.pop()
+            out["py_workers"] += sum(_proc_stat(pid) or ())
+            todo += _children(pid)
+    return {k: v / _HZ for k, v in out.items()}
+
+
+def _stage(spark, name: str, fn):
+    """Runs ``fn()`` in its own job group; prints its wall, Spark job count
+    and process-tree CPU split, and returns its result."""
+    sc = spark.sparkContext
+    group = f"mv-{name.replace(' ', '-')}"
+    sc.setJobGroup(group, f"mv: {name}")
+    cpu0, t0 = tree_cpu(), time.time()
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    wall = time.time() - t0
+    cpu = {k: round(v - cpu0[k], 2) for k, v in tree_cpu().items()}
+    print(f"{name:<11} wall {wall:6.2f} s  jobs "
+          f"{len(sc.statusTracker().getJobIdsForGroup(group)):3d}  cpu s "
+          f"jvm {cpu['jvm']:6.2f}  py_workers {cpu['py_workers']:6.2f}  "
+          f"driver {cpu['driver']:6.2f}", flush=True)
+    return out
+
+
 def mv_breakdown(sf_dir: str) -> None:
+    """The mv_incremental_agg leaf stage by stage: lake build, MV create,
+    two refreshes and a read, each with its Spark jobs and CPU split."""
+    import tempfile
+
     import __spark_entry__ as entry
+    from logicaldecoding_spark.operators.mv import MaterializedAggregate
 
     spark = _spark()
     spark.sparkContext.setLogLevel("WARN")
-    t0 = time.time()
-    spark.sparkContext.setJobDescription("mv: lake build")
-    t, cut, v_mid = entry._events_lake(spark, sf_dir)
-    t_lake = time.time() - t0
-    import tempfile
-
-    from logicaldecoding_spark.operators.mv import MaterializedAggregate
-
-    t1 = time.time()
-    spark.sparkContext.setJobDescription("mv: create")
-    mv = MaterializedAggregate.create(
+    t, _cut, v_mid = _stage(spark, "lake build",
+                            lambda: entry._events_lake(spark, sf_dir))
+    mv = _stage(spark, "create", lambda: MaterializedAggregate.create(
         os.path.join(tempfile.mkdtemp(prefix="bx_mv_"), "mv"), t,
         ["event_type"],
         {"n_users": ("count", "*"), "sum_value": ("sum", "value"),
          "avg_value": ("avg", "value"), "min_value": ("min", "value"),
          "max_value": ("max", "value")},
         n_buckets=8,
-    )
-    t_create = time.time() - t1
-    t2 = time.time()
-    spark.sparkContext.setJobDescription("mv: refresh 1")
-    mv.refresh(spark, to_version=v_mid)
-    t_r1 = time.time() - t2
-    t3 = time.time()
-    spark.sparkContext.setJobDescription("mv: refresh 2")
-    mv.refresh(spark)
-    t_r2 = time.time() - t3
-    t4 = time.time()
-    spark.sparkContext.setJobDescription("mv: read")
-    mv.read(spark).collect()
-    t_read = time.time() - t4
-    print({"lake_build": round(t_lake, 2), "mv_create": round(t_create, 2),
-           "refresh1": round(t_r1, 2), "refresh2": round(t_r2, 2),
-           "read": round(t_read, 2),
-           "total": round(time.time() - t0, 2)})
+    ))
+    _stage(spark, "refresh 1", lambda: mv.refresh(spark, to_version=v_mid))
+    _stage(spark, "refresh 2", lambda: mv.refresh(spark))
+    _stage(spark, "read", lambda: mv.read(spark).collect())
     spark.stop()
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import OP_DELETE
+from ..session import conf_set
 from ..table.format import LakeTable, bucket_expr
 
 
@@ -149,10 +150,8 @@ def merge_into(
         # this plan removes AND sprays each bucket over every task
         # (measured: 428 files for a 64-bucket commit).  Relaxing it is
         # safe: hash co-partitioning on a common key subset is always
-        # correct for an equi-join.
-        spark.conf.set(
-            "spark.sql.requireAllClusterKeysForCoPartition", "false"
-        )
+        # correct for an equi-join.  Scoped to this write: the caller's
+        # session keeps its own value.
         target = table.read(spark, buckets=touched, with_bucket_col=True)
 
         s = changes.repartition(n_parts, "_bucket").alias("s")
@@ -186,7 +185,10 @@ def merge_into(
         result = joined.filter(keep).select(*out_cols, F.col("_bucket"))
 
         t2 = time.time()
-        new_files = table.write_data_files(result, spark)
+        with conf_set(
+            spark, "spark.sql.requireAllClusterKeysForCoPartition", "false"
+        ):
+            new_files = table.write_data_files(result, spark)
         phases["write"] = round(time.time() - t2, 3)
     finally:
         if discover:

@@ -29,6 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 # above this many R txids the per-txid conditional aggregates would bloat
 # one aggregate's column count; marker bounds switch to a groupBy("txid")
@@ -305,8 +307,8 @@ def _scan_log(raw: DataFrame, parse_mode: str, target_data_batches: int):
                     )
         if r_txids and not few_r:
             spark = raw.sparkSession
-            tx_df = spark.createDataFrame(
-                [(int(t),) for t in r_txids], "txid long"
+            tx_df = local_frame(
+                spark, [(int(t),) for t in r_txids], "txid long"
             )
             if has_sidecar or is_proto:
                 mk = base.filter(is_b | is_c).select(

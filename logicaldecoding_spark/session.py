@@ -4,13 +4,22 @@ Local-mode settings follow the public Spark tuning guidance: shuffle
 partitions sized to cores (not the 200 default), AQE on for runtime
 coalescing and skew splitting, Arrow enabled for the pandas-UDF parse path,
 UTC session timezone so results compare cleanly against DuckDB oracles.
+
+It also owns the engine's two ways of touching a live session:
+``local_frame`` (the one way to turn driver rows into a DataFrame) and
+``conf_set`` (the one way to change a SQL conf, scoped and restored).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def get_spark(
@@ -53,3 +62,49 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: T.StructType | str,
+) -> DataFrame:
+    """Driver rows as a JVM local relation (``LocalTableScan``).
+
+    ``createDataFrame`` on a Python list pickles the rows into a
+    ``ParallelCollectionRDD`` and re-serializes them in Python workers on
+    EVERY execution of the frame (``Scan ExistingRDD``), whatever the
+    Arrow conf says; an Arrow table becomes a local relation the JVM owns,
+    which also lets Catalyst fold an empty one away.  Rows are tuples
+    (``Row`` included, positionally), dicts or objects, as with
+    ``createDataFrame``, and pass its type verifier first: a row of the
+    wrong arity or a value of the wrong type raises here, before any
+    Spark job.  Where ``createDataFrame`` would stringify a non-str value
+    in a string column, the Arrow build raises ``ArrowTypeError``."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    verify = T._make_type_verifier(schema)
+    internal = []
+    for r in rows:
+        verify(r)
+        internal.append(schema.toInternal(r))
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*internal)) if internal else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
+@contextmanager
+def conf_set(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the block, then restore the caller's
+    value (or unset it if it was unset), also when the block raises."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

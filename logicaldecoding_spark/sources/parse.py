@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema import SCHEMA_CHANGE_TYPE
+from ..session import local_frame
 
 # JSON wire schema of one payload (generator.py writes it; field 'ct' is
 # commit_time in unix microseconds — the reference converts the pg epoch-2000
@@ -274,9 +275,9 @@ def parse_slim_direct(
                 yield from _duckdb_batches(con, q.sql, t, q.arrow)
 
     if not frags:
-        return spark.createDataFrame([], q.spark)
-    frag_df = spark.createDataFrame(
-        frags, "path string, rg int"
+        return local_frame(spark, [], q.spark)
+    frag_df = local_frame(
+        spark, frags, "path string, rg int"
     ).repartition(len(frags))
     return frag_df.mapInArrow(gen, schema=q.spark)
 

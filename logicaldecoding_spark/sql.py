@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import local_frame
 from .table.format import LakeTable
 
 
@@ -92,8 +93,8 @@ def describe_history(
         )
         for e in t.history()
     ]
-    df = spark.createDataFrame(
-        rows,
+    df = local_frame(
+        spark, rows,
         "version long, schema_id long, applied_upto_lsn long, batch_id long,"
         " files long, rows long, timestamp_ms long, kind string",
     )
@@ -126,8 +127,8 @@ def describe_files(
         )
         for m in meta["snapshot"]["manifest"]
     ]
-    df = spark.createDataFrame(
-        rows if rows else spark.sparkContext.emptyRDD(),
+    df = local_frame(
+        spark, rows,
         "path string, bucket int, spec_id int, schema_id int,"
         " content string, rows long, max_lsn long, stats_json string,"
         " bloom_col string",
@@ -146,8 +147,8 @@ def describe_refs(
         (name, r["kind"], int(r["version"]))
         for name, r in sorted(t.refs().items())
     ]
-    df = spark.createDataFrame(
-        rows if rows else spark.sparkContext.emptyRDD(),
+    df = local_frame(
+        spark, rows,
         "name string, kind string, version long",
     )
     if view is not None:

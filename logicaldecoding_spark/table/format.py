@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema import OP_DELETE, REPOS_PK, TableSchema
+from ..session import local_frame
 from .fileio import FileIO, LocalFileIO
 
 FORMAT_VERSION = 1
@@ -1152,7 +1153,7 @@ class LakeTable:
 
         out_struct = current.to_spark(with_lineage=True)
         if not manifest:
-            df = spark.createDataFrame([], out_struct)
+            df = local_frame(spark, [], out_struct)
             return (
                 df.withColumn("_bucket", bucket_expr(self.n_buckets, self.pk))
                 if with_bucket_col
@@ -1674,11 +1675,11 @@ class LakeTable:
                 for (r, mx, sj, bj) in (_stat_one_file(p),)
             ]
         else:
-            # no repartition: createDataFrame already spreads the (tiny)
-            # path list across default parallelism, and an extra shuffle
-            # stage per commit is pure scheduling overhead
-            paths_df = spark.createDataFrame(
-                pd.DataFrame(files, columns=["abs_path", "rel_path", "bucket"])
+            # no repartition: a local relation's scan already spreads the
+            # (tiny) path list across default parallelism, and an extra
+            # shuffle stage per commit is pure scheduling overhead
+            paths_df = local_frame(
+                spark, files, "abs_path string, rel_path string, bucket int"
             )
             stats = paths_df.mapInPandas(
                 _footer_stats,
@@ -1887,33 +1888,43 @@ class LakeTable:
 
     # ---------------------------------------------------------------- lookup
     def lookup(self, spark: SparkSession, keys: list[tuple]) -> DataFrame:
-        """Bucket-pruned point lookup: rows matching the given PK tuples.
+        """Bucket-pruned point lookup: rows matching the given PK tuples,
+        the many-key form of ``retrieve``.
 
-        The distributed analog of the reference subscriber's
-        ``Tenant::retrieve``/``retrieve_many`` map lookups
-        (/root/reference/src/types/tenant/mod.rs:33-48): the wanted keys'
-        buckets are computed with the SAME hash Spark writes with (one tiny
-        Spark job over the key list), the scan prunes to manifest entries of
-        those buckets only (old specs included via the bucket mapping), and
-        a broadcast semi-join picks the exact rows.
+        The keys become one local relation typed with the CURRENT schema's
+        pk column types: the write side hashes typed values, so hashing a
+        string rendering of a non-string key would prune to the wrong
+        buckets and silently return empty.  Their buckets come from the
+        SAME ``bucket_expr`` Spark writes with, which Catalyst folds into
+        the local relation, so that step runs no Spark job.  The scan
+        prunes to manifest entries of those buckets only (old specs
+        included via the bucket mapping) and a broadcast semi-join picks
+        the exact rows.
 
-        Keys are typed with the CURRENT schema's pk column types before the
-        bucket hash: the write side hashes typed values, so hashing a string
-        rendering of a non-string key would prune to the wrong buckets and
-        silently return empty (ADVICE r3)."""
+        Raises ``ValueError`` naming the pk columns, before any Spark job,
+        when a key's length differs from the pk's; a key value of the
+        wrong type raises ``session.local_frame``'s type error, also
+        before any job."""
         from ..schema import spark_type
 
         pk = list(self.pk)
+        keys = [tuple(k) for k in keys]
+        bad = [k for k in keys if len(k) != len(pk)]
+        if bad:
+            raise ValueError(
+                f"lookup keys must have {len(pk)} values, one per pk column "
+                f"{tuple(pk)}; got {bad[0]!r}"
+            )
         types = {f.name: f.type for f in self.schema.fields}
-        key_df = spark.createDataFrame(
-            [tuple(k) for k in keys],
+        key_df = local_frame(
+            spark, keys,
             T.StructType([T.StructField(c, spark_type(types[c])) for c in pk]),
         )
-        want = sorted(
+        want = sorted({
             r["_b"] for r in key_df.select(
                 bucket_expr(self.n_buckets, tuple(pk)).alias("_b")
-            ).distinct().collect()
-        )
+            ).collect()
+        })
         # stats/bloom file skipping within the wanted buckets, PRUNE-ONLY:
         # the trailing semi-join makes the result exact, so the in-list
         # never has to become a residual .filter — which is what used to cap
@@ -1935,9 +1946,9 @@ class LakeTable:
         return scan.join(F.broadcast(key_df), on=pk, how="left_semi")
 
     def retrieve(self, spark: SparkSession, key: tuple):
-        """Single-key point read -> Row or None — ``Tenant::retrieve``
-        (/root/reference/src/types/tenant/mod.rs:33-39); ``lookup`` is the
-        ``retrieve_many`` (:41-48) analog.
+        """Single-key point read -> Row or None; ``lookup`` is the many-key
+        form.  A key whose length differs from the pk raises ``lookup``'s
+        ``ValueError``.
 
         Serving path: when bucket, stats and bloom pruning leave at most
         ``RETRIEVE_DRIVER_MAX_FILES`` files of at most

@@ -188,3 +188,37 @@ def test_merge_only_rewrites_touched_buckets(spark, tmp_path):
         m["bucket"] for p, m in after.items() if p not in before
     } | {m["bucket"] for p, m in before.items() if p not in after}
     assert len(changed_buckets) == 1  # copy-on-write at bucket granularity
+
+
+def test_merge_leaves_session_conf_unchanged(spark, tmp_path, monkeypatch):
+    """The COW write relaxes ``requireAllClusterKeysForCoPartition`` for its
+    own plan only: after ``merge_into`` returns or raises, the caller's
+    value is back (or the key is unset again), and a 64-bucket commit still
+    writes one file per bucket."""
+    import pytest
+
+    key = "spark.sql.requireAllClusterKeysForCoPartition"
+    table = LakeTable.create(str(tmp_path / "t"), REPOS_INITIAL_SCHEMA,
+                             n_buckets=64)
+    rows = [(f"r{i}", "p", "c", "py", "x", "I", i + 1, 0, 1)
+            for i in range(1000)]
+    assert spark.conf.get(key, None) is None
+    merge_into(spark, table, _compacted(spark, rows), applied_upto_lsn=1000,
+               batch_id=0)
+    assert spark.conf.get(key, None) is None
+    man = table.metadata()["snapshot"]["manifest"]
+    assert len(man) == len({m["bucket"] for m in man}) == 64
+
+    def boom(*a, **kw):
+        assert spark.conf.get(key) == "false"
+        raise RuntimeError("write failed")
+
+    spark.conf.set(key, "true")
+    try:
+        monkeypatch.setattr(table, "write_data_files", boom)
+        with pytest.raises(RuntimeError, match="write failed"):
+            merge_into(spark, table, _compacted(spark, rows[:5]),
+                       applied_upto_lsn=1001, batch_id=1)
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.unset(key)

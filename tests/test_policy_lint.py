@@ -159,3 +159,32 @@ def test_monotonic_ids_are_checkpointed():
                 bad.append(f"{os.path.relpath(p, os.path.dirname(PKG))}"
                            f":{stmt.lineno}")
     assert not bad, f"monotonically_increasing_id not checkpointed: {bad}"
+
+
+SESSION = os.path.join(PKG, "session.py")
+DRIVER_FRAME = re.compile(r"\bcreateDataFrame\(|\.parallelize\(")
+CONF_SET = re.compile(r"\bconf\.set\(")
+
+
+def _outside_session(pattern):
+    return [f"{os.path.relpath(p, PKG)}:{ln}"
+            for p, src in _sources() if p != SESSION
+            for ln, line in enumerate(src.split("\n"), 1)
+            if pattern.search(line)]
+
+
+def test_driver_rows_become_frames_only_in_session():
+    """Driver rows become a DataFrame only through ``session.local_frame``
+    (an Arrow local relation).  ``createDataFrame`` on a Python list or
+    ``parallelize`` builds a pickled RDD that Python workers re-serialize
+    on every execution of the frame."""
+    bad = _outside_session(DRIVER_FRAME)
+    assert not bad, f"driver rows turned into frames outside session.py: {bad}"
+
+
+def test_session_conf_changes_only_in_session():
+    """An operator that sets a session conf leaks it into every later
+    query of the caller's session; ``session.conf_set`` scopes the change
+    to a block and restores the caller's value."""
+    bad = _outside_session(CONF_SET)
+    assert not bad, f"session conf set outside session.py: {bad}"
