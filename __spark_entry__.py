@@ -34,7 +34,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from logicaldecoding_spark.dist import ship_package
 
     ship_package(spark)  # executor workers need the package for pandas UDFs
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -154,9 +153,13 @@ def _q_o1_global_order(spark, sf):  # O1: total order + limit
 
 def _q_t9_window_tumbling(spark, sf):  # T-style tumbling window agg (batch)
     ev = _t(spark, sf, "events")
-    return ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("event_type")
-    ).agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
+    # ts is TIMESTAMP_NTZ; date_trunc has no NTZ form (it casts to a zoned
+    # TIMESTAMP in the session zone), so rebuild the hour from its fields
+    hour = F.make_timestamp_ntz(F.year("ts"), F.month("ts"),
+                                F.dayofmonth("ts"), F.hour("ts"),
+                                F.lit(0), F.lit(0))
+    return ev.groupBy(hour.alias("hour"), F.col("event_type")).agg(
+        F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
 
 
 def _q_w1_topk_per_group(spark, sf):  # top-k per group window
@@ -191,7 +194,7 @@ def _q_a4_rollup(spark, sf):  # A: hierarchical agg (ROLLUP)
 def _q_t10_sessionize(spark, sf):  # T: gap-based sessionization (batch form)
     ev = _t(spark, sf, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp").cast("long")  # ntz -> utc seconds
+    epoch = F.unix_timestamp("ts")  # ntz wall time as epoch seconds, any zone
     gap = epoch - F.lag(epoch).over(w)
     new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
     sess = ev.withColumn("sess_id", F.sum(new_sess).over(w))
@@ -581,7 +584,8 @@ def _q_lake_zorder_scan(spark, sf):
 def _q_q1_pricing_summary(spark, sf):  # TPC-H Q1 shape
     li = _t(spark, sf, "lineitem")
     return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        li.filter(F.col("l_shipdate")
+                  <= F.lit("1998-09-02").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),

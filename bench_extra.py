@@ -3,12 +3,16 @@
 Isolates the pieces the driver's bench times as single numbers, so the
 optimization evidence in OPTIMIZATION_r06.md can cite per-stage costs:
  - mv_incremental_agg stage breakdown (lake build / MV create / refreshes
-   / read): wall, Spark jobs and process-tree CPU (JVM, Python workers,
-   driver) per stage
+   / read): wall, Spark jobs, process-tree CPU (JVM, Python workers,
+   driver), generated classes compiled and JIT time per stage
+ - the 12 timed leaves of perfbench's query_leaves workload, N passes,
+   each leaf from cleared entry memos and cached frames: the same per-leaf
+   numbers, and per-pass totals
  - per-query noop-sink timings (guide §1.4) for any queries() entry
  - retrieve() point-read latency on one lake table, cold and warm
 Usage:
   python bench_extra.py mv [sf_dir]
+  python bench_extra.py leaves [sf_dir] [--passes N]
   python bench_extra.py noop q1_pricing_summary dedup_minhash ... [--sf dir]
   python bench_extra.py lookup <table> [--keys N]
 """
@@ -81,24 +85,45 @@ def tree_cpu() -> dict[str, float]:
     return {k: v / _HZ for k, v in out.items()}
 
 
-def _stage(spark, name: str, fn):
-    """Runs ``fn()`` in its own job group; prints its wall, Spark job count
-    and process-tree CPU split, and returns its result."""
+def _jit_ms(spark) -> int:
+    """Milliseconds the JVM's JIT compilers have spent so far."""
+    mx = spark._jvm.java.lang.management.ManagementFactory
+    return int(mx.getCompilationMXBean().getTotalCompilationTime())
+
+
+def _print_stage(name: str, s: dict) -> None:
+    print(f"{name:<20} wall {s['wall']:6.2f} s  jobs {s['jobs']:3d}  cpu s "
+          f"jvm {s['jvm']:6.2f}  py_workers {s['py_workers']:6.2f}  "
+          f"driver {s['driver']:6.2f}  compiles {s['compiles']:4d}  "
+          f"jit {s['jit_ms']:6d} ms", flush=True)
+
+
+def _stage(spark, name: str, fn, kind: str = "mv", totals=None):
+    """Runs ``fn()`` in its own job group; prints its wall, Spark job count,
+    process-tree CPU split, generated classes compiled (Janino, JVM-wide)
+    and JIT milliseconds, adds them into ``totals`` if given, and returns
+    ``fn``'s result."""
+    from logicaldecoding_spark.session import codegen_compiles
+
     sc = spark.sparkContext
-    group = f"mv-{name.replace(' ', '-')}"
-    sc.setJobGroup(group, f"mv: {name}")
+    group = f"{kind}-{name.replace(' ', '-')}"
+    sc.setJobGroup(group, f"{kind}: {name}")
     cpu0, t0 = tree_cpu(), time.time()
+    compiles0, jit0 = codegen_compiles(spark), _jit_ms(spark)
     try:
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    wall = time.time() - t0
-    cpu = {k: round(v - cpu0[k], 2) for k, v in tree_cpu().items()}
-    print(f"{name:<11} wall {wall:6.2f} s  jobs "
-          f"{len(sc.statusTracker().getJobIdsForGroup(group)):3d}  cpu s "
-          f"jvm {cpu['jvm']:6.2f}  py_workers {cpu['py_workers']:6.2f}  "
-          f"driver {cpu['driver']:6.2f}", flush=True)
+    stats = {"wall": time.time() - t0,
+             "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+             "compiles": codegen_compiles(spark) - compiles0,
+             "jit_ms": _jit_ms(spark) - jit0}
+    stats.update((k, v - cpu0[k]) for k, v in tree_cpu().items())
+    _print_stage(name, stats)
+    if totals is not None:
+        for k, v in stats.items():
+            totals[k] = totals.get(k, 0) + v
     return out
 
 
@@ -125,6 +150,29 @@ def mv_breakdown(sf_dir: str) -> None:
     _stage(spark, "refresh 1", lambda: mv.refresh(spark, to_version=v_mid))
     _stage(spark, "refresh 2", lambda: mv.refresh(spark))
     _stage(spark, "read", lambda: mv.read(spark).collect())
+    spark.stop()
+
+
+def leaves(sf_dir: str, passes: int) -> None:
+    """perfbench's 12 timed ``query_leaves`` leaves, ``passes`` times in one
+    session, each leaf from cleared entry memos and cached frames as the
+    benchmark runs them; prints every leaf's stage line and each pass's
+    totals.  With a generated-class cache that holds the working set,
+    passes after the first compile no classes."""
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import __spark_entry__ as entry
+    from workloads import LEAVES, QueryLeaves
+
+    spark = _spark()
+    spark.sparkContext.setLogLevel("WARN")
+    q = entry.queries()
+    for i in range(passes):
+        totals: dict = {}
+        for name in LEAVES:
+            QueryLeaves._reset(spark)
+            _stage(spark, name, lambda n=name: q[n](spark, sf_dir).toPandas(),
+                   kind=f"pass-{i}", totals=totals)
+        _print_stage(f"pass {i} total", totals)
     spark.stop()
 
 
@@ -188,6 +236,14 @@ if __name__ == "__main__":
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     if args and args[0] == "mv":
         mv_breakdown(args[1] if len(args) > 1 else sf)
+    elif args and args[0] == "leaves":
+        argv = sys.argv[2:]  # [sf_dir] [--passes N]
+        passes = 3
+        if "--passes" in argv:
+            i = argv.index("--passes")
+            passes = int(argv[i + 1])
+            del argv[i:i + 2]
+        leaves(argv[0] if argv else sf, passes)
     elif args and args[0] == "noop":
         noop(args[1:], sf)
     elif len(args) > 1 and args[0] == "lookup":

@@ -8,6 +8,12 @@ Usage:
 
 Prints one JSON line with wall seconds and throughput.  The package arrives
 via --py-files (no repo-path assumption), exactly as it would on a cluster.
+
+The job takes its session from ``getOrCreate()``, not ``get_spark``, so
+pass the engine's generated-class cache size on the command line too:
+``--conf spark.sql.codegen.cache.maxEntries=2048``.  It is a static conf,
+read once when the JVM starts; Spark's default of 100 classes is smaller
+than a replay's working set, so without it each replay recompiles them.
 """
 
 from __future__ import annotations

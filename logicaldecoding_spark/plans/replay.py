@@ -42,6 +42,7 @@ from ..operators.compaction import last_writer_wins, last_writer_wins_slim
 from ..operators.merge import merge_into
 from ..operators.typing import typed_changes
 from ..schema import REPOS_INITIAL_SCHEMA, REPOS_PK, TableSchema
+from ..session import codegen_compiles
 from ..sources.parse import parse_events
 from ..sources.wal_log import read_wal_log
 from ..table.format import LakeTable
@@ -273,7 +274,8 @@ class _Wire(NamedTuple):
 
     parse_mode: str
     plan_raw: DataFrame        # the unpruned log scan the planner reads
-    modules: tuple[str, ...]   # what prime_python_workers imports
+    modules: tuple[str, ...]   # what prime_python_workers imports; ()
+                               # on wires with no Python stage
     raw_provider: Callable
     slim_provider: Callable | None  # the fragment-direct scan, or None
     record: dict               # {parse_mode, direct_slim_scan, reason}, plus
@@ -357,9 +359,10 @@ def _resolve_wire(
 
         so_path, record["decoder_reason"] = native_decoder()
         record["decoder"] = "native" if so_path else "python"
-    # no duckdb import on the wires that never parse with it
-    modules = ("numpy", "pyarrow",
-               *(("duckdb",) if parse_mode == "duckdb" else ()))
+    # only the duckdb and proto wires parse in Python workers; the native
+    # and sidecar wires run no Python stage, so there is nothing to prime
+    modules = {"duckdb": ("numpy", "pyarrow", "duckdb"),
+               "proto": ("numpy", "pyarrow")}.get(parse_mode, ())
     return _Wire(parse_mode, plan_raw, modules, raw_provider, slim_provider,
                  record)
 
@@ -817,16 +820,22 @@ def replay(
     the mechanism; ``resume=True`` just documents intent), so a re-run after
     a crash converges to the same final state — exactly-once (SURVEY §2.9 T4).
     The metrics carry ``wire``: the resolved parse mode, whether the slim
-    pass took the direct scan, and why.  A copy is kept under the table's
+    pass took the direct scan, and why; and ``codegen``: the size of the
+    JVM's generated-class cache (``cache_entries``) and how many classes
+    Janino compiled during the call (``classes_compiled``; the counter is
+    JVM-wide, so queries running concurrently in other threads count too,
+    and a warm cache makes it 0).  A copy is kept under the table's
     ``_metrics/`` (the newest ``_RUN_RECORDS_KEPT`` runs).
     """
     t0 = time.time()
+    compiled0 = codegen_compiles(spark)
     from ..dist import ship_package
 
     ship_package(spark)  # executor workers import this package inside UDFs
     wire = _resolve_wire(spark, log_path, pk, parse_mode)
     parse_mode = wire.parse_mode
-    prime_python_workers(spark, wire.modules)  # once per session
+    if wire.modules:
+        prime_python_workers(spark, wire.modules)  # once per session
     table = ensure_table(table_path, initial_schema, pk, n_buckets) if create \
         else LakeTable.load(table_path)
     if ref != "main":
@@ -865,10 +874,22 @@ def replay(
         "applied_upto_lsn": final.applied_upto_lsn,
         "wall_secs": round(wall, 3),
         "wire": wire.record,
+        "codegen": _codegen_record(spark, compiled0),
         "batches": metrics,
     }
     _write_run_record(final, run)
     return run
+
+
+def _codegen_record(spark: SparkSession, compiled0: int) -> dict:
+    """A run record's ``codegen``: the generated-class cache size the JVM
+    started with, and the classes compiled since the counter read
+    ``compiled0`` (JVM-wide; see ``session.codegen_compiles``)."""
+    return {
+        "cache_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")),
+        "classes_compiled": codegen_compiles(spark) - compiled0,
+    }
 
 
 # per-run metrics log (lineage/observability, north_rule): replay keeps the
@@ -1040,8 +1061,10 @@ def replay_multi(
     its own snapshots/watermark (independent resume); schema-change events
     route by their ``table`` field (an R with no table applies to every
     table).  The wire is resolved by the same ``_resolve_wire`` as
-    :func:`replay`, and recorded the same way under ``wire``."""
+    :func:`replay`, and recorded the same way under ``wire``; ``codegen``
+    is recorded as in :func:`replay`."""
     t0 = time.time()
+    compiled0 = codegen_compiles(spark)
     from ..dist import ship_package
 
     from .batches import plan_batches_multi
@@ -1049,7 +1072,8 @@ def replay_multi(
     ship_package(spark)
     wire = _resolve_wire(spark, log_path, pk, parse_mode)
     parse_mode = wire.parse_mode
-    prime_python_workers(spark, wire.modules)  # once per session
+    if wire.modules:
+        prime_python_workers(spark, wire.modules)  # once per session
 
     sinks = {
         name: ensure_table(path, initial_schema, pk, n_buckets)
@@ -1080,5 +1104,6 @@ def replay_multi(
         "planning_scans": 1,
         "wall_secs": round(time.time() - t0, 3),
         "wire": wire.record,
+        "codegen": _codegen_record(spark, compiled0),
     }
     return run

@@ -77,11 +77,66 @@ def test_entry_smoke(spark):
 def test_query_matches_oracle(spark, ddb, name):
     sdf = QUERIES[name](spark, SF_DIR)
     spdf = sdf.toPandas()  # pandas path: same dtype coercion the driver sees
-    scols = list(spdf.columns)
     if name not in ORACLES:
         # rows-only check (non-SQL-expressible op): must run and be non-trivial
         assert len(spdf) > 0, f"{name}: empty result"
         return
+    _assert_matches_oracle(ddb, name, spdf)
+
+
+@pytest.mark.parametrize(
+    "name", ["t9_window_tumbling", "t10_sessionize", "q1_pricing_summary"])
+def test_time_queries_ignore_session_zone(spark, ddb, name):
+    """The timestamp leaves read TIMESTAMP_NTZ columns zone-free: under a
+    non-UTC session zone they still equal their oracles, and the entry
+    leaves the caller's zone as it found it."""
+    from logicaldecoding_spark.session import conf_set
+
+    zone = "spark.sql.session.timeZone"
+    with conf_set(spark, zone, "America/Los_Angeles"):
+        spdf = QUERIES[name](spark, SF_DIR).toPandas()
+        assert spark.conf.get(zone) == "America/Los_Angeles"
+        _assert_matches_oracle(ddb, name, spdf)
+
+
+@pytest.mark.parametrize("name", ["t9_window_tumbling", "t10_sessionize"])
+def test_time_queries_zone_free_across_dst(spark, tmp_path, name):
+    """Event times inside and around America/Los_Angeles' 2024 DST changes
+    (wall times that do not exist, or exist twice, in that zone) group and
+    sessionize as the oracle's zone-less wall times do under that session
+    zone: no expression converts them to instants through the session
+    zone."""
+    import pandas as pd
+
+    from logicaldecoding_spark.session import conf_set
+
+    times = [
+        (1, "2024-03-10 01:45:00"), (1, "2024-03-10 03:10:00"),  # 85 min
+        (2, "2024-11-03 00:50:00"), (2, "2024-11-03 01:50:00"),
+        (2, "2024-11-03 02:10:00"),                               # 20 min
+        (3, "2024-03-10 02:30:00"), (3, "2024-03-10 02:59:59.5"),
+        (4, "2024-01-15 12:00:00"), (4, "2024-07-04 23:59:59"),
+    ]
+    ev = pd.DataFrame({
+        "event_id": range(len(times)),
+        "user_id": [u for u, _ in times],
+        "event_type": ["click", "view"] * (len(times) // 2) + ["click"],
+        "value": [0.5 * i for i in range(len(times))],
+        "ts": pd.to_datetime([t for _, t in times], format="ISO8601"),
+    })
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    ev.to_parquet(f"{sf}/events.parquet", index=False,
+                  coerce_timestamps="us")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
+    with conf_set(spark, "spark.sql.session.timeZone", "America/Los_Angeles"):
+        spdf = QUERIES[name](spark, sf).toPandas()
+    _assert_matches_oracle(con, name, spdf)
+
+
+def _assert_matches_oracle(ddb, name, spdf):
+    scols = list(spdf.columns)
     dpdf = ddb.execute(ORACLES[name]).fetchdf()
     dcols = list(dpdf.columns)
     assert sorted(scols) == sorted(dcols), f"{name}: column names differ"

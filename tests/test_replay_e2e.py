@@ -319,11 +319,44 @@ def test_prime_failure_leaves_session_unprimed(spark, small_log, small_oracle,
     )
     table_path = str(tmp_path / "t_unprimed")
     with caplog.at_level(logging.WARNING, logger="logicaldecoding_spark"):
-        replay_mod.replay(spark, log_path, table_path, parse_mode="native",
+        replay_mod.replay(spark, log_path, table_path, parse_mode="duckdb",
                           n_buckets=4)
     assert app not in replay_mod._PRIMED_APPS
     assert "priming failed" in caplog.text
     assert_converged(spark, table_path, oracle_state)
+
+
+def test_sidecar_replay_primes_no_python_workers(spark, tmp_path,
+                                                 monkeypatch):
+    """The tuple-sidecar wire runs no Python stage, so its replay boots no
+    Python workers: no job is described ``prime python workers`` and the
+    session stays unprimed."""
+    import importlib
+
+    from logicaldecoding_spark.generator import generate_log
+    from logicaldecoding_spark.oracle import replay_oracle
+
+    replay_mod = importlib.import_module("logicaldecoding_spark.plans.replay")
+    log_path = str(tmp_path / "wal_sc.parquet")
+    generate_log(log_path, n_txns=60, n_repos=6, paths_per_repo=5,
+                 tuple_sidecar=True)
+    sc = spark.sparkContext
+    app = sc.applicationId
+    replay_mod._PRIMED_APPS.discard(app)
+    descriptions = []
+    set_description = sc.setJobDescription
+
+    def record(value):
+        descriptions.append(value)
+        set_description(value)
+
+    monkeypatch.setattr(sc, "setJobDescription", record)
+    table_path = str(tmp_path / "t_sidecar")
+    run = replay_mod.replay(spark, log_path, table_path, n_buckets=4)
+    assert run["wire"]["parse_mode"] == "sidecar"
+    assert "prime python workers" not in descriptions
+    assert app not in replay_mod._PRIMED_APPS
+    assert_converged(spark, table_path, replay_oracle(log_path)[0])
 
 
 def test_one_data_batch_spark_job_count(spark, tmp_path):
