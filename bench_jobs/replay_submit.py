@@ -4,7 +4,7 @@ Usage:
     spark-submit --master local[N] --driver-memory 48g \
         --py-files /tmp/logicaldecoding_spark.zip \
         bench_jobs/replay_submit.py --log LOG --table TABLE \
-        [--parse-mode duckdb] [--n-buckets 64] [--salt 0] [--resume]
+        [--parse-mode auto|native|proto|sidecar] [--n-buckets 64] [--salt 0] [--resume]
 
 Prints one JSON line with wall seconds and throughput.  The package arrives
 via --py-files (no repo-path assumption), exactly as it would on a cluster.

@@ -7,10 +7,11 @@ A from-scratch re-expression of the capabilities of the reference
 * a captured WAL change-event log (decoderbufs-style events, flattened to
   Parquet) replaces the live replication socket
   (reference: src/replication.rs:75-141);
-* vectorized Arrow parsing replaces per-message protobuf decode
+* vectorized parsing (JVM-side ``from_json`` on the JSON wire, Arrow
+  batches on the protobuf wire) replaces per-message protobuf decode
   (reference: src/replication.rs:120-122);
-* committed-transaction assembly is a semi-join on commit markers
-  (reference: src/replication.rs:125-136);
+* committed-transaction assembly is an anti-join on aborted txids (BEGIN
+  without COMMIT) (reference: src/replication.rs:125-136);
 * per-primary-key last-writer-wins compaction + a copy-on-write MERGE into an
   Iceberg-style table replaces the subscriber's in-memory ``HashMap`` apply
   loop (reference: src/types/mod.rs:39-168);

@@ -79,7 +79,7 @@ def winner_lsns(
 def last_writer_wins_slim(
     raw: DataFrame,
     slim_changes: DataFrame,
-    parse_mode: str = "duckdb",
+    parse_mode: str = "native",
     pk: tuple[str, ...] = REPOS_PK,
     order: tuple[str, ...] = ("lsn", "seq"),
     salt_buckets: int | None = None,

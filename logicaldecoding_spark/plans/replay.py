@@ -266,7 +266,7 @@ def ensure_table(
     return LakeTable.load(table_path)
 
 
-_PARSE_MODES = ("auto", "duckdb", "native", "proto", "sidecar")
+_PARSE_MODES = ("auto", "native", "proto", "sidecar")
 
 
 class _Wire(NamedTuple):
@@ -274,11 +274,10 @@ class _Wire(NamedTuple):
 
     parse_mode: str
     plan_raw: DataFrame        # the unpruned log scan the planner reads
-    modules: tuple[str, ...]   # what prime_python_workers imports; ()
-                               # on wires with no Python stage
+    modules: tuple[str, ...]   # what prime_python_workers imports; () on
+                               # every wire but proto (no Python stage)
     raw_provider: Callable
-    slim_provider: Callable | None  # the fragment-direct scan, or None
-    record: dict               # {parse_mode, direct_slim_scan, reason}, plus
+    record: dict               # {parse_mode, reason}, plus
                                # {decoder, decoder_reason} on the proto wire
 
 
@@ -294,15 +293,11 @@ def _resolve_wire(
     unknown mode raises before any Spark job runs.
 
     ``auto`` resolves to ``sidecar`` when the log carries the tuple-sidecar
-    columns, else to ``duckdb``.  Every parse stage then uses the resolved
-    mode.  The slim pass takes the fragment-direct scan when the mode is
-    ``duckdb`` and the log has at least four row groups per core: enough
-    to amortize each task's setup (duckdb connection + parquet open) and
-    fill the task waves.  On the ``proto`` wire the record also says which
-    decoder runs (``native`` or ``python``) and why."""
+    columns, else to ``native``.  Every parse stage then uses the resolved
+    mode.  On the ``proto`` wire the record also says which decoder runs
+    (``native`` or ``python``) and why."""
     if parse_mode not in _PARSE_MODES:
         raise ValueError(f"unknown parse mode {parse_mode!r}")
-    cores = spark.sparkContext.defaultParallelism
     # planning gets the UNPRUNED scan: if the capture carries columnar
     # op/txid sidecar columns, plan_batches plans without ever reading
     # payloads.  The generator's `committed` ground-truth column is dropped
@@ -317,54 +312,36 @@ def _resolve_wire(
                     *pk, "new_tuple", "old_tuple")
     has_tuple_sidecar = set(sidecar_cols) <= set(plan_raw.columns)
     if parse_mode == "auto":
-        parse_mode = "sidecar" if has_tuple_sidecar else "duckdb"
+        if has_tuple_sidecar:
+            parse_mode = "sidecar"
+            reason = "tuple-sidecar columns found: " + ", ".join(sidecar_cols)
+        else:
+            parse_mode = "native"
+            reason = ("no tuple-sidecar columns found: the JSON payload "
+                      "parses JVM-side")
+    else:
+        reason = f"parse_mode {parse_mode!r} requested"
     if parse_mode == "sidecar" and not has_tuple_sidecar:
         raise ValueError(
             "parse_mode='sidecar' needs a tuple-sidecar capture "
             f"(columns {sidecar_cols}); this log lacks them"
         )
-    direct_slim_scan = False
-    if parse_mode == "duckdb":
-        from ..sources.wal_log import log_fragments
-
-        try:
-            n_frags = len(log_fragments(log_path, None, None))
-        except OSError:
-            n_frags = 0
-        direct_slim_scan = n_frags >= 4 * cores
-        reason = (f"{n_frags} row groups {'>=' if direct_slim_scan else '<'}"
-                  f" 4 x {cores} cores")
-    elif parse_mode == "sidecar":
-        reason = "tuple-sidecar columns found: " + ", ".join(sidecar_cols)
-    else:
-        reason = f"parse_mode {parse_mode!r} has no direct slim scan"
     raw_columns = sidecar_cols if parse_mode == "sidecar" else ("lsn", "payload")
 
     def raw_provider(lo, hi):
         return read_wal_log(spark, log_path, lsn_from=lo, lsn_to=hi,
                             columns=raw_columns)
 
-    slim_provider = None
-    if direct_slim_scan:
-        from ..sources.parse import parse_slim_direct
-
-        def slim_provider(lo, hi):
-            return parse_slim_direct(spark, log_path, pk, lsn_from=lo,
-                                     lsn_to=hi)
-
-    record = {"parse_mode": parse_mode,
-              "direct_slim_scan": direct_slim_scan, "reason": reason}
+    record = {"parse_mode": parse_mode, "reason": reason}
+    modules = ()
     if parse_mode == "proto":
         from ..sources.proto import native_decoder
 
         so_path, record["decoder_reason"] = native_decoder()
         record["decoder"] = "native" if so_path else "python"
-    # only the duckdb and proto wires parse in Python workers; the native
-    # and sidecar wires run no Python stage, so there is nothing to prime
-    modules = {"duckdb": ("numpy", "pyarrow", "duckdb"),
-               "proto": ("numpy", "pyarrow")}.get(parse_mode, ())
-    return _Wire(parse_mode, plan_raw, modules, raw_provider, slim_provider,
-                 record)
+        # the only wire that parses in Python workers
+        modules = ("numpy", "pyarrow")
+    return _Wire(parse_mode, plan_raw, modules, raw_provider, record)
 
 
 class _ApplyOpts(NamedTuple):
@@ -400,9 +377,8 @@ class _SlimTile(NamedTuple):
 
 
 @contextmanager
-def _slim_pass(raw: DataFrame, lsn_from: int | None, lsn_to: int,
-               sinks: dict[str | None, LakeTable],
-               slim_provider: Callable | None, opts: _ApplyOpts):
+def _slim_pass(raw: DataFrame, sinks: dict[str | None, LakeTable],
+               opts: _ApplyOpts):
     """The ONE narrow pass over a data tile, shared by every table the tile
     feeds.  ``sinks`` maps source-table name -> table; a single-table
     replay is the one-sink case, named by its ``source_table`` (None: every
@@ -419,12 +395,7 @@ def _slim_pass(raw: DataFrame, lsn_from: int | None, lsn_to: int,
     # unlike full after-images this is cheap to cache).  From it: aborted
     # txids (BEGIN w/o COMMIT), the distinct-key estimate steering the
     # slim/full choice, touched buckets, and (slim path) per-key winner lsns.
-    if slim_provider is not None:
-        # fragment-direct scan: Python workers read the log's Parquet
-        # row groups themselves — no JVM->Python payload transfer
-        p = slim_provider(lsn_from, lsn_to)
-    else:
-        p = parse_slim(raw, pk, mode=opts.parse_mode)
+    p = parse_slim(raw, pk, mode=opts.parse_mode)
     is_data = F.col("op").isin("I", "U", "D")
     routed = None not in sinks
     if routed:
@@ -664,12 +635,11 @@ def apply_plans(
     plans: list[BatchPlan],
     raw_provider: Callable[[int | None, int | None], DataFrame],
     *,
-    parse_mode: str = "duckdb",
+    parse_mode: str = "native",
     salt_buckets: int | None = None,
     compaction: str = "auto",
     max_broadcast_keys: int = 20_000_000,
     source_table: str | None = None,
-    slim_provider: Callable[[int | None, int | None], DataFrame] | None = None,
     stop_after_batches: int | None = None,
     batch_id_offset: int = 0,
     merge_mode: str = "cow",
@@ -764,8 +734,7 @@ def apply_plans(
         # transaction straddles the clamp.
         lo_eff = max(b.lsn_from, applied)
         raw = raw_provider(lo_eff, b.lsn_to)
-        with _slim_pass(raw, lo_eff, b.lsn_to, {source_table: table},
-                        slim_provider, opts) as tile:
+        with _slim_pass(raw, {source_table: table}, opts) as tile:
             batch_metrics.append(_apply_data_tile(
                 spark, table, source_table, raw, tile, i, b.lsn_from,
                 b.lsn_to, opts,
@@ -782,12 +751,10 @@ def replay(
     initial_schema: TableSchema | None = None,
     pk: tuple[str, ...] = REPOS_PK,
     n_buckets: int = 64,
-    # 'duckdb' | 'native' | 'proto' | 'sidecar', or 'auto': the capture's
-    # own decoded columns ('sidecar': zero payload decode, zero Python
-    # workers) when present, else 'duckdb'.  Every parse stage (the slim
-    # pass and the winner parse) uses the resolved mode; on 'duckdb' the
-    # slim pass reads the log's row groups directly in the Python workers
-    # once the log has at least four per core (see _resolve_wire).
+    # 'native' | 'proto' | 'sidecar', or 'auto': the capture's own decoded
+    # columns ('sidecar': zero payload decode) when present, else 'native'
+    # (the JSON payload parsed JVM-side).  Every parse stage (the slim pass
+    # and the winner parse) uses the resolved mode (see _resolve_wire).
     parse_mode: str = "auto",
     n_data_batches: int = 1,
     salt_buckets: int | None = None,
@@ -819,13 +786,13 @@ def replay(
     Already-applied LSN ranges are always skipped (the snapshot watermark is
     the mechanism; ``resume=True`` just documents intent), so a re-run after
     a crash converges to the same final state — exactly-once (SURVEY §2.9 T4).
-    The metrics carry ``wire``: the resolved parse mode, whether the slim
-    pass took the direct scan, and why; and ``codegen``: the size of the
-    JVM's generated-class cache (``cache_entries``) and how many classes
-    Janino compiled during the call (``classes_compiled``; the counter is
-    JVM-wide, so queries running concurrently in other threads count too,
-    and a warm cache makes it 0).  A copy is kept under the table's
-    ``_metrics/`` (the newest ``_RUN_RECORDS_KEPT`` runs).
+    The metrics carry ``wire``: the resolved parse mode and why; and
+    ``codegen``: the size of the JVM's generated-class cache
+    (``cache_entries``) and how many classes Janino compiled during the
+    call (``classes_compiled``; the counter is JVM-wide, so queries running
+    concurrently in other threads count too, and a warm cache makes it 0).
+    A copy is kept under the table's ``_metrics/`` (the newest
+    ``_RUN_RECORDS_KEPT`` runs).
     """
     t0 = time.time()
     compiled0 = codegen_compiles(spark)
@@ -853,7 +820,6 @@ def replay(
         table,
         plans,
         wire.raw_provider,
-        slim_provider=wire.slim_provider,
         parse_mode=parse_mode,
         salt_buckets=salt_buckets,
         compaction=compaction,
@@ -922,7 +888,7 @@ def apply_plans_multi(
     plans_by_table: dict[str, list[BatchPlan]],
     raw_provider: Callable[[int | None, int | None], DataFrame],
     *,
-    parse_mode: str = "duckdb",
+    parse_mode: str = "native",
     salt_buckets: int | None = None,
     compaction: str = "auto",
     max_broadcast_keys: int = 20_000_000,
@@ -961,25 +927,11 @@ def apply_plans_multi(
     itself (full already shuffles every event; the slim pass stays
     shared), so k huge-key-count tables cost k full parses — raise
     ``max_broadcast_keys`` or replay such tables separately."""
-    return _apply_plans_multi(
-        spark, sinks, plans_by_table, raw_provider, None,
-        _ApplyOpts(parse_mode, salt_buckets, compaction,
-                   max_broadcast_keys, merge_mode, schema_drift,
-                   salt_auto_min_events, batch_id_offset,
-                   drift_observation_ok),
-    )
-
-
-def _apply_plans_multi(
-    spark: SparkSession,
-    sinks: dict[str, LakeTable],
-    plans_by_table: dict[str, list[BatchPlan]],
-    raw_provider: Callable[[int | None, int | None], DataFrame],
-    slim_provider: Callable[[int | None, int | None], DataFrame] | None,
-    opts: _ApplyOpts,
-) -> dict[str, list[dict]]:
-    """``apply_plans_multi`` with ``replay_multi``'s direct slim scan."""
-    _check_drift_mode(opts.schema_drift)
+    _check_drift_mode(schema_drift)
+    opts = _ApplyOpts(parse_mode, salt_buckets, compaction,
+                      max_broadcast_keys, merge_mode, schema_drift,
+                      salt_auto_min_events, batch_id_offset,
+                      drift_observation_ok)
     pks = {t.pk for t in sinks.values()}
     if len(pks) > 1:
         raise ValueError(f"sinks must share one pk shape, got {pks}")
@@ -1028,8 +980,7 @@ def _apply_plans_multi(
         lo_eff = max(lsn_from, min(t.applied_upto_lsn
                                    for t in actives.values()))
         raw = raw_provider(lo_eff, lsn_to)
-        with _slim_pass(raw, lo_eff, lsn_to, actives, slim_provider,
-                        opts) as tile:
+        with _slim_pass(raw, actives, opts) as tile:
             for name, tbl in actives.items():
                 metrics[name].append(_apply_data_tile(
                     spark, tbl, name, raw, tile, i, lsn_from, lsn_to, opts,
@@ -1084,12 +1035,12 @@ def replay_multi(
         target_data_batches=n_data_batches,
         parse_mode="proto" if parse_mode == "proto" else "native",
     )
-    per_table = _apply_plans_multi(
-        spark, sinks, plans_by_table, wire.raw_provider, wire.slim_provider,
-        _ApplyOpts(parse_mode, salt_buckets, compaction,
-                   max_broadcast_keys, merge_mode, schema_drift,
-                   salt_auto_min_events, batch_id_offset=0,
-                   drift_observation_ok=True),
+    per_table = apply_plans_multi(
+        spark, sinks, plans_by_table, wire.raw_provider,
+        parse_mode=parse_mode, salt_buckets=salt_buckets,
+        compaction=compaction, max_broadcast_keys=max_broadcast_keys,
+        merge_mode=merge_mode, schema_drift=schema_drift,
+        salt_auto_min_events=salt_auto_min_events,
     )
     run = {
         "tables": {

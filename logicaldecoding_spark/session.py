@@ -2,12 +2,14 @@
 
 Local-mode settings follow the public Spark tuning guidance: shuffle
 partitions sized to cores (not the 200 default), AQE on for runtime
-coalescing and skew splitting, Arrow enabled for the pandas-UDF parse path,
-UTC session timezone so results compare cleanly against DuckDB oracles,
-and a generated-class cache (``spark.sql.codegen.cache.maxEntries``, a
-static conf read once when the JVM starts) of ``CODEGEN_CACHE_ENTRIES``
-classes: Spark's default of 100 is smaller than the engine's working set,
-so every pass over the same queries would recompile its classes.
+coalescing and skew splitting, Arrow enabled for the proto wire's
+Python-worker decode and for local relations (``local_frame``), a driver
+heap no larger than half of physical memory, UTC session timezone so
+results compare cleanly against DuckDB oracles, and a generated-class
+cache (``spark.sql.codegen.cache.maxEntries``, a static conf read once
+when the JVM starts) of ``CODEGEN_CACHE_ENTRIES`` classes: Spark's
+default of 100 is smaller than the engine's working set, so every pass
+over the same queries would recompile its classes.
 
 It also owns the engine's two ways of touching a live session:
 ``local_frame`` (the one way to turn driver rows into a DataFrame) and
@@ -30,6 +32,16 @@ from pyspark.sql.pandas.types import to_arrow_schema
 CODEGEN_CACHE_ENTRIES = 2048
 
 
+def default_driver_memory() -> str:
+    """The driver heap ``get_spark`` asks for without ``SPARK_DRIVER_MEM``:
+    the smaller of 16g and half of physical memory.  In local mode the
+    executors share this heap, and the Python workers and the driver
+    process need memory beside it, so a heap near physical memory would
+    grow into swap or the OOM killer instead of spilling."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "logicaldecoding_spark",
     cores: int | None = None,
@@ -41,6 +53,8 @@ def get_spark(
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or ``*``.
     ``shuffle_partitions`` defaults to 2x cores — enough parallelism for the
     final reduce without over-scheduling tiny tasks in local mode.
+    The driver heap is ``$SPARK_DRIVER_MEM``, else
+    ``default_driver_memory()``.
     ``extra_conf`` overrides any setting here; static ones (the codegen
     cache size among them) only take effect in a JVM this call starts.
     """
@@ -66,7 +80,8 @@ def get_spark(
                 str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

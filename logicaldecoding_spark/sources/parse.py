@@ -3,17 +3,9 @@
 The analog of the reference's per-message protobuf decode
 (``RowMessage::decode(&event[25..])``, reference src/replication.rs:120-122),
 re-expressed for Spark's batch execution.  The JSON payload wire has one
-parser per role:
-
-* ``duckdb`` — the Python-worker parser: ``mapInArrow`` hands each task's
-  payloads to DuckDB's yyjson-based ``json_transform``, one SQL statement
-  per ~256k rows, zero per-row Python.  It serves the full parse
-  (``parse_events``), the pk-pruned slim parse (``parse_slim``) and the
-  fragment-direct slim scan (``parse_slim_direct``), which reads the log's
-  row groups in the workers themselves.
-* ``native`` — ``from_json`` with an explicit schema: stays entirely
-  JVM-side inside whole-stage codegen; the reference the tests compare the
-  duckdb parser against, row for row.
+parser, ``native``: ``from_json`` with an explicit schema, which stays
+entirely JVM-side inside whole-stage codegen.  It serves the full parse
+(``parse_events``) and the pk-pruned slim parse (``parse_slim``).
 
 The other wires have their own modes: ``proto`` decodes decoderbufs
 RowMessage bytes (sources/proto.py) and ``sidecar`` projects the columns a
@@ -21,24 +13,19 @@ tuple-sidecar capture already carries.  Output columns (beyond ``lsn``):
 txid, seq, commit_time_us, op, table, new_tuple (map<string,string>),
 old_tuple (map<string,string>), schema_change (struct<kind,column,type>),
 new_typeinfo.  ``committed`` is deliberately NOT produced here — commit
-status is derived downstream from COMMIT markers (operators/assembly.py),
-as logical decoding does for the reference.
+status is derived downstream from COMMIT markers (the slim pass's aborted
+anti-join, plans/replay.py), as logical decoding does for the reference.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import NamedTuple
-
 import pyarrow as pa
-import pyarrow.compute as _pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema import SCHEMA_CHANGE_TYPE
-from ..session import local_frame
 
 # JSON wire schema of one payload (generator.py writes it; field 'ct' is
 # commit_time in unix microseconds — the reference converts the pg epoch-2000
@@ -106,182 +93,6 @@ _OUT_SPARK_SCHEMA = T.StructType(
 )
 
 
-# the full parse: absent JSON key -> absent map entry (datum_missing),
-# absent object -> NULL map, lenient typing -> NULL, as with from_json
-_DUCKDB_FULL_SCHEMA = (
-    '{"txid":"BIGINT","seq":"INTEGER","ct":"BIGINT","op":"VARCHAR",'
-    '"table":"VARCHAR","new":"MAP(VARCHAR,VARCHAR)","old":"MAP(VARCHAR,VARCHAR)",'
-    '"change":{"kind":"VARCHAR","column":"VARCHAR","type":"VARCHAR"}}'
-)
-_DUCKDB_FULL_SQL = f"""
-    SELECT lsn, j.txid, j.seq, j.ct AS commit_time_us, j.op,
-           j."table", j.new AS new_tuple, j.old AS old_tuple,
-           j.change AS schema_change,
-           CAST(NULL AS STRUCT(modifier VARCHAR,
-                               value_optional BOOLEAN)[])
-               AS new_typeinfo
-    FROM (SELECT lsn,
-                 json_transform(payload, '{_DUCKDB_FULL_SCHEMA}') AS j
-          FROM _b)
-    """
-
-
-_DUCKDB_CHUNK_ROWS = 262_144  # amortize per-call SQL/registration overhead
-
-
-def _chunked(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
-    """Coalesce the task's incoming Arrow batches into ~256k-row tables:
-    Spark hands mapInArrow small batches (maxRecordsPerBatch), and a DuckDB
-    round-trip per small batch is overhead-bound."""
-    buf: list[pa.RecordBatch] = []
-    rows = 0
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        buf.append(b)
-        rows += b.num_rows
-        if rows >= _DUCKDB_CHUNK_ROWS:
-            yield pa.Table.from_batches(buf)
-            buf, rows = [], 0
-    if buf:
-        yield pa.Table.from_batches(buf)
-
-
-def _duckdb_con():
-    """A worker-side DuckDB connection.  Single-threaded: one Spark task ==
-    one core."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("SET threads=1")
-    return con
-
-
-def _duckdb_batches(con, sql: str, table: pa.Table,
-                    out: pa.Schema) -> list[pa.RecordBatch]:
-    """Run ``sql`` over ``table`` (registered as ``_b``); its result as
-    record batches cast to ``out``."""
-    con.register("_b", table)
-    res = con.execute(sql).arrow()
-    con.unregister("_b")
-    return res.cast(out).to_batches()
-
-
-def _duckdb_map(sql: str, out: pa.Schema):
-    """mapInArrow function: ``sql`` over each ~256k-row chunk of the task's
-    (lsn, payload) batches, cast to ``out``."""
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        con = _duckdb_con()
-        for at in _chunked(batches):
-            yield from _duckdb_batches(con, sql, at, out)
-
-    return gen
-
-
-class _SlimQuery(NamedTuple):
-    """The duckdb slim parse of one pk shape, shared by ``parse_slim`` and
-    ``parse_slim_direct``."""
-
-    sql: str              # over a registered table _b(lsn, payload)
-    arrow: pa.Schema      # its result: (lsn, txid, seq, op, table, *pk)
-    spark: T.StructType   # the same columns as Spark types
-
-
-def _slim_query(pk: tuple[str, ...]) -> _SlimQuery:
-    """``new``/``old`` parse as structs of the pk fields only (see
-    ``parse_slim``); each pk column coalesces new over old."""
-    fields = ",".join(f'"{c}":"VARCHAR"' for c in pk)
-    schema = (
-        '{"txid":"BIGINT","seq":"INTEGER","op":"VARCHAR","table":"VARCHAR",'
-        f'"new":{{{fields}}},"old":{{{fields}}}}}'
-    )
-    pk_sel = ",".join(f'coalesce(j.new."{c}", j.old."{c}") AS "{c}"' for c in pk)
-    sql = f"""
-        SELECT lsn, j.txid, j.seq, j.op, j."table", {pk_sel}
-        FROM (SELECT lsn, json_transform(payload, '{schema}') AS j FROM _b)
-        """
-    arrow = pa.schema(
-        [
-            ("lsn", pa.int64()),
-            ("txid", pa.int64()),
-            ("seq", pa.int32()),
-            ("op", pa.string()),
-            ("table", pa.string()),
-            *[(c, pa.string()) for c in pk],
-        ]
-    )
-    spark = T.StructType(
-        [
-            T.StructField("lsn", T.LongType()),
-            T.StructField("txid", T.LongType()),
-            T.StructField("seq", T.IntegerType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("table", T.StringType()),
-            *[T.StructField(c, T.StringType()) for c in pk],
-        ]
-    )
-    return _SlimQuery(sql, arrow, spark)
-
-
-def parse_slim_direct(
-    spark,
-    log_path: str,
-    pk: tuple[str, ...],
-    lsn_from: int | None = None,
-    lsn_to: int | None = None,
-) -> DataFrame:
-    """Slim parse reading log fragments DIRECTLY in Python workers.
-
-    The JVM-scan slim paths ship the entire payload column from the JVM to
-    Python workers over Arrow IPC before parsing — at bench scale that
-    transfer, not the JSON parse, is the floor.  Here the driver prunes
-    (file, row_group) fragments by LSN statistics (sources/wal_log.py) and
-    distributes ONE FRAGMENT PER TASK; each Python worker reads its row
-    group from Parquet itself (pyarrow) and parses it with DuckDB's yyjson
-    ``json_transform`` — payload bytes go parquet -> Python directly.  This
-    is the Python-data-source pattern (Spark 4's Python DataSource API
-    formalizes it); partition pruning and parallelism match what the JVM
-    scan would do (row-group granularity).
-    """
-    from .wal_log import log_fragments
-
-    frags = log_fragments(log_path, lsn_from, lsn_to)
-    q = _slim_query(pk)
-    lo, hi = lsn_from, lsn_to
-
-    def gen(batches):
-        import pyarrow.parquet as pq
-
-        con = _duckdb_con()
-        for batch in batches:
-            paths = batch.column(0).to_pylist()
-            rgs = batch.column(1).to_pylist()
-            for path, rg in zip(paths, rgs):
-                t = pq.ParquetFile(path).read_row_group(
-                    rg, columns=["lsn", "payload"]
-                )
-                lsn = t.column("lsn")
-                mask = None
-                if lo is not None:
-                    mask = _pc.greater(lsn, lo)
-                if hi is not None:
-                    m2 = _pc.less_equal(lsn, hi)
-                    mask = m2 if mask is None else _pc.and_(mask, m2)
-                if mask is not None:
-                    t = t.filter(mask)
-                if t.num_rows == 0:
-                    continue
-                yield from _duckdb_batches(con, q.sql, t, q.arrow)
-
-    if not frags:
-        return local_frame(spark, [], q.spark)
-    frag_df = local_frame(
-        spark, frags, "path string, rg int"
-    ).repartition(len(frags))
-    return frag_df.mapInArrow(gen, schema=q.spark)
-
-
 def parse_slim(raw: DataFrame, pk: tuple[str, ...], mode: str = "native"
                ) -> DataFrame:
     """Narrow parse for the slim compaction pass: (lsn, txid, seq, op, *pk).
@@ -293,9 +104,7 @@ def parse_slim(raw: DataFrame, pk: tuple[str, ...], mode: str = "native"
     so the reduced schema is built explicitly here.  B/C markers carry no
     tuples and fold to NULL pk columns, exactly as with the map parse.
 
-    ``mode='duckdb'`` runs the narrow pass in Python workers through
-    DuckDB's ``json_transform`` with the pruned schema (the same query as
-    ``parse_slim_direct``); ``'native'`` stays JVM-side via from_json;
+    ``mode='native'`` parses JSON payloads JVM-side via from_json;
     ``'proto'`` decodes RowMessage wire bytes and projects the slim
     columns (no skip-scan fast path without a C protobuf lib);
     ``'sidecar'`` reads the capture's own key columns — a pure
@@ -315,11 +124,6 @@ def parse_slim(raw: DataFrame, pk: tuple[str, ...], mode: str = "native"
                 ).alias(c)
                 for c in pk
             ],
-        )
-    if mode == "duckdb":
-        q = _slim_query(pk)
-        return raw.select("lsn", "payload").mapInArrow(
-            _duckdb_map(q.sql, q.arrow), schema=q.spark
         )
     if mode != "native":
         raise ValueError(f"unknown parse mode {mode!r}")
@@ -370,12 +174,12 @@ def parse_markers(raw: DataFrame, mode: str = "json") -> DataFrame:
     )
 
 
-def parse_events(raw: DataFrame, mode: str = "duckdb") -> DataFrame:
+def parse_events(raw: DataFrame, mode: str = "native") -> DataFrame:
     """(lsn, payload) -> (lsn, txid, seq, commit_time_us, op, table,
     new_tuple, old_tuple, schema_change, new_typeinfo).
 
-    ``mode='duckdb'`` parses JSON payloads in Python workers (DuckDB
-    ``json_transform``); ``'native'`` parses them JVM-side (``from_json``).
+    ``mode='native'`` parses JSON payloads JVM-side (``from_json``): an
+    absent key is an absent map entry, an absent object a NULL map.
 
     ``mode='proto'`` decodes decoderbufs RowMessage wire bytes (payload is
     BINARY; see sources/proto.py for the mapping and the honest perf note).
@@ -384,7 +188,8 @@ def parse_events(raw: DataFrame, mode: str = "duckdb") -> DataFrame:
     event as columns (txid/seq/op/table + new_tuple/old_tuple maps — the
     shape an archiver that fully decodes messages writes; our generator's
     ``tuple_sidecar=True``): a pure JVM-side projection, no payload decode,
-    no Python workers anywhere in the replay."""
+    no Python workers anywhere in the replay.  Any other mode raises
+    ``ValueError``."""
     if mode == "sidecar":
         return raw.select(
             "lsn",
@@ -400,11 +205,6 @@ def parse_events(raw: DataFrame, mode: str = "duckdb") -> DataFrame:
             # mode does for non-R rows
             F.lit(None).cast(SCHEMA_CHANGE_TYPE).alias("schema_change"),
             F.lit(None).cast(TYPEINFO_SPARK_TYPE).alias("new_typeinfo"),
-        )
-    if mode == "duckdb":
-        return raw.select("lsn", "payload").mapInArrow(
-            _duckdb_map(_DUCKDB_FULL_SQL, _OUT_ARROW_SCHEMA),
-            schema=_OUT_SPARK_SCHEMA,
         )
     if mode == "proto":
         from .proto import make_proto_batches

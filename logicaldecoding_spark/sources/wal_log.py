@@ -10,41 +10,8 @@ per-batch replay O(batch) instead of O(log).
 
 from __future__ import annotations
 
-import glob as _glob
-import os.path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def log_fragments(
-    log_path: str, lsn_from: int | None = None, lsn_to: int | None = None
-) -> list[tuple[str, int]]:
-    """(file, row_group) fragments of a captured log overlapping an LSN
-    range — pruned driver-side from Parquet row-group statistics, the same
-    pruning Spark's scan would do, but exposed so the narrow pass can read
-    fragments DIRECTLY in Python workers (no JVM->Python payload transfer).
-    """
-    import pyarrow.parquet as pq
-
-    files = (
-        sorted(_glob.glob(os.path.join(log_path, "*.parquet")))
-        if os.path.isdir(log_path)
-        else [log_path]
-    )
-    frags: list[tuple[str, int]] = []
-    for fp in files:
-        md = pq.ParquetFile(fp).metadata
-        idx = md.schema.to_arrow_schema().get_field_index("lsn")
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is not None and st.has_min_max:
-                if lsn_from is not None and st.max <= lsn_from:
-                    continue
-                if lsn_to is not None and st.min > lsn_to:
-                    continue
-            frags.append((fp, rg))
-    return frags
 
 
 def read_wal_log(

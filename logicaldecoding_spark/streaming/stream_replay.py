@@ -175,7 +175,9 @@ def stream_replay(
     initial_schema: TableSchema | None = None,
     pk: tuple[str, ...] = REPOS_PK,
     n_buckets: int = 64,
-    parse_mode: str = "duckdb",
+    # 'native' (JSON payload) | 'proto' | 'sidecar': the files' wire; a
+    # tail has no whole log to resolve 'auto' against
+    parse_mode: str = "native",
     salt_buckets: int | None = None,
     max_files_per_trigger: int | None = None,
     keep_pending_epochs: int = 3,
@@ -213,9 +215,16 @@ def stream_replay(
 
     Drive it synchronously in tests with ``q.processAllAvailable()``; in
     production it runs until stopped, checkpointing file offsets to
-    ``checkpoint_dir``.
+    ``checkpoint_dir``.  Any other ``parse_mode`` raises ``ValueError``
+    before a table is created or the query starts.
     """
     from ..dist import ship_package
+
+    if parse_mode not in ("native", "proto", "sidecar"):
+        raise ValueError(
+            f"unknown parse mode {parse_mode!r} for stream_replay "
+            "(use 'native', 'proto' or 'sidecar')"
+        )
 
     ship_package(spark)  # executor workers import this package inside UDFs
     multi = isinstance(table_path, dict)

@@ -236,19 +236,6 @@ def bloom_build(values) -> dict | None:
             "b64": base64.b64encode(bytes(bits)).decode("ascii")}
 
 
-def bloom_might_contain(bloom: dict, value) -> bool:
-    import base64
-
-    m, k = int(bloom["m"]), int(bloom["k"])
-    bits = base64.b64decode(bloom["b64"])
-    h1, h2 = _bloom_hashes(value)
-    for i in range(k):
-        b = (h1 + i * h2) % m
-        if not bits[b >> 3] & (1 << (b & 7)):
-            return False
-    return True
-
-
 def normalize_where(where) -> list[tuple[str, str, object]]:
     """Validate/normalize a ``where`` predicate list: ``[(col, op, value)]``
     with op in =, <, <=, >, >=, in (conjunction).  ``==`` is accepted as an

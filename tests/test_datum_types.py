@@ -76,7 +76,7 @@ def _write_log(path: str) -> None:
     )
 
 
-@pytest.mark.parametrize("parse_mode", ["native", "duckdb"])
+@pytest.mark.parametrize("parse_mode", ["native"])
 def test_binary_and_point_datums_roundtrip(spark, tmp_path, parse_mode):
     log = str(tmp_path / f"wal_{parse_mode}.parquet")
     _write_log(log)

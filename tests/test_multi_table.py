@@ -174,10 +174,12 @@ def test_replay_multi_resolves_wire_like_replay(spark, multi_log, tmp_path):
     assert_converged(spark, str(tmp_path / "pm"), state)
 
 
-def test_direct_slim_scan_on_auto(spark, multi_log, tmp_path, monkeypatch):
-    """On a log with at least four row groups per core, replay and
-    replay_multi both take the fragment-direct slim scan on 'auto' (no
-    parse_slim call) and still converge per table."""
+def test_fragmented_log_resolves_native_on_auto(spark, multi_log, tmp_path,
+                                                monkeypatch):
+    """A payload log with more than four row groups per core resolves to
+    the native JSON parser on 'auto' in both replay and replay_multi:
+    every slim pass goes through parse_slim over the JVM scan, and each
+    table still converges."""
     import pyarrow.parquet as pq
 
     from logicaldecoding_spark.sources import parse as parse_mod
@@ -188,23 +190,24 @@ def test_direct_slim_scan_on_auto(spark, multi_log, tmp_path, monkeypatch):
     fragmented = str(tmp_path / "fragmented.parquet")
     pq.write_table(rows, fragmented,
                    row_group_size=max(1, rows.num_rows // n_groups))
-    calls = {"slim": 0}
+    assert pq.ParquetFile(fragmented).num_row_groups >= n_groups
+    modes = []
     orig_slim = parse_mod.parse_slim
 
-    def counting_slim(*a, **kw):
-        calls["slim"] += 1
-        return orig_slim(*a, **kw)
+    def recording_slim(raw, pk, mode="native"):
+        modes.append(mode)
+        return orig_slim(raw, pk, mode=mode)
 
-    monkeypatch.setattr(parse_mod, "parse_slim", counting_slim)
+    monkeypatch.setattr(parse_mod, "parse_slim", recording_slim)
     multi = replay_multi(spark, fragmented, {"repos": str(tmp_path / "da"),
                                              "repos2": str(tmp_path / "db")},
                          n_buckets=4)
     single = replay(spark, fragmented, str(tmp_path / "single"), n_buckets=4,
                     source_table="repos")
-    assert calls["slim"] == 0, "a slim pass did not use the direct scan"
+    assert modes and set(modes) == {"native"}, modes
     for run in (multi, single):
-        assert run["wire"]["parse_mode"] == "duckdb"
-        assert run["wire"]["direct_slim_scan"] is True, run["wire"]
+        assert run["wire"]["parse_mode"] == "native", run["wire"]
+        assert set(run["wire"]) == {"parse_mode", "reason"}
     state_a, _ = replay_oracle(only_a)
     state_b, _ = replay_oracle(only_b)
     assert_converged(spark, str(tmp_path / "da"), state_a)

@@ -1,5 +1,5 @@
-"""Per-operator unit tests: assembly, typing, compaction (incl. salt), merge
-branches — the analog of the reference's per-operator CRUD tests
+"""Per-operator unit tests: the abort filter, typing, compaction (incl.
+salt), merge branches — the analog of the reference's per-operator CRUD tests
 (/root/reference/src/types/tenant/mod.rs:92-185)."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ import json
 
 from pyspark.sql import functions as F
 
-from logicaldecoding_spark.operators.assembly import committed_data_events
 from logicaldecoding_spark.operators.compaction import last_writer_wins
 from logicaldecoding_spark.operators.merge import merge_into
 from logicaldecoding_spark.operators.typing import typed_changes
@@ -36,18 +35,40 @@ def _row(repo="r1", path="p1", commit="c", lang="py", content="x"):
     return {"repo": repo, "path": path, "commit": commit, "lang": lang, "content": content}
 
 
-def test_committed_filter_drops_aborted_txn(spark):
+def test_committed_filter_drops_aborted_txn(spark, tmp_path):
     # txn 1 commits, txn 2 has no COMMIT marker (rolled back): its events
     # must not survive — the engine-side analog of logical decoding's
-    # committed-only visibility (reference replication.rs:125-136).
+    # committed-only visibility (reference replication.rs:125-136).  The
+    # filter is replay's slim-pass anti-join on aborted txids.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from logicaldecoding_spark.oracle import replay_oracle
+    from logicaldecoding_spark.plans.replay import replay
+
+    from .util import assert_converged, table_state
+
     events = [
         _ev(1, "B", 1), _ev(2, "I", 1, 0, new=_row()), _ev(3, "C", 1),
         _ev(4, "B", 2), _ev(5, "I", 2, 0, new=_row(path="p2")),  # no C
     ]
-    parsed = parse_events(_log_df(spark, events), mode="native")
-    out = committed_data_events(parsed).collect()
-    assert len(out) == 1
-    assert out[0]["lsn"] == 2
+    log = str(tmp_path / "wal.parquet")
+    pq.write_table(pa.table({
+        "lsn": pa.array([e["lsn"] for e in events], pa.int64()),
+        "txid": pa.array([e["txid"] for e in events], pa.int64()),
+        "seq": pa.array([e["seq"] for e in events], pa.int32()),
+        "op": pa.array([e["op"] for e in events], pa.string()),
+        "payload": pa.array(
+            [json.dumps({k: v for k, v in e.items() if k != "lsn"})
+             for e in events], pa.string()),
+    }), log)
+    table_path = str(tmp_path / "t")
+    run = replay(spark, log, table_path, n_buckets=4)
+    assert run["wire"]["parse_mode"] == "native"
+    state = table_state(spark, table_path)
+    assert list(state) == [("r1", "p1")]
+    assert state[("r1", "p1")]["_last_lsn"] == 2
+    assert_converged(spark, table_path, replay_oracle(log)[0])
 
 
 def test_typed_changes_missing_key_is_null_and_delete_pk_from_old(spark):

@@ -1,4 +1,5 @@
-"""Vectorized parse: duckdb mode == native mode, and crafted-event handling.
+"""Vectorized parse: the native JSON parser == a json.loads reference row
+for row, and crafted-event handling.
 
 Covers the reference's decode layer (RowMessage::decode,
 /root/reference/src/replication.rs:120-122) and datum semantics: missing key
@@ -19,16 +20,55 @@ def _df_from_payloads(spark, payloads):
     return spark.createDataFrame(rows, "lsn long, payload string")
 
 
+def _log_payloads(log_path, lsn_from=None, lsn_to=None):
+    """The log's (lsn, payload) pairs in LSN order, read with pyarrow and
+    windowed to (lsn_from, lsn_to]."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(log_path, columns=["lsn", "payload"]).to_pydict()
+    return sorted(
+        (lsn, p) for lsn, p in zip(t["lsn"], t["payload"])
+        if (lsn_from is None or lsn > lsn_from)
+        and (lsn_to is None or lsn <= lsn_to)
+    )
+
+
+def _reference_event(lsn, payload):
+    """One parse_events row from ``json.loads``: an absent key is an
+    absent map entry, an absent object a NULL map."""
+    j = json.loads(payload)
+    change = j.get("change")
+    return (
+        lsn, j.get("txid"), j.get("seq"), j.get("ct"), j.get("op"),
+        j.get("table"), j.get("new"), j.get("old"),
+        None if change is None
+        else tuple(change.get(k) for k in ("kind", "column", "type")),
+        None,
+    )
+
+
+def _reference_slim(lsn, payload, pk):
+    """One parse_slim row from ``json.loads``: each pk column coalesces
+    ``new`` over ``old``."""
+    j = json.loads(payload)
+    new, old = j.get("new") or {}, j.get("old") or {}
+    return (
+        lsn, j.get("txid"), j.get("seq"), j.get("op"), j.get("table"),
+        *[new.get(c) if new.get(c) is not None else old.get(c) for c in pk],
+    )
+
+
 def test_modes_agree_on_generated_log(spark, small_log):
+    """The native parse of a generated log (schema changes included)
+    equals an independent json.loads reference, row for row."""
     log_path, _ = small_log
     raw = spark.read.parquet(log_path).select("lsn", "payload")
-    d = parse_events(raw, mode="duckdb").orderBy("lsn")
-    n = parse_events(raw, mode="native").orderBy("lsn")
-    assert d.schema == n.schema
-    rd, rn = d.collect(), n.collect()
-    assert len(rd) == len(rn)
-    for x, y in zip(rd, rn):
-        assert x == y, f"duckdb!=native at lsn {x['lsn']}: {x} vs {y}"
+    got = parse_events(raw, mode="native").orderBy("lsn").collect()
+    want = [_reference_event(lsn, p) for lsn, p in _log_payloads(log_path)]
+    assert len(got) == len(want)
+    assert any(w[8] is not None for w in want)  # R events are covered
+    for x, y in zip(got, want):
+        assert tuple(x) == y, f"native!=json.loads at lsn {y[0]}: {x} vs {y}"
 
 
 def test_crafted_events_all_shapes(spark):
@@ -62,24 +102,23 @@ def test_crafted_events_all_shapes(spark):
         ),
         json.dumps({"txid": 7, "seq": 0, "ct": 1, "op": "C"}),
     ]
-    for mode in ("native", "duckdb"):
-        rows = (
-            parse_events(_df_from_payloads(spark, payloads), mode=mode)
-            .orderBy("lsn")
-            .collect()
-        )
-        assert [r["op"] for r in rows] == ["B", "I", "U", "D", "R", "C"]
-        ins = rows[1]
-        assert ins["new_tuple"]["repo"] == "r"
-        assert "lang" not in ins["new_tuple"]  # absent == NULL, never a key
-        upd = rows[2]
-        assert upd["old_tuple"] == {"repo": "r", "path": "p"}
-        dele = rows[3]
-        assert dele["new_tuple"] is None
-        rel = rows[4]
-        assert rel["schema_change"]["kind"] == "add_column"
-        assert rel["schema_change"]["column"] == "stars"
-        assert rows[0]["new_tuple"] is None and rows[5]["new_tuple"] is None
+    rows = (
+        parse_events(_df_from_payloads(spark, payloads), mode="native")
+        .orderBy("lsn")
+        .collect()
+    )
+    assert [r["op"] for r in rows] == ["B", "I", "U", "D", "R", "C"]
+    ins = rows[1]
+    assert ins["new_tuple"]["repo"] == "r"
+    assert "lang" not in ins["new_tuple"]  # absent == NULL, never a key
+    upd = rows[2]
+    assert upd["old_tuple"] == {"repo": "r", "path": "p"}
+    dele = rows[3]
+    assert dele["new_tuple"] is None
+    rel = rows[4]
+    assert rel["schema_change"]["kind"] == "add_column"
+    assert rel["schema_change"]["column"] == "stars"
+    assert rows[0]["new_tuple"] is None and rows[5]["new_tuple"] is None
 
 
 def test_unicode_and_escapes_roundtrip(spark):
@@ -90,9 +129,8 @@ def test_unicode_and_escapes_roundtrip(spark):
             "new": {"repo": "r", "path": "p", "commit": "c", "content": content},
         }
     )
-    for mode in ("native", "duckdb"):
-        row = parse_events(_df_from_payloads(spark, [p]), mode=mode).collect()[0]
-        assert row["new_tuple"]["content"] == content, mode
+    row = parse_events(_df_from_payloads(spark, [p]), mode="native").collect()[0]
+    assert row["new_tuple"]["content"] == content
 
 
 def test_sidecar_parse_matches_payload_parse(spark, tmp_path):
@@ -160,22 +198,18 @@ def assert_converged_local(spark, table_path, oracle_state):
 
 
 def test_slim_parsers_agree_with_schema_changes(spark, tmp_path):
-    """The kept slim parsers agree row for row on a log with schema-change
-    events: duckdb and native over the JVM scan, and the fragment-direct
-    scan over the log's row groups — unbounded and on an (lsn_from,
+    """The native slim parse equals a json.loads reference row for row on
+    a log with schema-change events: unbounded and on an (lsn_from,
     lsn_to] window that cuts through row groups."""
     import pyarrow.parquet as pq
 
     from logicaldecoding_spark.generator import default_evolution, generate_log
-    from logicaldecoding_spark.sources.parse import (
-        parse_slim,
-        parse_slim_direct,
-    )
+    from logicaldecoding_spark.sources.parse import parse_slim
 
     base = str(tmp_path / "base.parquet")
     stats = generate_log(base, n_txns=200, n_repos=12, paths_per_repo=6,
                          schema_changes=default_evolution(200))
-    # several row groups, so the window prunes fragments and cuts others
+    # several row groups, so the window prunes some and cuts others
     log = str(tmp_path / "wal.parquet")
     t = pq.read_table(base)
     pq.write_table(t, log, row_group_size=t.num_rows // 5 + 1)
@@ -187,18 +221,12 @@ def test_slim_parsers_agree_with_schema_changes(spark, tmp_path):
         win = raw
         if lo is not None:
             win = raw.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        got = {
-            "duckdb": parse_slim(win, pk, mode="duckdb"),
-            "native": parse_slim(win, pk, mode="native"),
-            "direct": parse_slim_direct(spark, log, pk, lsn_from=lo,
-                                        lsn_to=hi),
-        }
-        rows = {k: [tuple(r) for r in df.orderBy("lsn").collect()]
-                for k, df in got.items()}
-        want = win.count()
-        assert len(rows["native"]) == want
-        assert rows["duckdb"] == rows["native"], (lo, hi)
-        assert rows["direct"] == rows["native"], (lo, hi)
+        got = [tuple(r) for r in
+               parse_slim(win, pk, mode="native").orderBy("lsn").collect()]
+        want = [_reference_slim(lsn, p, pk)
+                for lsn, p in _log_payloads(log, lo, hi)]
+        assert len(got) == win.count()
+        assert got == want, (lo, hi)
 
 
 def test_parse_slim_rejects_unknown_mode(spark):
@@ -207,7 +235,7 @@ def test_parse_slim_rejects_unknown_mode(spark):
     from logicaldecoding_spark.sources.parse import parse_slim
 
     raw = _df_from_payloads(spark, ['{"txid":1,"seq":0,"ct":1,"op":"B"}'])
-    for mode in ("bogus", "arrow"):
+    for mode in ("bogus", "arrow", "duckdb"):
         with pytest.raises(ValueError, match="unknown parse mode"):
             parse_slim(raw, ("repo", "path"), mode=mode)
         with pytest.raises(ValueError, match="unknown parse mode"):

@@ -188,3 +188,15 @@ def test_session_conf_changes_only_in_session():
     to a block and restores the caller's value."""
     bad = _outside_session(CONF_SET)
     assert not bad, f"session conf set outside session.py: {bad}"
+
+
+DUCKDB_IMPORT = re.compile(r"^\s*(import duckdb\b|from duckdb\b)", re.M)
+
+
+def test_engine_does_not_import_duckdb():
+    """The engine parses the JSON wire JVM-side (``from_json``) and nothing
+    else: DuckDB is a test and oracle dependency only, so no engine module
+    imports it."""
+    bad = [os.path.relpath(p, PKG) for p, src in _sources()
+           if DUCKDB_IMPORT.search(src)]
+    assert not bad, f"engine modules import duckdb: {bad}"

@@ -2,8 +2,8 @@
 
 The reference's invariant is "CDC replay converges to source state" under a
 randomized workload (/root/reference/src/types/mod.rs:178-327).  Here the
-engine adds distribution knobs that must NEVER change the answer: parse mode,
-batch cut count, salt bucket count, hash-bucket count, input partitioning.
+engine adds distribution knobs that must NEVER change the answer: batch cut
+count, salt bucket count, hash-bucket count, input partitioning.
 """
 
 from __future__ import annotations
@@ -34,19 +34,17 @@ def prop_log(tmp_path_factory):
     n_batches=st.integers(min_value=1, max_value=5),
     salt=st.sampled_from([None, 2, 7]),
     n_buckets=st.sampled_from([1, 4, 16]),
-    parse_mode=st.sampled_from(["native", "duckdb"]),
 )
 def test_final_state_invariant_under_execution_choices(
-    spark, prop_log, tmp_path_factory, n_batches, salt, n_buckets, parse_mode
+    spark, prop_log, tmp_path_factory, n_batches, salt, n_buckets
 ):
     path, _, oracle_state = prop_log
     table_path = str(
-        tmp_path_factory.mktemp("t")
-        / f"t{n_batches}_{salt}_{n_buckets}_{parse_mode}"
+        tmp_path_factory.mktemp("t") / f"t{n_batches}_{salt}_{n_buckets}"
     )
     replay(
         spark, path, table_path,
-        parse_mode=parse_mode, n_buckets=n_buckets,
+        parse_mode="native", n_buckets=n_buckets,
         n_data_batches=n_batches, salt_buckets=salt,
     )
     assert_converged(spark, table_path, oracle_state)
@@ -78,28 +76,28 @@ def test_bloom_has_no_false_negatives(keys):
     """Every built key must be reported possibly-present — the property
     the file-skipping guarantee rests on.  (False-positive RATE is a
     statistical claim; hypothesis shrinks adversarially toward colliding
-    probes, so it is pinned in the fixed-seed test below instead.)"""
-    from logicaldecoding_spark.table.format import (
-        bloom_build, bloom_might_contain,
-    )
+    probes, so it is pinned in the fixed-seed test below instead.)  The
+    probe is ``entry_refutes`` on an entry that carries only the bloom, the
+    check every point read's file pruning runs."""
+    from logicaldecoding_spark.table.format import bloom_build, entry_refutes
 
     bloom = bloom_build(keys)
     assert bloom is not None
+    entry = {"bloom": {**bloom, "col": "k"}}
     for k in keys:
-        assert bloom_might_contain(bloom, k)
+        assert not entry_refutes(entry, "k", "=", k)
 
 
 def test_bloom_false_positive_rate_at_design_point():
     """At the designed m/n=16, k=6 the FP rate is ~1e-3; a fixed-seed
-    10k-probe sample must stay well under 1%."""
-    from logicaldecoding_spark.table.format import (
-        bloom_build, bloom_might_contain,
-    )
+    10k-probe sample must stay well under 1%: an absent key left
+    unrefuted by ``entry_refutes`` is a false positive."""
+    from logicaldecoding_spark.table.format import bloom_build, entry_refutes
 
     keys = [f"key-{i:05d}" for i in range(2000)]
-    bloom = bloom_build(keys)
+    entry = {"bloom": {**bloom_build(keys), "col": "k"}}
     fp = sum(
         1 for i in range(10_000)
-        if bloom_might_contain(bloom, f"absent-{i:05d}")
+        if not entry_refutes(entry, "k", "=", f"absent-{i:05d}")
     )
     assert fp < 100, fp  # <1% observed; design point is ~0.1%

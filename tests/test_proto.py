@@ -213,9 +213,8 @@ def test_new_typeinfo_surfaces_in_parse_events(spark):
              '"new":{"repo":"r"}}')],
         "lsn long, payload string",
     )
-    for mode in ("duckdb", "native"):
-        r = parse_events(jraw, mode=mode).collect()[0]
-        assert "new_typeinfo" in r.asDict() and r["new_typeinfo"] is None, mode
+    r = parse_events(jraw, mode="native").collect()[0]
+    assert "new_typeinfo" in r.asDict() and r["new_typeinfo"] is None
 
 
 def test_native_batch_decoder_matches_python_codec():

@@ -16,7 +16,7 @@ from logicaldecoding_spark.plans.replay import replay
 from .util import assert_converged
 
 
-@pytest.mark.parametrize("parse_mode", ["duckdb", "native"])
+@pytest.mark.parametrize("parse_mode", ["native"])
 def test_replay_converges_single_batch(spark, small_log, small_oracle, tmp_path, parse_mode):
     log_path, stats = small_log
     oracle_state, _ = small_oracle
@@ -25,9 +25,8 @@ def test_replay_converges_single_batch(spark, small_log, small_oracle, tmp_path,
         spark, log_path, table_path, parse_mode=parse_mode, n_buckets=8, n_data_batches=1
     )
     assert run["applied_upto_lsn"] == stats["max_lsn"]
-    # a one-row-group log is too small for the fragment-direct slim scan
+    assert set(run["wire"]) == {"parse_mode", "reason"}
     assert run["wire"]["parse_mode"] == parse_mode
-    assert run["wire"]["direct_slim_scan"] is False
     assert run["wire"]["reason"]
     assert_converged(spark, table_path, oracle_state)
 
@@ -299,17 +298,24 @@ def test_prime_python_workers_once_per_session(spark):
     )
 
 
-def test_prime_failure_leaves_session_unprimed(spark, small_log, small_oracle,
-                                               tmp_path, monkeypatch, caplog):
-    """Priming is only a speed aid: when its job fails, the replay logs a
-    warning, leaves the session unprimed (a later replay retries) and
-    still converges to the oracle."""
+def test_prime_failure_leaves_session_unprimed(spark, tmp_path, monkeypatch,
+                                               caplog):
+    """Priming is only a speed aid: when its job fails, a replay on the
+    proto wire (the only wire that primes) logs a warning, leaves the
+    session unprimed (a later replay retries) and still converges to the
+    oracle."""
     import importlib
     import logging
 
+    from logicaldecoding_spark.generator import default_evolution, generate_log
+    from logicaldecoding_spark.oracle import replay_oracle
+
     replay_mod = importlib.import_module("logicaldecoding_spark.plans.replay")
-    log_path, _ = small_log
-    oracle_state, _ = small_oracle
+    log_path = str(tmp_path / "wal_pb.parquet")
+    generate_log(log_path, n_txns=120, n_repos=10, paths_per_repo=6,
+                 schema_changes=default_evolution(120),
+                 payload_format="proto")
+    oracle_state, _ = replay_oracle(log_path)
     app = spark.sparkContext.applicationId
     replay_mod._PRIMED_APPS.discard(app)
     prime = replay_mod.prime_python_workers
@@ -319,7 +325,7 @@ def test_prime_failure_leaves_session_unprimed(spark, small_log, small_oracle,
     )
     table_path = str(tmp_path / "t_unprimed")
     with caplog.at_level(logging.WARNING, logger="logicaldecoding_spark"):
-        replay_mod.replay(spark, log_path, table_path, parse_mode="duckdb",
+        replay_mod.replay(spark, log_path, table_path, parse_mode="proto",
                           n_buckets=4)
     assert app not in replay_mod._PRIMED_APPS
     assert "priming failed" in caplog.text
@@ -328,9 +334,10 @@ def test_prime_failure_leaves_session_unprimed(spark, small_log, small_oracle,
 
 def test_sidecar_replay_primes_no_python_workers(spark, tmp_path,
                                                  monkeypatch):
-    """The tuple-sidecar wire runs no Python stage, so its replay boots no
-    Python workers: no job is described ``prime python workers`` and the
-    session stays unprimed."""
+    """The tuple-sidecar and JSON wires run no Python stage, so their
+    replays boot no Python workers: no job is described ``prime python
+    workers`` and the session stays unprimed.  On ``auto`` a payload log
+    resolves to the JVM-side JSON parser."""
     import importlib
 
     from logicaldecoding_spark.generator import generate_log
@@ -340,6 +347,8 @@ def test_sidecar_replay_primes_no_python_workers(spark, tmp_path,
     log_path = str(tmp_path / "wal_sc.parquet")
     generate_log(log_path, n_txns=60, n_repos=6, paths_per_repo=5,
                  tuple_sidecar=True)
+    json_log = str(tmp_path / "wal_json.parquet")
+    generate_log(json_log, n_txns=60, n_repos=6, paths_per_repo=5)
     sc = spark.sparkContext
     app = sc.applicationId
     replay_mod._PRIMED_APPS.discard(app)
@@ -354,9 +363,17 @@ def test_sidecar_replay_primes_no_python_workers(spark, tmp_path,
     table_path = str(tmp_path / "t_sidecar")
     run = replay_mod.replay(spark, log_path, table_path, n_buckets=4)
     assert run["wire"]["parse_mode"] == "sidecar"
+    json_table = str(tmp_path / "t_json")
+    json_run = replay_mod.replay(spark, json_log, json_table, n_buckets=4)
+    assert json_run["wire"] == {
+        "parse_mode": "native",
+        "reason": "no tuple-sidecar columns found: the JSON payload "
+                  "parses JVM-side",
+    }
     assert "prime python workers" not in descriptions
     assert app not in replay_mod._PRIMED_APPS
     assert_converged(spark, table_path, replay_oracle(log_path)[0])
+    assert_converged(spark, json_table, replay_oracle(json_log)[0])
 
 
 def test_one_data_batch_spark_job_count(spark, tmp_path):
@@ -395,8 +412,9 @@ def test_one_data_batch_spark_job_count(spark, tmp_path):
 
 
 def test_unknown_parse_mode_fails_before_any_work(spark, small_log, tmp_path):
-    """An unknown parse mode (the deleted 'arrow' parser included) is
-    rejected before any Spark job runs or any table is created."""
+    """An unknown parse mode (the deleted 'arrow' and 'duckdb' parsers
+    included) is rejected before any Spark job runs or any table is
+    created."""
     import os
 
     from logicaldecoding_spark.plans.replay import replay_multi
@@ -406,8 +424,10 @@ def test_unknown_parse_mode_fails_before_any_work(spark, small_log, tmp_path):
     group = "test-unknown-parse-mode"
     sc.setJobGroup(group, group)
     try:
-        with pytest.raises(ValueError, match="unknown parse mode 'arrow'"):
-            replay(spark, log_path, str(tmp_path / "t"), parse_mode="arrow")
+        for mode in ("arrow", "duckdb"):
+            with pytest.raises(ValueError,
+                               match=f"unknown parse mode '{mode}'"):
+                replay(spark, log_path, str(tmp_path / "t"), parse_mode=mode)
         with pytest.raises(ValueError, match="unknown parse mode 'bogus'"):
             replay_multi(spark, log_path, {"repos": str(tmp_path / "m")},
                          parse_mode="bogus")

@@ -29,6 +29,25 @@ def test_stream_replay_converges(spark, small_log, small_oracle, tmp_path):
     assert_converged(spark, table_path, oracle_state)
 
 
+def test_stream_replay_rejects_unknown_parse_mode(spark, tmp_path):
+    """A parse mode the tail cannot run ('auto' needs a whole log; the
+    deleted 'duckdb' parser; a typo) raises before any table directory is
+    created and before any query starts."""
+    import os
+
+    import pytest
+
+    log_dir = str(tmp_path / "log_dir")
+    os.makedirs(log_dir)
+    for mode in ("auto", "duckdb", "bogus"):
+        table_path = str(tmp_path / f"t_{mode}")
+        with pytest.raises(ValueError, match=f"unknown parse mode '{mode}'"):
+            stream_replay(spark, log_dir, table_path,
+                          str(tmp_path / f"ckpt_{mode}"), parse_mode=mode)
+        assert not os.path.exists(table_path)
+        assert spark.streams.active == []
+
+
 def test_stream_replay_restart_is_exactly_once(spark, small_log, small_oracle, tmp_path):
     log_path, _ = small_log
     oracle_state, _ = small_oracle
